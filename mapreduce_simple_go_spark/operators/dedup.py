@@ -524,10 +524,8 @@ NGRAM_DF_CEILING = 1000
 # Broadcast the rare-shingle set only while the documents table is at most
 # this many on-disk bytes (see the strategy comment in dedup_ngram_jaccard;
 # measured r8: broadcast wins at 0.6 MB, merge wins from 6 MB, broadcast
-# OOMs at 59 MB). Env-overridable for cluster memory profiles.
-NGRAM_BROADCAST_MAX_DOC_BYTES = int(
-    os.environ.get("SPARK_GRAFT_NGRAM_BROADCAST_MAX_DOC_BYTES", str(2 << 20))
-)
+# OOMs at 59 MB).
+NGRAM_BROADCAST_MAX_DOC_BYTES = 2 << 20
 
 
 def _docs_bytes(spark: SparkSession, sf_dir: str) -> int:
@@ -547,7 +545,7 @@ def _docs_bytes(spark: SparkSession, sf_dir: str) -> int:
 
 def _ngram_capped_byshingle(
     spark: SparkSession, sf_dir: str, df_ceiling: int | None
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """LAZY per-shingle sorted doc lists over the df-capped shingle set:
     (shingle, ds) where ds is the ascending doc_id list of every document
     containing the shingle, restricted to shingles in at most
@@ -563,8 +561,8 @@ def _ngram_capped_byshingle(
     not apply here; with ``df_ceiling=None`` the buffer is unbounded (the
     documented uncapped contract).
 
-    Returns the lazy frame with the still-cached raw shingle set attached
-    as ``_graft_sh_cached`` — the caller must unpersist it once the lists
+    Returns ``(byshingle, sh)``: the lazy frame and the still-cached raw
+    shingle set it reads — the caller must unpersist ``sh`` once the lists
     are materialized.
     """
     # cluster_by_doc: doc-clustered dedup measured fastest here for the
@@ -608,8 +606,7 @@ def _ngram_capped_byshingle(
     byshingle = sh_capped.groupBy("shingle").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ds")
     )
-    byshingle._graft_sh_cached = sh
-    return byshingle
+    return byshingle, sh
 
 
 def dedup_ngram_jaccard(
@@ -654,11 +651,9 @@ def dedup_ngram_jaccard(
     # no session-lifetime cache leak (r13 VERDICT #6). Unreplicated
     # checkpoint blocks trade executor-loss recompute for plan
     # truncation, the same tradeoff q11 documents.
-    byshingle = _ngram_capped_byshingle(spark, sf_dir, df_ceiling)
-    sh_cached = getattr(byshingle, "_graft_sh_cached", None)
+    byshingle, sh_cached = _ngram_capped_byshingle(spark, sf_dir, df_ceiling)
     byshingle = byshingle.localCheckpoint(eager=True)
-    if sh_cached is not None:
-        sh_cached.unpersist()
+    sh_cached.unpersist()
     # per-doc capped set sizes, from the SAME materialized lists (df=1
     # singleton shingles still count toward n — only the pair branch
     # filters them out)

@@ -61,7 +61,6 @@ def _drain_staged(
     shuffle_partitions: int | None = None,
     single_file: bool = True,
     force_complete_parquet: bool = False,
-    skip_final_nodata_batch: bool = True,
 ) -> DataFrame:
     """Shared stage-and-drain ritual for the streaming registry entries.
 
@@ -146,23 +145,22 @@ def _drain_staged(
             # the executor-side parquet sink (r11: sf1 11.2 -> 9.6 s for
             # session_window_native; no slower at driver SFs now that
             # defer_cleanup removed the roundtrip's second checkpoint).
-            # skip_final_nodata_batch (parameter, default True — r13
-            # ADVICE made the invariant visible at the call site): every
-            # CURRENT _drain_staged entry's final SELECT reads only
-            # data-batch emissions (complete/update snapshots; append
-            # entries are dropDuplicates / inner join / closed_by='gap'
-            # filters), so the trailing no-data batch is pure state-store
-            # overhead here — see run_available_now (r13). A future
-            # append-mode entry whose semantics NEED the final watermark
-            # advance (event-time timeout sweeps, watermark-close window
-            # emissions) must pass skip_final_nodata_batch=False.
+            # skip_final_nodata_batch: every _drain_staged entry's final
+            # SELECT reads only data-batch emissions (complete/update
+            # snapshots; append entries are dropDuplicates / inner join /
+            # closed_by='gap' filters), so the trailing no-data batch is
+            # pure state-store overhead here — see run_available_now
+            # (r13). An append-mode entry whose semantics NEED the final
+            # watermark advance (event-time timeout sweeps, watermark-close
+            # window emissions) must drain through run_available_now
+            # directly instead.
             sink_cleanup = run_available_now(
                 build(stream),
                 name,
                 mode,
                 None if force_complete_parquet else input_bytes,
                 defer_cleanup=True,
-                skip_final_nodata_batch=skip_final_nodata_batch,
+                skip_final_nodata_batch=True,
             )
         finally:
             if shuffle_partitions is not None:
@@ -1151,15 +1149,11 @@ _TWS_DROPS = 2
 # partitions (store-open flat cost dominates); above it the session
 # default stands (the fold is compute-bound — measured at sf1, see the
 # docstring). sf0.1's events sit ~2 MB, sf1's ~18 MB.
-_TWS_SMALL_INPUT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_TWS_SMALL_INPUT_BYTES", str(8 * 1024 * 1024))
-)
+_TWS_SMALL_INPUT_BYTES = 8 * 1024 * 1024
 
 # Small-input gate for _drain_staged's shuffle_partitions override (r11;
 # measured threshold — see the gate's comment in _drain_staged).
-_DRAIN_SMALL_INPUT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_DRAIN_SMALL_INPUT_BYTES", str(32 * 1024 * 1024))
-)
+_DRAIN_SMALL_INPUT_BYTES = 32 * 1024 * 1024
 
 
 STREAM_TWS_SQL = """

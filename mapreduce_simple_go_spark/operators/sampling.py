@@ -239,11 +239,11 @@ ORACLES = {
 }
 
 
-def _split_col(digest=None):
-    # The split hashes md5(text) — exactly the exact-dedup digest, so a
-    # caller that already carries the digest passes it instead of paying
-    # a second md5 over the full text (and instead of needing text at all).
-    h = hash48(F.md5(F.col("text")) if digest is None else digest) % 100
+def _split_col(digest):
+    # The split hashes md5(text) — exactly the exact-dedup digest, so
+    # callers pass the digest they already carry instead of paying a
+    # second md5 over the full text (and instead of needing text at all).
+    h = hash48(digest) % 100
     return F.when(h < 80, "train").when(h < 90, "val").otherwise("test")
 
 
@@ -258,11 +258,10 @@ def _curated_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
     document body — and the min-doc_id retention is a partially
     aggregated min_by (doc_id is unique, so the survivor row == the old
     window rn=1 survivor, lang/source riding along from the same row)
-    instead of a full per-group window sort. min_by, not min(struct):
-    Min over a struct falls back to SortAggregate (struct is not a
-    mutable hash-agg buffer type) and re-buys the sort the window paid;
-    min_by is a TypedImperativeAggregate → ObjectHashAggregate, sort-free
-    (measured — the min(struct) form was a wash).
+    instead of a full per-group window sort. Its struct-typed buffer is
+    not a mutable hash-agg type, so min_by plans as a partial+final
+    SortAggregate (plans/r14/curation_pipeline_after.txt), the same as
+    min(struct) would (measured — the min(struct) form was a wash).
     """
     q = quality_filter(spark, sf_dir).filter(F.col("passes")).select("doc_id")
     d = _docs(spark, sf_dir).join(q, "doc_id")

@@ -48,7 +48,7 @@ NPROBE = 3
 # 500 vectors, so the set is full-size everywhere). 200 = the sf0.1
 # proportional query count x10, small enough that the q x n pair work
 # stays measurable-not-dominant at sf10 (200 x 200k pairs).
-FIXED_Q = int(os.environ.get("SPARK_GRAFT_ANN_FIXED_Q", "200"))
+FIXED_Q = 200
 
 
 def _query_vectors(base: DataFrame, fixed_q: int | None = None) -> DataFrame:
@@ -251,9 +251,7 @@ _Q_CHUNK = 2048
 # INDEPENDENT one-pass blocked scan whose candidates union before the
 # (unchanged) exact re-rank — ranges partition the query set, so no
 # query's candidate generation ever sees a different matrix.
-_BLOCKED_QUERY_SLICE_ROWS = int(
-    os.environ.get("SPARK_GRAFT_BLOCKED_QUERY_SLICE_ROWS", str(1_000_000))
-)
+_BLOCKED_QUERY_SLICE_ROWS = 1_000_000
 
 
 def _ann_exact_blocked(spark: SparkSession, base: DataFrame, queries: DataFrame) -> DataFrame:
@@ -398,19 +396,6 @@ def _blocked_candidates(
     )
 
 
-# Brute/blocked gate for the REGISTRY entry (r9 verdict #3). MEASURED
-# (scripts/ann_crossover.py --topk, local[32], best-of-2, noop sink):
-#   n=500: brute 0.47 s vs blocked 0.32 s; n=2k: 0.72 vs 0.25;
-#   n=20k: 3.29 vs 0.39; n=200k: brute fit ~260 s (r9 driver sweep
-#   measured 393 s) vs blocked 22.7 s.
-# The blocked scan wins at EVERY measured size — the crossover sits below
-# the smallest fixture — so the default gate is 0 (always blocked). The
-# knob remains for diagnostics/regression work; the brute stays the
-# independent implementation the equivalence tests and recall scripts
-# compare against.
-MAX_BRUTE_TOPK_ROWS = int(os.environ.get("SPARK_GRAFT_MAX_BRUTE_TOPK_ROWS", "0"))
-
-
 def ann_cosine_topk(
     spark: SparkSession, sf_dir: str, fixed_q: int | None = None
 ) -> DataFrame:
@@ -420,16 +405,20 @@ def ann_cosine_topk(
     sufficient candidate set in one shuffle-free vectorized pass, stage 2
     re-ranks it exactly (:func:`_ann_exact_blocked`). Bit-identical to
     the JOIN brute (same IEEE scoring sequence, same rounding, same
-    tie-break) — the DuckDB oracle is unchanged and the
-    MAX_BRUTE_TOPK_ROWS gate (measured always-0, see above) never changes
-    results, only the plan. Replaces the repo's one above-linear scaling
-    row: sf0.1->sf10 exponent 1.36 -> 0.98, sf10 time 393 s -> 22.7 s.
-    The residual n*q work is the entry's own definition (q = n/100);
-    at a fixed production query budget the scan is linear in n.
+    tie-break) — the DuckDB oracle is unchanged.
+
+    The blocked scan runs at every size: measured against the brute
+    (scripts/ann_crossover.py --topk, local[32], best-of-2, noop sink) it
+    wins at n=500 (0.32 vs 0.47 s), 2k (0.25 vs 0.72), 20k (0.39 vs 3.29)
+    and 200k (22.7 vs a fitted ~260 s; the r9 driver sweep measured 393 s)
+    — the crossover sits below the smallest fixture. The brute stays the
+    independent implementation the equivalence tests and recall scripts
+    compare against. Replaces the repo's one above-linear scaling row:
+    sf0.1->sf10 exponent 1.36 -> 0.98, sf10 time 393 s -> 22.7 s. The
+    residual n*q work is the entry's own definition (q = n/100); at a
+    fixed production query budget the scan is linear in n.
     """
     base = _emb(spark, sf_dir)
-    if MAX_BRUTE_TOPK_ROWS > 0 and base.count() <= MAX_BRUTE_TOPK_ROWS:
-        return ann_cosine_topk_brute(spark, sf_dir, fixed_q)
     queries = _query_vectors(base, fixed_q).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )

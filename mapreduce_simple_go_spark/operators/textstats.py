@@ -494,7 +494,7 @@ def ngram_counts(spark: SparkSession, sf_dir: str, n: int = 2, k: int = NGRAM_TO
     toks = d.select(tokens(F.col("text")).alias("t")).select(
         "t", F.posexplode("t").alias("pos", "tok")
     )
-    parts = [F.expr(f"element_at(t, pos + {k + 1})") for k in range(n)]
+    parts = [F.expr(f"element_at(t, pos + {i + 1})") for i in range(n)]
     grams = toks.filter(F.expr(f"pos + {n} <= size(t)")).select(
         F.concat_ws(" ", *parts).alias("ngram")
     )

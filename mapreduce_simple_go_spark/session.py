@@ -1,9 +1,9 @@
 """SparkSession factory with scale-oriented defaults.
 
 The reference engine hard-codes its parallelism (M = number of input files,
-R = 10 reduce tasks — /root/reference/src/main/mrcoordinator.go:23). We instead
-centralize Spark tuning here so every operator inherits a configuration that
-holds up on a real cluster:
+R = 10 reduce tasks, in the reference's mrcoordinator.go). Tuning here is
+hard-coded the same way, as module constants, so every operator inherits
+one configuration that holds up on a real cluster:
 
 - AQE on (runtime coalescing of shuffle partitions + skew-join splitting),
 - Arrow for any pandas exchange,
@@ -11,7 +11,9 @@ holds up on a real cluster:
 - a broadcast threshold large enough that TPC-H-style dimension tables
   (region/nation/supplier/part at any sane SF) broadcast instead of shuffling.
 
-Locally we run ``local[$SPARK_GRAFT_CPUS]``; nothing in here assumes single-node.
+Only deployment settings come from the environment: ``SPARK_GRAFT_CPUS``
+(``local[$SPARK_GRAFT_CPUS]``, default ``*``), ``SPARK_GRAFT_DRIVER_MEM``
+and ``SPARK_GRAFT_WAREHOUSE``. Nothing in here assumes single-node.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def get_spark(
@@ -42,21 +44,12 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # parallelismFirst stays at the Spark default (true) — measured,
-        # not assumed (r14, VERDICT r13 #4): a 12-entry interleaved
-        # same-session A/B of false vs true on the overhead-bound set read
-        # a WASH overall (total-of-min 18.3 vs 17.5 s, true slightly
-        # ahead) with one clear regression under false
-        # (bloom_decontaminate 2.73 vs 1.88 s min — advisory-size
-        # coalescing serializes its compute-bound post-shuffle stage at
-        # driver SF). The env knob stays for cluster deployments where
-        # byte-sized partitions are the right rule (the docs' own
-        # recommendation at scale), but the local default follows the
-        # measurement.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
+        # coalescePartitions.parallelismFirst stays at Spark's default
+        # (true): a 12-entry interleaved A/B of false vs true on the
+        # overhead-bound queries read a wash overall, with one clear
+        # regression under false (bloom_decontaminate 2.73 vs 1.88 s min;
+        # advisory-size coalescing serializes its compute-bound
+        # post-shuffle stage at driver SF).
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")

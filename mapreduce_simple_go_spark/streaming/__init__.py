@@ -252,9 +252,7 @@ def dedup_events_stream(events: DataFrame, watermark: str = "2 hours") -> DataFr
 # driver); 32 MB keeps a >5x margin below that while still letting every
 # driver-SF (sf0.001-0.1, <=2 MB) and 10x (17 MB) drain stay on the memory
 # sink. Same shape as the brute/IVF gate in operators.similarity.
-_COMPLETE_MEMORY_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_COMPLETE_MEMORY_MAX_BYTES", str(32 << 20))
-)
+_COMPLETE_MEMORY_MAX_BYTES = 32 << 20
 
 
 def run_available_now(
@@ -317,17 +315,14 @@ def run_available_now(
     filter to data-batch-only rows (``closed_by = 'gap'``). Every
     registry drain qualifies and passes True (the saving is one
     state-store roundtrip per partition per drain, scale-independent; in
-    complete mode a full result rewrite). SPARK_GRAFT_STREAM_NODATA=1
-    overrides the skip globally (deployment escape hatch + the r13 A/B
-    measurement knob). The session value is restored after the drain.
+    complete mode a full result rewrite). The session value is restored
+    after the drain.
 
     NOT thread-safe (same caveat as _drain_staged's shuffle_partitions
     override): the conf save/set/restore mutates SESSION state around the
     drain.
     """
-    if skip_final_nodata_batch and os.environ.get(
-        "SPARK_GRAFT_STREAM_NODATA", "0"
-    ) == "0":
+    if skip_final_nodata_batch:
         spark_ = stream_df.sparkSession
         _NODATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
         prev_nodata = spark_.conf.get(_NODATA_KEY)
@@ -605,10 +600,8 @@ def session_fold(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
 # Bucket count for the COARSE-KEYED sessionizer below. Sized so the state
 # shuffle still parallelizes (>= executor-thread count is the useful
 # ceiling locally) while the per-group Python overhead amortizes over
-# thousands of users per call. Env-overridable like the other scale knobs.
-SESSION_FOLD_BUCKETS = int(
-    os.environ.get("SPARK_GRAFT_SESSION_FOLD_BUCKETS", "32")
-)
+# thousands of users per call.
+SESSION_FOLD_BUCKETS = 32
 
 # Per-bucket state: the open session of every live user in the bucket, as
 # parallel arrays (kept sorted by user so the fold's carried-state lookup
@@ -836,16 +829,15 @@ def session_fold_bucketed(
 # Upsert-sink bucket count. Scale note: size so one bucket ~= one target
 # parquet file for the table's key cardinality (at 100 TB: thousands); the
 # fixture tables hold <=50 keys, so 16 keeps several keys per bucket while
-# still exercising the partial-rewrite path. Env-overridable like the other
-# scale gates (SPARK_GRAFT_*) — but note the bucket count is baked into the
-# sink's directory layout: changing it for an EXISTING sink dir is a
-# re-bucketing migration, not a knob twist (merge correctness survives —
+# still exercising the partial-rewrite path. The bucket count is baked into
+# the sink's directory layout: changing it for an EXISTING sink dir is a
+# re-bucketing migration, not a constant edit (merge correctness survives —
 # max-version-wins reads every touched key's rows back — but old rows keyed
 # under the previous pmod stop being co-located with new writes and would be
 # silently missed by the touched-bucket read). run_foreachbatch_upsert
 # therefore stamps the count into the sink dir and refuses a mismatched
 # resume; tests pin both properties.
-UPSERT_BUCKETS = int(os.environ.get("SPARK_GRAFT_UPSERT_BUCKETS", "16"))
+UPSERT_BUCKETS = 16
 
 
 def _bucket_of(key_col, n_buckets: int):
@@ -882,7 +874,7 @@ def run_foreachbatch_upsert(
     fails LOUDLY instead of being treated as empty — the old behavior
     silently dropped the existing rows from the merge and left a mixed
     layout. The bucket count is stamped into ``_upsert_buckets`` on first
-    write and a resume with a different count (knob changed between runs)
+    write and a resume with a different count (constant changed between runs)
     also fails loudly: rows bucketed under the previous pmod would be
     invisible to the touched-bucket read.
 
@@ -928,8 +920,8 @@ def run_foreachbatch_upsert(
                 raise ValueError(
                     f"upsert sink {out_dir!r} was written with "
                     f"{prev} buckets but this run uses {n_buckets} "
-                    "(SPARK_GRAFT_UPSERT_BUCKETS changed): resuming would "
-                    "mis-route keys. Re-bucket the sink or restore the knob."
+                    "(UPSERT_BUCKETS changed): resuming would mis-route "
+                    "keys. Re-bucket the sink or restore the count."
                 )
 
     def upsert(batch_df, batch_id):

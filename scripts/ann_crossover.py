@@ -48,7 +48,8 @@ def main_topk() -> None:
     """`--topk`: brute vs blocked-scan crossover for the EXACT top-k entry
     (r10, r9 verdict #3). Times ann_cosine_topk_brute against the forced
     _ann_exact_blocked path per fixture; both are exact, so this is purely
-    a plan-cost measurement. Sets MAX_BRUTE_TOPK_ROWS."""
+    a plan-cost measurement, and the reason ann_cosine_topk always runs
+    the blocked scan."""
     from pyspark.sql import functions as F
 
     from mapreduce_simple_go_spark.operators.similarity import (

@@ -8,6 +8,8 @@ properties the 100 TB story depends on.
 
 from __future__ import annotations
 
+import re
+
 from mapreduce_simple_go_spark.operators.relational import (
     q1_pricing_summary,
     q3_shipping_priority,
@@ -141,7 +143,7 @@ def test_ngram_jaccard_pair_join_input_is_df_capped(spark):
     import mapreduce_simple_go_spark.operators.dedup as D
 
     inner = formatted_plan(
-        D._ngram_capped_byshingle(spark, SF_DIR, D.NGRAM_DF_CEILING)
+        D._ngram_capped_byshingle(spark, SF_DIR, D.NGRAM_DF_CEILING)[0]
     )
     assert f"<= {D.NGRAM_DF_CEILING}" in inner, "df ceiling missing from plan"
     assert "BroadcastNestedLoopJoin" not in inner
@@ -163,14 +165,14 @@ def test_ngram_jaccard_join_strategy_gate(spark, monkeypatch):
     import mapreduce_simple_go_spark.operators.dedup as D
 
     small = formatted_plan(
-        D._ngram_capped_byshingle(spark, SF_DIR, D.NGRAM_DF_CEILING)
+        D._ngram_capped_byshingle(spark, SF_DIR, D.NGRAM_DF_CEILING)[0]
     )
     assert "SortMergeJoin" not in small
     assert "BroadcastHashJoin" in small
 
     monkeypatch.setattr(D, "NGRAM_BROADCAST_MAX_DOC_BYTES", 0)
     large = formatted_plan(
-        D._ngram_capped_byshingle(spark, SF_DIR, D.NGRAM_DF_CEILING)
+        D._ngram_capped_byshingle(spark, SF_DIR, D.NGRAM_DF_CEILING)[0]
     )
     assert "SortMergeJoin" in large
     spark.catalog.clearCache()
@@ -686,7 +688,13 @@ def test_curation_dedup_is_windowless_and_text_never_shuffles(spark):
         assert count_operator(df, "Window") == 0
         plan = formatted_plan(df)
         # every Exchange's Input row must be text-free (text exists only
-        # below the map-side digest/tokenize projections)
-        for block in plan.split("\n\n"):
-            if block.startswith("(") and ") Exchange" in block.split("\n", 1)[0]:
-                assert "text#" not in block, block
+        # below the map-side digest/tokenize projections); the matched
+        # block count pins that the loop saw every Exchange, not none
+        exchanges = [
+            block
+            for block in plan.split("\n\n")
+            if re.match(r"\(\d+\) Exchange\s*$", block.split("\n", 1)[0])
+        ]
+        assert len(exchanges) == count_operator(df, "Exchange") > 0
+        for block in exchanges:
+            assert "text#" not in block, block

@@ -403,11 +403,13 @@ def test_exact_blocked_topk_bit_identical_to_brute(spark):
     """r10 (r9 verdict #3): the blocked-scan exact top-k must be
     BIT-identical to the join brute — same IEEE scoring sequence, same
     9-dp rounding, same (cosine DESC, vec_id ASC) tie-break — because the
-    registry entry's size gate must never change results, only the plan."""
+    registry entry runs the blocked scan in place of the brute, so the
+    choice must never change results, only the plan."""
     from mapreduce_simple_go_spark.operators.similarity import (
         QUERY_MOD,
         _ann_exact_blocked,
         _emb,
+        ann_cosine_topk,
         ann_cosine_topk_brute,
     )
     from pyspark.sql import functions as F
@@ -418,7 +420,8 @@ def test_exact_blocked_topk_bit_identical_to_brute(spark):
     )
     blocked = sorted(map(tuple, _ann_exact_blocked(spark, base, queries).collect()))
     brute = sorted(map(tuple, ann_cosine_topk_brute(spark, SF_DIR).collect()))
-    assert blocked == brute and len(blocked) > 0
+    entry = sorted(map(tuple, ann_cosine_topk(spark, SF_DIR).collect()))
+    assert blocked == brute == entry and len(blocked) > 0
 
 
 def test_exact_blocked_topk_tie_margin_survives_tiny_blocks(spark):
@@ -474,22 +477,6 @@ def test_blocked_topk_sliced_path_hash_identical(spark, monkeypatch):
         map(tuple, S._ann_exact_blocked(spark, base, queries).collect())
     )
     assert sliced == unsliced and single == unsliced and len(unsliced) > 0
-
-
-def test_ann_topk_gate_boundary(spark, monkeypatch):
-    """The registry entry's gate flips exactly AT MAX_BRUTE_TOPK_ROWS and
-    both sides return identical rows (the gate is a plan choice, not a
-    semantics choice)."""
-    import mapreduce_simple_go_spark.operators.similarity as S
-
-    n = S._emb(spark, SF_DIR).count()
-    monkeypatch.setattr(S, "MAX_BRUTE_TOPK_ROWS", n)
-    at_boundary = sorted(map(tuple, S.ann_cosine_topk(spark, SF_DIR).collect()))
-    monkeypatch.setattr(S, "MAX_BRUTE_TOPK_ROWS", n - 1)
-    above = sorted(map(tuple, S.ann_cosine_topk(spark, SF_DIR).collect()))
-    brute = sorted(map(tuple, S.ann_cosine_topk_brute(spark, SF_DIR).collect()))
-    assert at_boundary == brute
-    assert above == brute
 
 
 def test_exact_blocked_topk_cross_block_exact_ties(spark):

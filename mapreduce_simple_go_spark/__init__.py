@@ -13,7 +13,7 @@ Public surface:
   each with a colocated DuckDB oracle for differential testing.
 """
 
-from .session import get_spark, load_tables
+from .session import get_spark
 
-__all__ = ["get_spark", "load_tables"]
+__all__ = ["get_spark"]
 __version__ = "0.1.0"

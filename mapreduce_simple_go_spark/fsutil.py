@@ -105,12 +105,6 @@ def delete(spark: SparkSession, uri: str) -> None:
         pass
 
 
-def file_size(spark: SparkSession, uri: str) -> int:
-    """Byte length of ONE file (getFileStatus, no recursion)."""
-    fs, p = _fs_path(spark, uri)
-    return int(fs.getFileStatus(p).getLen())
-
-
 def du_suffix_bytes(spark: SparkSession, uri: str, suffix: str) -> int:
     """Bytes in ``uri`` counting ONLY the data files: a plain file's own
     length, or the sum over direct children ending in ``suffix``.

@@ -81,48 +81,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot / (na * nb)
 
 
-def _seq_sum(terms):
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Left-to-right unrolled dot product (codegen-friendly, oracle-exact)."""
-    return _seq_sum(
-        [
-            F.element_at(a, i + 1).cast("double") * F.element_at(b, i + 1).cast("double")
-            for i in range(dim)
-        ]
-    )
-
-
-def norm_unrolled(a: Column, dim: int) -> Column:
-    """Left-to-right unrolled L2 norm."""
-    return F.sqrt(
-        _seq_sum(
-            [
-                F.element_at(a, i + 1).cast("double") * F.element_at(a, i + 1).cast("double")
-                for i in range(dim)
-            ]
-        )
-    )
-
-
-def cosine_similarity_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Cosine similarity with the dot/norm sums unrolled over a known dim.
-
-    Caveat from measurement (see operators/similarity.py): for 64-dim
-    vectors the unrolled form generates expressions large enough to blow
-    JIT inlining limits and codegen compile budgets — the compact
-    higher-order :func:`cosine_similarity` or a numpy-scored ``mapInPandas``
-    beat it at every pair count we tried. Kept for narrow dims (<= ~16)
-    where the flat expression genuinely stays hot.
-    """
-    return dot_unrolled(a, b, dim) / (norm_unrolled(a, dim) * norm_unrolled(b, dim))
-
-
 def money(col: Column) -> Column:
     """Cast a double money column to DECIMAL(18,2) for exact aggregation.
 

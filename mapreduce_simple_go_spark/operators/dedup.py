@@ -162,15 +162,6 @@ def minhash_wide(docs: DataFrame) -> DataFrame:
     return hashed.groupBy("doc_id").agg(*mins)
 
 
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, perm, minhash) long form — unpivot of :func:`minhash_wide`."""
-    stack_args = ", ".join(f"{p}, m{p}" for p in range(NUM_PERM))
-    return minhash_wide(docs).select(
-        "doc_id",
-        F.expr(f"stack({NUM_PERM}, {stack_args}) as (perm, minhash)"),
-    )
-
-
 def _lsh_bands(wide: DataFrame) -> DataFrame:
     """(doc_id, sig_full, band, sig): banded LSH index rows for a wide
     signature table — the full signature rides along so the Jaccard

@@ -27,6 +27,8 @@ from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources import whole_text_files
+
 KeyValue = tuple[str, str]
 MapF = Callable[[str, str], Iterable[KeyValue]]
 ReduceF = Callable[[str, list[str]], str]
@@ -105,11 +107,14 @@ def map_reduce_files(
 ) -> DataFrame:
     """Reference entry point: file glob in, (key, value) rows out.
 
-    Mirrors ``mrcoordinator pg*.txt`` + workers (test-mr.sh:74-83): one map
-    task per file via wholeTextFiles, R reduce partitions.
+    Mirrors ``mrcoordinator pg*.txt`` + workers (test-mr.sh:74-83): one
+    (filename, contents) record per file via
+    :func:`~mapreduce_simple_go_spark.sources.whole_text_files`, R reduce
+    partitions. Map tasks hold whole files but are not one per file:
+    wholeTextFiles packs all files into about ``min(defaultParallelism, 2)``
+    partitions.
     """
-    rdd = spark.sparkContext.wholeTextFiles(path_glob)
-    inputs = spark.createDataFrame(rdd, schema="filename string, contents string")
+    inputs = whole_text_files(spark, path_glob)
     return map_reduce_kv(spark, inputs, mapf, reducef, n_reduce)
 
 

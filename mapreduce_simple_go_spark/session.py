@@ -1,4 +1,4 @@
-"""SparkSession factory with scale-oriented defaults.
+"""The engine's one SparkSession factory, with scale-oriented defaults.
 
 The reference engine hard-codes its parallelism (M = number of input files,
 R = 10 reduce tasks, in the reference's mrcoordinator.go). Tuning here is
@@ -11,8 +11,15 @@ one configuration that holds up on a real cluster:
 - a broadcast threshold large enough that TPC-H-style dimension tables
   (region/nation/supplier/part at any sane SF) broadcast instead of shuffling.
 
+Retry policy: a task gets up to ``TASK_MAX_FAILURES`` (4) attempts before
+its job fails -- the reference coordinator's re-queue of a crashed worker's
+task (coordinator.go). Spark already defaults ``spark.task.maxFailures`` to
+4 on a cluster but gives ``local[N]`` one attempt, so the default local
+master is ``local[N,4]``. Output stays visible exactly once: only the
+successful attempt's result is returned and only its files are committed.
+
 Only deployment settings come from the environment: ``SPARK_GRAFT_CPUS``
-(``local[$SPARK_GRAFT_CPUS]``, default ``*``), ``SPARK_GRAFT_DRIVER_MEM``
+(``local[$SPARK_GRAFT_CPUS,4]``, default ``*``), ``SPARK_GRAFT_DRIVER_MEM``
 and ``SPARK_GRAFT_WAREHOUSE``. Nothing in here assumes single-node.
 """
 
@@ -23,6 +30,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+TASK_MAX_FAILURES = 4
 
 
 def get_spark(
@@ -31,10 +39,21 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's standard config."""
+    """Build the engine's SparkSession, or return the live one.
+
+    A live session keeps its configuration: only what the caller passes
+    explicitly (``shuffle_partitions``, ``extra_conf``) is set on it.
+    """
+    live = SparkSession.getActiveSession()
+    if live is not None:
+        if shuffle_partitions is not None:
+            live.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        for k, v in (extra_conf or {}).items():
+            live.conf.set(k, v)
+        return live
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
+        master = f"local[{cpus},{TASK_MAX_FAILURES}]"
     if shuffle_partitions is None:
         shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
 
@@ -76,20 +95,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Read the fixture parquet tables under ``sf_dir`` into a dict of DataFrames."""
-    names = names or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    return {n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names}

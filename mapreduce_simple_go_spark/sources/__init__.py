@@ -18,8 +18,10 @@ from pyspark.sql.types import LongType, TimestampNTZType
 def whole_text_files(spark: SparkSession, path_glob: str) -> DataFrame:
     """(filename, contents) rows — the reference's map-task input contract.
 
-    Uses the wholeTextFiles RDD source (one record per file, file-level
-    parallelism = the reference's M = number of input files).
+    Uses the wholeTextFiles RDD source: one record per file, as the
+    reference gives each of its M map tasks one file. Spark packs the
+    files into about ``min(defaultParallelism, 2)`` partitions (split size =
+    total bytes / that), so there are not M map tasks.
     """
     rdd = spark.sparkContext.wholeTextFiles(path_glob)
     return spark.createDataFrame(rdd, schema="filename string, contents string")

@@ -32,7 +32,8 @@ import time
 import pyspark
 
 os.environ.setdefault("SPARK_HOME", os.path.dirname(pyspark.__file__))
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 MAP_SLEEP_S = 0.6  # per-row stall: widens the map stage into a kill window
@@ -73,26 +74,21 @@ def slow_wc_map(filename: str, contents: str):
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
     from mapreduce_simple_go_spark.operators import mapreduce as mr
+    from mapreduce_simple_go_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local-cluster[2,1,1024]")
-        .appName("executor-kill-check")
-        .config("spark.sql.shuffle.partitions", "4")
+    # lost-shuffle refetch + task retry are the recovery paths under test;
+    # cluster defaults (maxFailures=4, unregisterOutputOnHostOnFailure) are
+    # what a real cluster runs, so leave them.
+    spark = get_spark(
+        app_name="executor-kill-check",
+        master="local-cluster[2,1,1024]",
+        shuffle_partitions=4,
         # executors are separate processes here: ship the repo on their
         # Python path so module-level map/reduce functions unpickle
-        .config(
-            "spark.executorEnv.PYTHONPATH",
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-            + os.pathsep
-            + os.environ.get("PYTHONPATH", ""),
-        )
-        # lost-shuffle refetch + task retry are the recovery paths under
-        # test; defaults (maxFailures=4, unregisterOutputOnHostOnFailure)
-        # are what a real cluster runs, so leave them.
-        .getOrCreate()
+        extra_conf={
+            "spark.executorEnv.PYTHONPATH": REPO + os.pathsep + os.environ.get("PYTHONPATH", ""),
+        },
     )
     try:
         docs = (

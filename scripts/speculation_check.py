@@ -40,7 +40,8 @@ import time
 import pyspark
 
 os.environ.setdefault("SPARK_HOME", os.path.dirname(pyspark.__file__))
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 N_PARTS = 8
 N_ROWS = 200
@@ -62,25 +63,21 @@ def straggler_partition_sums(idx: int, it):
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
+    from mapreduce_simple_go_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local-cluster[2,1,1024]")
-        .appName("speculation-check")
-        .config("spark.speculation", "true")
-        .config("spark.speculation.interval", "200ms")
-        .config("spark.speculation.multiplier", "1.5")
-        .config("spark.speculation.quantile", "0.25")
-        # 3.4+ gates speculation on task-efficiency metrics Python RDD
-        # tasks don't report; disable so duration alone decides
-        .config("spark.speculation.efficiency.enabled", "false")
-        .config(
-            "spark.executorEnv.PYTHONPATH",
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-            + os.pathsep
-            + os.environ.get("PYTHONPATH", ""),
-        )
-        .getOrCreate()
+    spark = get_spark(
+        app_name="speculation-check",
+        master="local-cluster[2,1,1024]",
+        extra_conf={
+            "spark.speculation": "true",
+            "spark.speculation.interval": "200ms",
+            "spark.speculation.multiplier": "1.5",
+            "spark.speculation.quantile": "0.25",
+            # 3.4+ gates speculation on task-efficiency metrics Python RDD
+            # tasks don't report; disable so duration alone decides
+            "spark.speculation.efficiency.enabled": "false",
+            "spark.executorEnv.PYTHONPATH": REPO + os.pathsep + os.environ.get("PYTHONPATH", ""),
+        },
     )
     try:
         sc = spark.sparkContext

@@ -7,9 +7,10 @@ Spark the re-execution machinery is built in (lineage + task retry +
 speculative execution); what we assert is the *observable contract*: a job
 whose UDFs stall randomly produces byte-identical results to the clean run.
 
-Executor-kill is not reproducible inside local[*] (one JVM); stalls are the
-injectable fault. The straggler-recovery config surface (speculation) is
-asserted separately.
+Executor-kill is not reproducible inside local mode (one JVM; see
+test_executor_kill.py) and crashed tasks are covered by test_task_retry.py;
+stalls are the injectable fault here. The straggler-recovery config surface
+(speculation) is asserted separately.
 """
 
 from __future__ import annotations
@@ -56,6 +57,16 @@ def test_extra_conf_surface(spark):
         assert n > 0
     finally:
         s.conf.set("spark.sql.shuffle.partitions", "8")
+
+
+def test_get_spark_keeps_live_session_conf(spark):
+    """Engine() and a plain get_spark() hand back the live session as-is:
+    only confs the caller passes explicitly are set on it."""
+    from mapreduce_simple_go_spark.session import get_spark
+
+    assert Engine().spark is spark
+    assert get_spark() is spark
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
 
 
 def test_output_stability_under_partitioning(spark):

@@ -31,19 +31,6 @@ OPS = st.lists(
     max_size=40,
 )
 
-_spark = None
-
-
-def _get_spark():
-    # hypothesis wraps the test body; grab the session-scoped fixture lazily
-    global _spark
-    if _spark is None:
-        from mapreduce_simple_go_spark.session import get_spark
-
-        _spark = get_spark(shuffle_partitions=4)
-    return _spark
-
-
 def dict_replay(ops):
     state: dict[str, str] = {}
     visible = []
@@ -59,8 +46,7 @@ def dict_replay(ops):
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(OPS)
-def test_kv_folds_match_model_on_random_logs(ops):
-    spark = _get_spark()
+def test_kv_folds_match_model_on_random_logs(spark, ops):
     rows = [(i, k, op, v) for i, (k, op, v) in enumerate(ops)]
     want_state, want_visible = dict_replay(ops)
     if rows:
@@ -103,8 +89,7 @@ _STABLE_TEXT = st.text(
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.lists(_STABLE_TEXT, min_size=1, max_size=20))
-def test_tokenizer_matches_regex_oracle_on_random_text(texts):
-    spark = _get_spark()
+def test_tokenizer_matches_regex_oracle_on_random_text(spark, texts):
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
@@ -125,7 +110,7 @@ TRI_EDGES = st.lists(
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(TRI_EDGES)
-def test_triangle_corners_match_bruteforce_on_random_graphs(edges):
+def test_triangle_corners_match_bruteforce_on_random_graphs(spark, edges):
     """Degree-oriented wedge counting == O(n^3) brute force on random
     small graphs — the orientation argument (exactly one wedge per
     triangle) checked exhaustively, not just on the fixture corpus."""
@@ -133,7 +118,6 @@ def test_triangle_corners_match_bruteforce_on_random_graphs(edges):
 
     from pyspark.sql import functions as F
 
-    spark = _get_spark()
     und = sorted({(min(a, b), max(a, b)) for a, b in edges if a != b})
 
     # model: count triangles per node by brute force
@@ -226,7 +210,7 @@ SESSION_GAPS = st.lists(
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(SESSION_GAPS)
-def test_native_session_window_equals_lag_split_on_random_gaps(user_gaps):
+def test_native_session_window_equals_lag_split_on_random_gaps(spark, user_gaps):
     """Random per-user event trains with many EXACT-threshold gaps: native
     session_window and the lag-based `gap > threshold` rule must produce
     identical session partitionings (same starts, same counts)."""
@@ -235,7 +219,6 @@ def test_native_session_window_equals_lag_split_on_random_gaps(user_gaps):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    spark = _get_spark()
     t0 = dt.datetime(2024, 3, 1, 0, 0, 0)
     rows = []
     eid = 0

@@ -1,10 +1,16 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
-JSON line with per-query wall-clock seconds.
+"""Driver benchmark contract: runs every registered query (HEADLINE first)
+at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on get_spark()'s
+local[$SPARK_GRAFT_CPUS,4] session, best-of-$SPARK_GRAFT_BENCH_PASSES
+(default 3) per query, and writes per-query wall-clock seconds to
+bench_out.json, stdout, and a last stdout line that fits the driver's tail.
+
+    python bench.py
+    python bench.py --one NAME --out P   # one query in a fresh session
 
 Timing counts full query execution including the driver-side collect of the
 (small) result — the same observable the reference's test harness times
-(whole job wall-clock, test-mr.sh).
+(whole job wall-clock, test-mr.sh). The repo's benchmark is perfbench/;
+this file only keeps the driver's contract working.
 """
 
 from __future__ import annotations
@@ -72,144 +78,32 @@ def run_suite(spark, sf_dir: str, passes: int = 1) -> dict[str, float]:
     return timings
 
 
+TAIL_BUDGET = 1800
+
+
 def _sf_of(sf_dir: str) -> float:
     return float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
 
-REPO = os.path.dirname(os.path.abspath(__file__))
+def tail_line(out: dict) -> str:
+    """The JSON line printed last, sized to fit the driver's stdout tail.
 
-# Noise-defense knobs (r10, per r9 verdict #2: the r9 driver artifact read
-# +17.5% vs r8 purely from host noise — uniform inflation across untouched
-# code, contradicted by isolated re-measures; scale_sweep.py grew this
-# defense in r9, bench.py inherits it here). A query re-measures when it is
-# BOTH >RATIO x its prior driver number AND >FLOOR s absolute over it —
-# the floor keeps 0.1 s -> 0.14 s scheduler jitter from burning a fresh
-# JVM on a query whose absolute cost is noise-sized either way.
-_REMEASURE_RATIO = float(os.environ.get("SPARK_GRAFT_BENCH_REMEASURE_RATIO", "1.25"))
-_REMEASURE_FLOOR_S = float(os.environ.get("SPARK_GRAFT_BENCH_REMEASURE_FLOOR", "0.3"))
-# Isolated re-measures only run for entries reading above this in-suite
-# (r12 verdict #7): a fresh subprocess session can never reproduce the
-# deep C2 warmth of a 148x2-query suite pass, and the r12 trail showed
-# 14/28 isolated readings ABOVE in-suite (8.28 vs 2.94 s on
-# session_window_native) — for small queries the isolated path generates
-# only discardable noise that min() then throws away, at ~20 s of fresh
-# JVM each. Above ~3 s the JIT delta is amortized and an isolated reading
-# carries signal. Entries at or below the floor keep their in-suite
-# number and are recorded under "remeasure_skipped_small".
-_REMEASURE_MIN_INSUITE_S = float(
-    os.environ.get("SPARK_GRAFT_BENCH_REMEASURE_MIN_INSUITE", "3.0")
-)
-
-# Re-measures skipped because the in-suite reading sits below
-# _REMEASURE_MIN_INSUITE_S (name -> in-suite seconds).
-_REMEASURE_SKIPPED_SMALL: dict[str, float] = {}
-
-# Re-measures skipped because the host wasn't idle (name -> foreign JVM
-# pids); recorded in the artifact so a missing isolated reading is
-# auditable rather than silent.
-_REMEASURE_SKIPPED: dict[str, list[int]] = {}
-
-
-def _prior_numbers(sf: float) -> dict[str, float]:
-    """Per-query priors: elementwise MIN over the two newest committed
-    driver bench artifacts at the SAME scale factor.
-
-    min(last two) ~= the last CLEAN record even when one of the two was
-    noise-inflated (exactly the r8/r9 situation), and it self-maintains:
-    next round the pair rolls forward. Env override for a pinned prior:
-    SPARK_GRAFT_BENCH_PRIOR=path.json.
+    The driver keeps only the last ~2000 chars of stdout and parses a JSON
+    line out of it; the full line (151 queries) overflows that. So the last
+    line keeps the slowest queries that fit in TAIL_BUDGET chars and records
+    the cut in ``queries_omitted``; ``detail`` names the file with all of
+    them.
     """
-    import glob
-    import re
-
-    override = os.environ.get("SPARK_GRAFT_BENCH_PRIOR")
-    if override:
-        paths = [override]
-    else:
-        # Only names with a parseable round suffix participate (r10
-        # ADVICE): a stray BENCH_report.json matching the glob but not
-        # the _r<digits> pattern must be skipped, not crash the whole
-        # bench run before the artifact is written.
-        matched = [
-            (int(m.group(1)), p)
-            for p in glob.glob(os.path.join(REPO, "BENCH*_r*.json"))
-            if (m := re.search(r"_r(\d+)\.json$", p))
-        ]
-        paths = [p for _, p in sorted(matched)]
-    prior: dict[str, float] = {}
-    used = 0
-    for p in reversed(paths):
-        try:
-            with open(p) as f:
-                art = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        # driver artifacts wrap the parsed tail line under "parsed" (its
-        # queries dict is TRIMMED to the slowest ~50 — fine: cheap queries
-        # below the trim also sit below the re-measure floor)
-        if "parsed" in art and isinstance(art["parsed"], dict):
-            art = art["parsed"]
-        if abs(float(art.get("sf", -1)) - sf) > 1e-9:
-            continue
-        qs = art.get("queries") or {}
-        for name, sec in qs.items():
-            prior[name] = min(prior.get(name, float("inf")), float(sec))
-        used += 1
-        if used == 2:
-            break
-    return prior
-
-
-def _isolated_remeasure(name: str, sf_dir: str, passes: int) -> float | None:
-    """Best-of-N for ONE query in a fresh subprocess session. Returns the
-    isolated seconds, or None if the subprocess failed OR the host is not
-    idle.
-
-    Idle guard (r11 verdict #3): BENCH_SF1_r11's re-measure trail recorded
-    isolated readings up to 8x SLOWER than the contended in-suite run —
-    i.e. the re-measure environment was busier than the suite. A reading
-    taken beside a foreign Spark JVM is not evidence of anything, so it is
-    SKIPPED (the artifact keeps the in-suite number and records the pids
-    under "remeasure_skipped_coscheduled"). This parent's own idle gateway
-    JVM is excluded from the check.
-    """
-    import subprocess
-    import tempfile
-
-    from mapreduce_simple_go_spark.hostenv import spark_jvms
-
-    foreign = spark_jvms(exclude_children_of=os.getpid())
-    if foreign:
-        print(
-            f"# remeasure {name}: foreign Spark JVM(s) {foreign} running — "
-            "skipping isolated re-measure (reading would be contaminated)",
-            file=sys.stderr,
-            flush=True,
-        )
-        _REMEASURE_SKIPPED[name] = foreign
-        return None
-    fd, out = tempfile.mkstemp(suffix=".json", prefix="benchre_")
-    os.close(fd)
-    try:
-        r = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--one", name, "--out", out],
-            env={
-                **os.environ,
-                "SPARK_GRAFT_SF_DIR": sf_dir,
-                "SPARK_GRAFT_BENCH_PASSES": str(passes),
-            },
-            capture_output=True,
-            text=True,
-            timeout=1800,
-        )
-        if r.returncode != 0 or not os.path.getsize(out):
-            print(f"# remeasure {name}: subprocess failed\n{r.stderr[-400:]}",
-                  file=sys.stderr)
-            return None
-        with open(out) as f:
-            return json.load(f)["sec"]
-    finally:
-        os.unlink(out)
+    final = {k: out[k] for k in ("metric", "value", "unit", "sf")}
+    final["n_queries"] = len(out["queries"])
+    final["detail"] = "bench_out.json"
+    by_cost = sorted(out["queries"].items(), key=lambda kv: -kv[1])
+    final["queries"] = dict(by_cost)
+    while len(json.dumps(final)) > TAIL_BUDGET and by_cost:
+        by_cost = by_cost[:-1]  # drop the cheapest remaining query
+        final["queries"] = dict(by_cost)
+        final["queries_omitted"] = final["n_queries"] - len(by_cost)
+    return json.dumps(final)
 
 
 def _one_query_main(name: str, out_path: str) -> None:
@@ -259,48 +153,6 @@ def main() -> None:
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
     timings = run_suite(spark, sf_dir, passes=passes)
 
-    # Noise defense (r10): any entry reading >RATIO x AND >FLOOR s over its
-    # prior driver number gets a fresh-session re-measure BEFORE the
-    # artifact is written; both readings land in the artifact and the
-    # headline takes the min (both are best-of-N, so the smaller is the
-    # less-contaminated estimate — scale_sweep.py's vetting rule).
-    remeasured: dict[str, dict[str, float]] = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_REMEASURE", "1") != "0":
-        prior = _prior_numbers(_sf_of(sf_dir))
-        flagged = sorted(
-            n
-            for n, t in timings.items()
-            if n in prior
-            and t > prior[n] * _REMEASURE_RATIO
-            and t - prior[n] > _REMEASURE_FLOOR_S
-        )
-        for name in flagged:
-            if timings[name] <= _REMEASURE_MIN_INSUITE_S:
-                print(
-                    f"# remeasure {name}: in-suite {timings[name]}s <= "
-                    f"{_REMEASURE_MIN_INSUITE_S}s floor — isolated reading "
-                    "would be JIT-cold noise, keeping in-suite number",
-                    file=sys.stderr,
-                    flush=True,
-                )
-                _REMEASURE_SKIPPED_SMALL[name] = timings[name]
-                continue
-            print(
-                f"# remeasure {name}: {timings[name]}s vs prior "
-                f"{prior[name]}s — isolating...",
-                file=sys.stderr,
-                flush=True,
-            )
-            iso = _isolated_remeasure(name, sf_dir, passes=2)
-            if iso is None:
-                continue
-            remeasured[name] = {
-                "in_suite": timings[name],
-                "isolated": iso,
-                "prior": prior[name],
-            }
-            timings[name] = min(timings[name], iso)
-
     total = round(sum(timings.values()), 3)
     out = {
         "metric": "total_query_seconds",
@@ -309,45 +161,13 @@ def main() -> None:
         "queries": timings,
         "sf": _sf_of(sf_dir),
     }
-    if remeasured:
-        out["remeasured"] = remeasured
-    if _REMEASURE_SKIPPED:
-        out["remeasure_skipped_coscheduled"] = dict(_REMEASURE_SKIPPED)
-    if _REMEASURE_SKIPPED_SMALL:
-        out["remeasure_skipped_small"] = dict(_REMEASURE_SKIPPED_SMALL)
-    # Second scale factor: scaling behavior round-over-round (a query whose
-    # sf0.1/sf0.01 ratio blows up has a plan that stopped scaling). Opt-out
-    # via SPARK_GRAFT_BENCH_SECONDARY=""; skipped when it equals the primary.
-    sec_dir = os.environ.get("SPARK_GRAFT_BENCH_SECONDARY", "/root/testdata/sf0.01")
-    if sec_dir and os.path.isdir(sec_dir) and sec_dir.rstrip("/") != sf_dir.rstrip("/"):
-        sec = run_suite(spark, sec_dir)
-        out["secondary"] = {
-            "sf": _sf_of(sec_dir),
-            "value": round(sum(sec.values()), 3),
-            "queries": sec,
-        }
-    # Full result goes to a file AND stdout. The driver keeps only the last
-    # ~2000 chars of stdout and parses a JSON line out of it; round 3's full
-    # line (95 queries) overflowed that, leaving the tail an unparseable
-    # fragment. So: durable full copy in bench_out.json, full line printed
-    # first (for anyone capturing complete stdout), and the LAST line is a
-    # JSON line guaranteed to fit the tail budget — queries trimmed
-    # slowest-first if needed, with queries_omitted recording the cut.
+    # Full result goes to bench_out.json and stdout; the last line is the
+    # driver's copy (see tail_line).
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_out.json"), "w") as f:
         json.dump(out, f, indent=1)
         f.write("\n")
     print(json.dumps(out))
-    budget = 1800
-    final = {k: out[k] for k in ("metric", "value", "unit", "sf")}
-    final["n_queries"] = len(out["queries"])
-    final["detail"] = "bench_out.json"
-    by_cost = sorted(timings.items(), key=lambda kv: -kv[1])
-    final["queries"] = dict(by_cost)
-    while len(json.dumps(final)) > budget and by_cost:
-        by_cost = by_cost[:-1]  # drop the cheapest remaining query
-        final["queries"] = dict(by_cost)
-        final["queries_omitted"] = final["n_queries"] - len(by_cost)
-    print(json.dumps(final))
+    print(tail_line(out))
     spark.stop()
 
 

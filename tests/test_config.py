@@ -31,6 +31,16 @@ def test_environment_names_are_deployment_settings_only():
     assert names == DEPLOYMENT_SETTINGS
 
 
+def test_bench_reads_only_the_driver_contract_settings():
+    bench = Path(__file__).resolve().parent.parent / "bench.py"
+    names = set(re.findall(r"SPARK_GRAFT_[A-Z_]+", bench.read_text()))
+    assert names == {
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_BENCH_PASSES",
+    }
+
+
 def test_session_keeps_spark_default_aqe_coalescing(spark):
     key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
     assert spark.conf.get(key) == "true"

@@ -542,8 +542,7 @@ def test_proportional_oracle_sql_unchanged():
     _query_vectors/_q_where) must leave the PROPORTIONAL entries' oracle
     SQL byte-identical to the pre-refactor literals — this pins that the
     default (fixed_q=None) path is the same query the r10-r12 driver
-    verdicts covered (window capacity-rule exemption evidence,
-    operators/__init__._WINDOW_EXEMPT_R13)."""
+    verdicts covered."""
     from mapreduce_simple_go_spark.operators.similarity import (
         ANN_SRP_SQL,
         ANN_TOPK_SQL,

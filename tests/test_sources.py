@@ -198,3 +198,18 @@ def test_cli_list_and_run(spark, tmp_path):
     with contextlib.redirect_stderr(err):
         assert main(["run", "no_such_query"]) == 2
     assert "unknown query" in err.getvalue() and "wc" in err.getvalue()
+
+
+def test_cli_rejects_unsupported_out_extension(spark, tmp_path):
+    """A bad --out extension exits 2 before any plan is built or cached."""
+    from mapreduce_simple_go_spark.__main__ import main
+    import contextlib, io
+
+    spark.catalog.clearCache()
+    err = io.StringIO()
+    with contextlib.redirect_stderr(err):
+        rc = main(["run", "wc", "--sf-dir", SF_DIR, "--out", str(tmp_path / "x.txt")])
+    assert rc == 2
+    assert "unsupported --out extension: .txt" in err.getvalue()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert not (tmp_path / "x.txt").exists()

@@ -147,9 +147,9 @@ def main() -> None:
     spark.range(32).mapInPandas(
         lambda it: it, schema="id long"
     ).collect()
-    # best-of-3 by default (r7 verdict directive 7): the single-shot driver
-    # bench read 1.25x worse than the idle-host truth purely from host-load
-    # noise; a third pass tightens the min estimator at ~50% extra wall.
+    # best-of-3 by default: a single-shot bench read 1.25x worse than the
+    # idle-host truth purely from host-load noise; a third pass tightens
+    # the min estimator at ~50% extra wall.
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
     timings = run_suite(spark, sf_dir, passes=passes)
 

@@ -6,8 +6,8 @@ the Python workers that host the StatefulProcessor (via
 ``StateMessage_pb2``). The package isn't installed in every deployment and
 this container has no network for ``pip``. Two fallbacks exist: the repo's
 own VENDORED pure-Python runtime (``_vendor/protobuf-6.32.0-pure.zip``,
-zipimport-able, version-pinned — the deterministic path, added in r8 after
-the r7 verdict flagged host-only discovery as fragile), and pure-Python
+zipimport-able, version-pinned — the deterministic path, because discovery
+that depends on host tooling being installed is fragile), and pure-Python
 runtimes hosts frequently carry inside other *public* tooling — the
 google-cloud-sdk CLI ships one under its app-engine platform directory.
 
@@ -38,9 +38,9 @@ import sys
 
 # Fallback sys.path entries carrying a pure-Python google.protobuf runtime,
 # probed in order ONLY after the normal import fails. First the repo's own
-# vendored zip (deterministic, version-pinned — see _vendor/README.md; r7's
-# seam depended entirely on host tooling being installed, which the r7
-# verdict flagged as fragile), then conventional host-tooling bundle
+# vendored zip (deterministic, version-pinned — see _vendor/README.md; a
+# seam that depends entirely on host tooling being installed is fragile),
+# then conventional host-tooling bundle
 # locations (the google-cloud-sdk CLI ships one). Entries may be a
 # directory containing google/protobuf/ or a zipimport-able .zip.
 _FALLBACK_DIRS = (
@@ -154,7 +154,7 @@ def ensure_protobuf() -> bool:
             try:
                 _verify_gencode_surface()
             except RuntimeError as e:
-                # Incomplete bundle (r10 ADVICE): unwind it COMPLETELY —
+                # Incomplete bundle: unwind it COMPLETELY —
                 # sys.path, PYTHONPATH, _active_dir, and the partially
                 # imported google.* modules — then keep probing, so a later
                 # complete bundle (e.g. the host cloud-sdk runtime when the
@@ -176,7 +176,7 @@ def ensure_protobuf() -> bool:
                 # host-owned google.* namespace packages (google.auth etc.
                 # imported earlier by unrelated code) must survive the
                 # unwind; importers hold references and would keep stale
-                # module objects (r11 ADVICE).
+                # module objects.
                 for mod in [m for m in sys.modules if m == "google" or m.startswith("google.")]:
                     obj = sys.modules[mod]
                     locs = list(getattr(obj, "__path__", []) or [])

@@ -21,7 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators import all_oracles, all_queries
+from .operators import all_queries
 from .operators.mapreduce import (
     DEFAULT_N_REDUCE,
     MapF,
@@ -37,7 +37,6 @@ class Engine:
     def __init__(self, spark: SparkSession | None = None):
         self.spark = spark or get_spark()
         self._registry = all_queries()
-        self._oracles = all_oracles()
 
     # -- reference-parity MapReduce surface --------------------------------
 
@@ -70,9 +69,6 @@ class Engine:
 
     def query(self, name: str, sf_dir: str) -> DataFrame:
         return self._registry[name](self.spark, sf_dir)
-
-    def oracle_sql(self, name: str) -> str | None:
-        return self._oracles.get(name)
 
     # -- SQL surface ---------------------------------------------------------
 

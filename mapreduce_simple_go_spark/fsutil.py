@@ -1,6 +1,6 @@
 """Deployment-agnostic filesystem probes and scratch staging (Hadoop FS API).
 
-Three r8-verdict blemishes shared one root cause: size gates and stream
+Three code paths shared one root cause: size gates and stream
 staging reached for ``os.stat`` / ``os.listdir`` / ``os.symlink`` on the
 *driver-local* filesystem, which is correct only when driver and executors
 share a POSIX view of the fixture paths — i.e. local[*], this repo's test
@@ -113,9 +113,9 @@ def du_suffix_bytes(spark: SparkSession, uri: str, suffix: str) -> int:
     dir also holds ``_SUCCESS`` (and ``.crc`` siblings on the local FS)
     which ContentSummary counts — harmless for reporting, but a gate
     compared against a byte threshold should see the same number whether
-    the input is one fixture file or a committed sink dir (r9 ADVICE:
-    the events complete-mode memory-vs-parquet gate drifted ~1% when it
-    switched to ContentSummary).
+    the input is one fixture file or a committed sink dir (with
+    ContentSummary alone the events complete-mode memory-vs-parquet gate
+    drifted ~1%).
     """
     fs, p = _fs_path(spark, uri)
     st = fs.getFileStatus(p)
@@ -135,9 +135,9 @@ def read_text(spark: SparkSession, uri: str) -> str:
     fs, p = _fs_path(spark, uri)
     stream = fs.open(p)
     try:
-        # One JVM-side drain + one py4j byte-array transfer (r10 ADVICE:
-        # the old stream.read() loop was one py4j round trip PER BYTE —
-        # fine for a 2-byte stamp, a trap for anything bigger).
+        # One JVM-side drain + one py4j byte-array transfer: a
+        # stream.read() loop is one py4j round trip PER BYTE — fine for a
+        # 2-byte stamp, a trap for anything bigger.
         jvm = spark._jvm
         sink = jvm.java.io.ByteArrayOutputStream()
         jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, sink, 65536, False)

@@ -92,7 +92,7 @@ def doc_shingles(
     buffer that CANNOT spill mid-group, unlike the old per-doc window
     sort which could: one pathological giant document risks executor OOM
     here. Acceptable for the capped-pipeline caller below; an untrusted
-    corpus should pre-truncate documents upstream — r13 ADVICE).
+    corpus should pre-truncate documents upstream).
     dedup_ngram_jaccard passes this: it CACHES the pair set and
     self-joins it, and the flat distinct's hash-scattered row order cost
     its self-join ~0.4 s in exchange compression/sort locality
@@ -466,7 +466,7 @@ def dedup_simhash(
         .distinct()
         .filter(F.col("hamming") <= max_dist)
         # eager so the signature cache can be released before returning
-        # (r14, r13 VERDICT #6 cache-leak audit): the pair list is the
+        # (no session-lifetime cache is left behind): the pair list is the
         # final near-dup output — tiny next to the corpus — and callers
         # collect it anyway. Interleaved A/B: perf-neutral at sf0.1 and
         # sf1 (within the ±0.2 s session noise), leak gone.
@@ -525,8 +525,8 @@ def _docs_bytes(spark: SparkSession, sf_dir: str) -> int:
     Goes through the Hadoop FileSystem resolved from ``sf_dir``'s own
     scheme (fsutil.du_bytes), so the join-strategy gate below works for
     any URI the cluster can read — not just driver-local POSIX paths
-    (r8 verdict blemish #1; the old ``os.stat`` probe returned the same
-    number but only existed on the driver's mount). Pinned equal to the
+    (an ``os.stat`` probe returns the same number but only exists on the
+    driver's mount). Pinned equal to the
     driver-local stat at local paths by tests/test_fsutil.py.
     """
     from ..fsutil import du_bytes
@@ -639,7 +639,7 @@ def dedup_ngram_jaccard(
     # re-paid ~5 s of a ~11 s query). byshingle is eagerly
     # localCheckpointed, so both branches scan the materialized lists,
     # and the cached raw shingle set can be unpersisted immediately —
-    # no session-lifetime cache leak (r13 VERDICT #6). Unreplicated
+    # no session-lifetime cache leak. Unreplicated
     # checkpoint blocks trade executor-loss recompute for plan
     # truncation, the same tradeoff q11 documents.
     byshingle, sh_cached = _ngram_capped_byshingle(spark, sf_dir, df_ceiling)
@@ -1020,7 +1020,7 @@ def connected_components(
     All paths produce identical output (asserted in tests/test_sampling.py
     and tests/test_star_components.py).
 
-    NOT thread-safe (r12 ADVICE): the driver-tier probe saves/restores
+    NOT thread-safe: the driver-tier probe saves/restores
     ``spark.sql.limit.initialNumPartitions`` on the SESSION conf
     non-atomically, so any concurrent query on the same SparkSession that
     issues a ``limit`` during the probe inherits the 2^20 override (same

@@ -29,7 +29,7 @@ def _events_stream(spark: SparkSession, sf_dir: str):
     the source) and a Spark-written DIRECTORY for the scaled fixtures
     (streamed directly). Replaces the r8 symlink staging, which was
     zero-copy but required a driver-local POSIX fixture path — this form
-    takes any URI the cluster's Hadoop conf resolves (r8 verdict #1), and
+    takes any URI the cluster's Hadoop conf resolves, and
     drops the per-drain scratch dir entirely. ``input_bytes`` (gates the
     complete-mode sink) comes from the same FS API.
     """
@@ -41,7 +41,7 @@ def _events_stream(spark: SparkSession, sf_dir: str):
         stream = stream_events(spark, src)
     else:
         stream = stream_events(spark, sf_dir, glob="events.parquet")
-    # data-file bytes only (r9 ADVICE): ContentSummary also counts
+    # data-file bytes only: ContentSummary also counts
     # _SUCCESS and local-FS .crc siblings in a Spark-written dir, which
     # drifted the complete-mode memory-vs-parquet gate ~1% vs the original
     # per-*.parquet stat sum. du_suffix_bytes restores the original
@@ -108,9 +108,8 @@ def _drain_staged(
             )
             staged_write.write.mode("overwrite").parquet(stage)
             stream = stream_events(spark, stage, glob="*.parquet")
-            # data files only, not _SUCCESS/.crc siblings (r9 ADVICE —
-            # keeps the gate's threshold semantics equal to a plain-file
-            # source)
+            # data files only, not _SUCCESS/.crc siblings — keeps the
+            # gate's threshold semantics equal to a plain-file source
             input_bytes = du_suffix_bytes(spark, stage, ".parquet")
         else:
             stream, input_bytes = _events_stream(spark, sf_dir)
@@ -992,7 +991,7 @@ def stream_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline). All-integer totals make the fold exact, so the oracle is
     the plain batch GROUP BY; version itself is NOT emitted downstream
     because the file split is a staging choice, not a semantic one —
-    r10 trimmed it 3 -> 2 (r9 verdict #5: each TWS micro-batch costs
+    r10 trimmed it 3 -> 2 (each TWS micro-batch costs
     ~2.5 s flat in store opens + state-server handshakes at driver SF,
     so the third batch bought nothing the second doesn't already prove)
     and sized the stateful shuffle to 8 partitions like the other
@@ -1030,7 +1029,7 @@ def stream_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev_provider = None
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # Everything from the first conf.set onward sits inside ONE
-    # try/finally (r10 ADVICE): the size probe, load_events, and
+    # try/finally: the size probe, load_events, and
     # mkscratch can all raise (e.g. a missing events path surfaces as a
     # py4j FileNotFound from the probe), and the session confs must be
     # restored on every such path — a leaked provider/partitions setting
@@ -1076,7 +1075,7 @@ def stream_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # A drop with no rows (degenerate fixture: empty events, or all
         # event_id sharing one parity) writes no drop= directory at all —
-        # skip it instead of indexing into an empty listing (r10 ADVICE).
+        # skip it instead of indexing into an empty listing.
         # Fewer staged files just means fewer micro-batches; the fold's
         # semantics don't depend on the batch count.
         for i in range(_TWS_DROPS):
@@ -1098,7 +1097,7 @@ def stream_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         # — ~input_rows/60 per batch (fixture users average ~60 events),
         # so it is input-PROPORTIONAL, just 60x narrower. A literal 0
         # here would pin the memory sink unconditionally and reintroduce
-        # the driver-OOM class the r12 append gate closed (r12 ADVICE):
+        # the driver-OOM class the append-mode sink gate closes:
         # at the 100 TB target, input/60 per batch is still terabytes.
         # Charge the gate the scaled estimate instead: small fixtures
         # (sf0.1 ~2 MB -> ~70 KB estimate) keep the cheap memory sink,
@@ -1109,7 +1108,7 @@ def stream_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             name,
             "append",
             input_bytes=max(1, ev_bytes * _TWS_DROPS // 60),
-            # NO skip_final_nodata_batch here (r14, VERDICT r13 #1 bisect):
+            # NO skip_final_nodata_batch here (r14):
             # this fold has no watermark and no timers, so the availableNow
             # drain never runs a trailing no-data batch AT ALL — probed at
             # sf0.1: batchIds [(0, 50000), (1, 50000)] identical with the

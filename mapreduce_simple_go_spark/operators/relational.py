@@ -1693,7 +1693,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineitem) and folding the global total to a driver scalar makes the
     # HAVING filter a literal comparison: one lineitem scan total.
     #
-    # EAGER-JOB + LIFECYCLE CONTRACT (r12 ADVICE): constructing this
+    # EAGER-JOB + LIFECYCLE CONTRACT: constructing this
     # DataFrame runs TWO Spark jobs up front (the localCheckpoint
     # materialization and the 1-row scalar collect) — callers composing
     # q11 lazily should expect that. localCheckpoint instead of .cache()

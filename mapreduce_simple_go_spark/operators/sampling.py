@@ -260,7 +260,7 @@ def _curated_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
     window rn=1 survivor, lang/source riding along from the same row)
     instead of a full per-group window sort. Its struct-typed buffer is
     not a mutable hash-agg type, so min_by plans as a partial+final
-    SortAggregate (plans/r14/curation_pipeline_after.txt), the same as
+    SortAggregate (check with ``explain()``), the same as
     min(struct) would (measured — the min(struct) form was a wash).
     """
     q = quality_filter(spark, sf_dir).filter(F.col("passes")).select("doc_id")

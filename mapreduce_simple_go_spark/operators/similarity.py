@@ -38,8 +38,8 @@ TOP_K = 5
 QUERY_MOD = 100   # vec_id % QUERY_MOD == 0 -> query vector
 NPROBE = 3
 
-# Workload-constant query-set size for the *_fixedq ANN twins (r12 verdict
-# #6). The default QUERY_MOD contract sets q = n/100, so scored pairs grow
+# Workload-constant query-set size for the *_fixedq ANN twins. The
+# default QUERY_MOD contract sets q = n/100, so scored pairs grow
 # as n^2 across fixture decades and the measured exponents march toward
 # 2.0 BY CONSTRUCTION — the law can never vouch for the production claim
 # "q is a workload constant -> cost linear in corpus". The fixed arm holds
@@ -76,7 +76,8 @@ def _q_where(fixed_q: int | None = None) -> str:
 # LINEARLY in n and the within-cell work (near-dup pairs: sum |cell|^2/2)
 # turns quadratic — measured in the r7 scaling sweep, where the old cap of
 # 256 bound at the 200k-vector 100x fixture and embedding_near_dup_ivf's
-# last-decade ratio hit 12.8x for 10x data (SCALE.md r7 scaling-law table).
+# last-decade ratio hit 12.8x for 10x data (SCALE.md "Coarse quantizer
+# cap").
 # 4096 keeps sqrt sizing honest through n = 16.8M vectors while the
 # broadcast stays a 4096 x 64 float64 matrix = 2 MB and assignment stays one
 # numpy matmul per Arrow batch. Beyond ~10^7 vectors per job, raise it again
@@ -240,7 +241,7 @@ _BLOCK_TIE_MARGIN = 2e-9
 _Q_CHUNK = 2048
 
 
-# Hard gate on the blocked scan's query-side collect (r10 verdict #4):
+# Hard gate on the blocked scan's query-side collect:
 # at most this many query vectors are collected/broadcast per slice.
 # 1M x (64 float64 + id) ~= 0.5 GB — the docstring's own stated broadcast
 # bound, now enforced in code like every other collect in the repo. Above
@@ -974,7 +975,7 @@ ORACLES["embedding_norm_stats"] = EMB_NORM_STATS_SQL
 # SRP-LSH ANN ------------------------------------------------------------------
 
 # Band layout: 8 bands x 8 bits. Sized from the measured cost/recall
-# frontier (scripts/srp_tune.py; table in SCALE.md r7): a band of b bits
+# frontier (scripts/srp_tune.py; table in SCALE.md): a band of b bits
 # collides for an unrelated pair with probability ~2^-b, so candidates per
 # query ~ n * bands / 2^bits_per_band. The original 4x4 layout collided on
 # 1/16 of the corpus per band — candidates ~ n/4, only a 4x prune over
@@ -1178,7 +1179,7 @@ QUERIES["ann_srp_topk"] = ann_srp_topk
 ORACLES["ann_srp_topk"] = ANN_SRP_SQL
 
 
-# --- Workload-constant ANN twins (r12 verdict #6) ---------------------------
+# --- Workload-constant ANN twins ---------------------------------------------
 #
 # The three registry ANN entries define their query set as vec_id %
 # QUERY_MOD == 0, i.e. q = n/100: scored-pair work grows as n*q = n^2/100,

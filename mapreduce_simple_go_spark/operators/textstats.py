@@ -794,7 +794,7 @@ def word_pagerank(
     join (plan: 2 fewer Exchanges per step); the contribution arithmetic
     is unchanged so ranks are bit-identical.
 
-    r14 (guide §5, r13 VERDICT #6): both reused relations materialize via
+    r14 (guide §5): both reused relations materialize via
     ``localCheckpoint(eager=True)`` instead of ``.cache()`` — the caches
     were never unpersisted (a leaked InMemoryRelation per call for any
     library caller; the exact class q11 fixed in r12), and the columnar

@@ -246,8 +246,8 @@ def dedup_events_stream(events: DataFrame, watermark: str = "2 hours") -> DataFr
 
 # Complete-mode sink gate (r8): below this many INPUT bytes the memory sink
 # is safe and ~0.5-1 s cheaper per drain than the parquet round-trip; above
-# it the parquet path removes the driver-size term entirely. Calibration
-# (BENCH_HISTORY r8): the r7 driver OOM happened at the 100x fixture
+# it the parquet path removes the driver-size term entirely. Calibration:
+# the r7 driver OOM happened at the 100x fixture
 # (~187 MB of staged events -> a 9.5 M-row complete result on an 8 GB
 # driver); 32 MB keeps a >5x margin below that while still letting every
 # driver-SF (sf0.001-0.1, <=2 MB) and 10x (17 MB) drain stay on the memory
@@ -622,7 +622,7 @@ def _session_fold_bucketed(key, pdfs, state: GroupState):
     running :func:`_session_fold` per user, with the per-group Python
     overhead amortized ~|bucket| times.
 
-    Why this exists (r11, r10 verdict #6): applyInPandasWithState hands
+    Why this exists (r11): applyInPandasWithState hands
     ONE group per Python call, and each call costs ~1 ms (function call +
     per-group pandas frames) regardless of group size. Keyed by user,
     1M events / 15k users at the 10x fixture spent ~15 s in that per-call
@@ -868,7 +868,7 @@ def run_foreachbatch_upsert(
     bucket-level rewrite granularity, and the checkpoint makes redelivery
     idempotent either way.
 
-    Layout safety (r9, per ADVICE): the sink dir must be empty, absent, or
+    Layout safety (r9): the sink dir must be empty, absent, or
     already in this sink's ``bucket=`` layout with the SAME bucket count.
     A dir holding flat ``*.parquet`` files (e.g. a pre-r8 unbucketed sink)
     fails LOUDLY instead of being treated as empty — the old behavior
@@ -880,10 +880,10 @@ def run_foreachbatch_upsert(
 
     All sink-dir probes and the stamp go through fsutil (Hadoop FS API),
     so ``out_dir`` may be any URI the deployment's Hadoop conf resolves
-    (r9 ADVICE: the prior driver-local ``os.path``/``open`` probes made
-    the layout guard silently no-op for URI sinks — the merge read was
-    skipped, so dynamic partition overwrite DROPPED prior rows in touched
-    buckets, then the stamp write failed late with an unrelated OSError).
+    (driver-local ``os.path``/``open`` probes made the layout guard
+    silently no-op for URI sinks — the merge read was skipped, so dynamic
+    partition overwrite DROPPED prior rows in touched buckets, then the
+    stamp write failed late with an unrelated OSError).
     """
     from .. import fsutil
 

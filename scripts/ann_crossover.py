@@ -6,8 +6,8 @@ sf1 sweep measured 22.7x cost for 10x data); this script replaces the
 brute path and the IVF path on fixtures of increasing embedding count,
 fit brute ~ a*n^2 and ivf ~ b*n + c, and report where brute stops
 winning. Timing uses a noop-sink count of the pair stream (py4j row
-transfer would otherwise dominate the larger fixtures — see
-.claude/../verify notes in BENCH_HISTORY.md).
+transfer, ~10 s per million rows, would otherwise dominate the larger
+fixtures).
 
 Usage: python scripts/ann_crossover.py [fixture_dir ...]
        (default: sf0.01, sf0.1, .localdata/sf1, .localdata/sf10)
@@ -46,7 +46,7 @@ def time_df(df) -> float:
 
 def main_topk() -> None:
     """`--topk`: brute vs blocked-scan crossover for the EXACT top-k entry
-    (r10, r9 verdict #3). Times ann_cosine_topk_brute against the forced
+    (r10). Times ann_cosine_topk_brute against the forced
     _ann_exact_blocked path per fixture; both are exact, so this is purely
     a plan-cost measurement, and the reason ann_cosine_topk always runs
     the blocked scan."""

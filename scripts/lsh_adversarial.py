@@ -11,7 +11,8 @@ one band bucket of ~10^4 members per band — then records:
   plus the post-salt join-group occupancy (must be <= cap+1);
 - the O(k*cap) bound check: salted pairs per band vs C(k,2).
 
-Numbers land in SCALE.md's round-7 section. Reference analog for the
+SCALE.md's "Salted LSH under a degenerate corpus" table records the
+numbers. Reference analog for the
 even-spread reasoning: /root/reference/src/shardctrler/common.go:6-16.
 
 Usage: python scripts/lsh_adversarial.py [base_fixture_dir]

@@ -1,6 +1,6 @@
 """Measure the MinHash-LSH recall frontier on planted near-dup tiers.
 
-r10, per r9 verdict #6: SRP/IVF recall is measured with pinned floors
+SRP/IVF recall is measured with pinned floors
 (scripts/srp_tune.py --planted), but the dedup family pinned only bucket
 occupancy and pair counts — the number a user of near-dedup actually
 needs is RECALL at a given true Jaccard, for the shipped band layout AND
@@ -29,7 +29,8 @@ The pairs sit in a sea of all-unique-word documents. Reported per tier:
   planted bucket holds exactly the pair, cap=2 keeps it in one chunk).
 
 tests/test_lsh_salted.py pins conservative floors under these numbers;
-SCALE.md records the measured table.
+SCALE.md's "MinHash-LSH planted recall frontier" records the measured
+table.
 
 Usage: python scripts/lsh_tune.py [n_sea] [pairs_per_tier]
        (defaults 5000 / 100; writes lsh_recall_out.json + markdown table)

@@ -27,8 +27,9 @@ a drop-in sf_dir for every registry query.
 
 --tables (r11): scale only the named tables (any of documents, embeddings,
 events, orders — lineitem rides with orders) and skip the rest entirely.
-For targeted scale points (the r10-verdict sf100 spot-check needs only
-embeddings + events) this avoids generating a 12 GB lineitem nobody reads.
+For targeted scale points (an sf100 spot-check of the ANN and streaming
+families needs only embeddings + events) this avoids generating a 12 GB
+lineitem nobody reads.
 The output dir is then NOT a drop-in sf_dir for every query — only for
 queries over the named tables.
 

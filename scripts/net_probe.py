@@ -1,12 +1,11 @@
 #!/usr/bin/env python
-"""Failing-soft network probe (r10 verdict #8).
+"""Failing-soft network probe.
 
 The vendored pure-Python protobuf bundle (_vendor/README.md) documents a
 standing conditional: "rebuild from the official PyPI wheel if the
 environment gains network". This probe is how the conditional actually
-fires — run it once per round (see README 'Per-round checklist'); if it
-ever prints NETWORK: yes, rebuild the bundle per _vendor/README.md §Rebuild
-that same round.
+fires — run it now and then (README "Measuring"); if it ever prints
+NETWORK: yes, rebuild the bundle per _vendor/README.md §Rebuild.
 
 Exit code is ALWAYS 0 (the probe must never break a checklist run on the
 expected no-network host); the signal is the printed line.

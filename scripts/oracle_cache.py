@@ -44,7 +44,7 @@ def fixture_digest(sf_dir: str, tables) -> str:
     """Digest of every table file's identity + a content sample.
 
     Per file: (relative name, byte size, mtime_ns) AND the first/last 64 KB
-    of bytes (r9 ADVICE: pure stat keying let an mtime-preserving restore —
+    of bytes (pure stat keying would let an mtime-preserving restore —
     ``cp -p`` / ``tar`` / ``rsync -a`` — of a different same-size fixture
     serve a stale verdict; parquet packs the footer metadata in the tail
     and dictionary/stat pages near the head, so the 128 KB sample moves on

@@ -6,7 +6,7 @@ exponent = log(t_big / t_small) / log(factor). 1.0 = perfectly linear;
 Run AFTER `python scripts/make_scaled_fixture.py` and on an otherwise idle
 host (the documented 2-7x jitter applies; best-of-N takes the min).
 
-Noise defense (r9, per r8 verdict #2): any query whose measured big/small
+Noise defense (r9): any query whose measured big/small
 ratio exceeds the fixture factor (an above-linear reading — exactly the
 numbers that drive scaling-law flags) is automatically RE-MEASURED in a
 fresh isolated subprocess session before it lands in the artifact; both
@@ -17,8 +17,8 @@ noise-vetted at the source instead of relying on per-round manual
 re-measures. `--no-revet` disables (used by the recursion itself).
 
 Usage: python scripts/scale_sweep.py [--passes N] [--out PATH] [--no-revet] [query ...]
-Writes scale_sweep_out.json (or --out) and prints a markdown table for
-BENCH_HISTORY.md.
+Writes scale_sweep_out.json (or --out; git-ignored) and prints a markdown
+table.
 """
 
 from __future__ import annotations
@@ -53,7 +53,7 @@ DEFAULT_QUERIES = [
     "training_corpus_pipeline",
     "ann_ivf_topk",
     "ann_srp_topk",
-    # workload-constant ANN arm (r12 verdict #6): q fixed across SFs, so
+    # workload-constant ANN arm: q fixed across SFs, so
     # these exponents measure the production contract (~linear) instead of
     # the q = n/100 construction's sf^2 pair growth
     "ann_cosine_topk_fixedq",
@@ -114,7 +114,7 @@ def isolated_remeasure(name: str, passes: int) -> dict | None:
     import subprocess
     import tempfile
 
-    # mkstemp, not the race-prone deprecated mktemp (r9 ADVICE): the fd is
+    # mkstemp, not the race-prone deprecated mktemp: the fd is
     # closed immediately — only the unique pathname is needed; the
     # subprocess overwrites the (empty) file via --out.
     fd, out = tempfile.mkstemp(suffix=".json", prefix="revet_")
@@ -152,7 +152,7 @@ def foreign_spark_jvms() -> list[int]:
     called before this process starts its own session).
 
     The r9 sf10 sweep was silently contaminated by a verify bench
-    co-scheduled mid-sweep (r9 verdict); measuring while another Spark JVM
+    co-scheduled mid-sweep; measuring while another Spark JVM
     competes for the same 32 cores produces exactly the uniform inflation
     the noise vetting exists to catch — better to detect it up front.
     """
@@ -268,7 +268,7 @@ def main() -> int:
                    if r["t_big"] / r["t_small"] > FACTOR}
         for name in sorted(flagged):
             _revet_one(name, results[name], "above-linear")
-        # Two-sided (r9 ADVICE): re-vetting ONLY above-linear rows can only
+        # Two-sided: re-vetting ONLY above-linear rows can only
         # move flagged rows toward linear, leaving below-linear rows whose
         # SMALL point was noise-inflated unexamined — a systematic downward
         # bias in the published median exponent. Also re-vet the K

@@ -1,4 +1,4 @@
-"""Per-query scaling exponents from the round's sweep artifacts.
+"""Per-query scaling exponents from the committed sweep artifacts.
 
 Each CORRECTNESS_SELF_* artifact records per-query Spark wall time
 (spark_s) since r7; together with bench_out.json's sf0.1 best-of-2 this
@@ -6,7 +6,7 @@ gives up to four measured points per registry entry. This script fits
 t ∝ (data)^e over the sf0.1 → sf10 span (100x) and prints the registry
 sorted by exponent — the standing way to catch the next cost-law break
 (the r7 run of exactly this analysis caught ann_srp_topk at e=1.35 and
-the K_CENTROIDS cap bind; see SCALE.md "Four-SF scaling law").
+the K_CENTROIDS cap bind; see SCALE.md "Scaling law (vetted)").
 
 Exponent reading: e <= ~0.6 means shuffle/partial-agg machinery is
 absorbing the growth; e ~ 1 is honest linear; e > 1 is super-linear and
@@ -18,13 +18,13 @@ decade means the break is recent).
 Usage: python scripts/scaling_exponents.py [--json] [--vet] [top_n]
        python scripts/scaling_exponents.py --gate [PRIOR] [CURRENT]
 
---gate (r10, per r9 verdict #7): compare the current vetted law against
-the previous one (--vet rotates it to scaling_law_prev.json) and exit 1
-if any entry's fitted exponent worsened by more than GATE_WORSEN (0.15) —
-the round checklist runs this after the sweeps so a cost-law break fails
-loudly instead of waiting for a human to read the table.
+--gate (r10): compare the current vetted law against the previous one
+(--vet rotates it to scaling_law_prev.json) and exit 1 if any entry's
+fitted exponent worsened by more than GATE_WORSEN (0.15) — run it after
+the sweeps so a cost-law break fails loudly instead of waiting for a
+human to read the table.
 
---vet (r9, per r8 verdict #2): the in-sweep spark_s numbers are cache-ORDER
+--vet (r9): the in-sweep spark_s numbers are cache-ORDER
 sensitive — r8's window rotation reordered the sf10 sweep and four entries
 read 1.7-2x slow purely from a cold page cache, producing false
 above-linear flags. With --vet, every row whose last-decade ratio exceeds
@@ -71,7 +71,7 @@ def _vet_row(row: dict) -> None:
     import subprocess
     import tempfile
 
-    # mkstemp, not the race-prone deprecated mktemp (r9 ADVICE)
+    # mkstemp, not the race-prone deprecated mktemp
     fd, out = tempfile.mkstemp(suffix=".json", prefix="vet_")
     os.close(fd)
     env = dict(os.environ)
@@ -176,14 +176,14 @@ def _vet_small_point(row: dict) -> None:
     )
 
 
-GATE_WORSEN = 0.15  # exponent regression that fails the gate (r9 verdict #7)
+GATE_WORSEN = 0.15  # exponent regression that fails the gate
 
 
 def gate(prior_path: str, current_path: str) -> int:
     """`--gate`: fail loudly when any entry's fitted exponent WORSENED by
-    more than GATE_WORSEN vs the previous vetted law (r9 verdict #7 — the
-    vetted law is now trustworthy enough to be a regression gate, not just
-    a report). Both inputs are scaling_law_vetted.json-shaped; entries
+    more than GATE_WORSEN vs the previous vetted law (the noise-vetted law
+    is trustworthy enough to be a regression gate, not just a report).
+    Both inputs are scaling_law_vetted.json-shaped; entries
     missing from either side are reported but don't fail (new operators /
     renames). Exit 1 on regression."""
     with open(prior_path) as f:
@@ -256,7 +256,7 @@ def main() -> int:
         flagged = [r for r in rows if r["last_decade"] > 10]
         for r in flagged:
             _vet_row(r)
-        # Two-sided (r10, mirroring scale_sweep.py's r9-ADVICE fix): also
+        # Two-sided (r10, mirroring scale_sweep.py's vetting): also
         # re-vet the 3 LOWEST-exponent unflagged rows — a below-linear row
         # whose SMALL point (sf0.1, from bench_out.json) was noise-inflated
         # biases the published median downward. The suspect point for

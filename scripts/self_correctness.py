@@ -5,7 +5,7 @@ every registered query against its DuckDB oracle at the driver's scale
 factor and records the same three verdicts (rows/schema/hash) per name, so
 the registry tail has on-record evidence too.
 
-Usage:  python scripts/self_correctness.py [out.json] [--only name1,name2]
+Usage:  python scripts/self_correctness.py out.json [--only name1,name2]
 Env:    SPARK_GRAFT_TEST_SF_DIR (default /root/testdata/sf0.01)
         SPARK_GRAFT_ORACLE_CACHE=0 to disable the oracle-result cache
         (content-keyed on fixture digest + SQL hash — see oracle_cache.py;
@@ -39,7 +39,11 @@ def main() -> int:
         i = argv.index("--only")
         only = set(argv[i + 1].split(","))
         del argv[i : i + 2]
-    out_path = argv[0] if argv else "CORRECTNESS_SELF_r03.json"
+    if len(argv) != 1:
+        print("usage: python scripts/self_correctness.py out.json "
+              "[--only name1,name2]", file=sys.stderr)
+        return 2
+    out_path = argv[0]
     spark = get_spark(app_name="self-correctness")
     duck = duckdb.connect()
     for t in TABLES:
@@ -75,8 +79,8 @@ def main() -> int:
             if cached is not None:
                 # content-keyed hit: same fixture bytes + same oracle SQL
                 # as a previous sweep — the stored (rows, columns, digest)
-                # ARE that oracle run's verdict material (r8 directive 7;
-                # the Spark side above always ran fresh)
+                # ARE that oracle run's verdict material (the Spark side
+                # above always ran fresh)
                 o_n = cached["rows"]
                 o_cols = cached["columns"]
                 o_dig = tuple(cached["digest"])

@@ -4,8 +4,8 @@ For each (bands, bits-per-band) config this sweeps, computes on a real
 fixture: mean candidates per query (the Spark-side cost driver — exact
 scoring + dedup shuffle are linear in it), mean recall@TOP_K against the
 exact brute-force top-k, and wall time of the full ann_srp_topk query.
-The shipped SRP_BANDS/SRP_BITS are chosen from this table (SCALE.md r7
-SRP section keeps the results): 4x4 bands collide on 1/16 of a uniform
+The shipped SRP_BANDS/SRP_BITS are chosen from this table (SCALE.md
+"SRP band layout" keeps the results): 4x4 bands collide on 1/16 of a uniform
 corpus per band — candidates ~ n/4 per query, which is only a 4x prune
 over brute force and therefore still quadratic when the query set scales
 with the corpus (vec_id % QUERY_MOD). Wider bands cut candidates
@@ -14,7 +14,7 @@ geometrically while recall falls only linearly in band count.
 Usage: python scripts/srp_tune.py [sf_dir ...] (default testdata sf0.001/sf0.01/sf0.1)
        python scripts/srp_tune.py --planted   (mid-cosine recall frontier)
 
---planted (r9, per r8 verdict #5): measures planted-neighbor recall at
+--planted (r9): measures planted-neighbor recall at
 EXACT cosine tiers 0.75 / 0.85 / 0.95 — the regime real embedding
 workloads live in, between the uniform-fixture floor (cos ~0.4) and the
 near-dup pin (cos >= 0.93). Each tier plants one exact-cosine neighbor

@@ -1,5 +1,6 @@
 """Tests for bench.py's driver contract: the last stdout line the driver
-parses, and the one-query mode scripts/scaling_exponents.py --vet calls.
+parses, and the one-query mode scripts/scaling_exponents.py --vet calls;
+and for the committed sweep artifacts scripts/scaling_exponents.py fits.
 """
 
 from __future__ import annotations
@@ -7,6 +8,7 @@ from __future__ import annotations
 import importlib.util
 import json
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -74,3 +76,34 @@ def test_one_query_mode_writes_result(tmp_path):
     assert r.returncode == 0, r.stderr[-500:]
     got = json.loads(out.read_text())
     assert got["query"] == "wc" and got["rows"] > 0 and got["sec"] > 0
+
+
+# The committed sweep artifacts scaling_exponents.py reads (`_latest` picks
+# the newest per SF); deleting or renaming either breaks the fit.
+SWEEP_ARTIFACTS = ["CORRECTNESS_SELF_SF1_r14.json", "CORRECTNESS_SELF_SF10_r14.json"]
+
+
+def _scaling_exponents(*args):
+    import subprocess
+
+    return subprocess.run(
+        [sys.executable, os.path.join(REPO, "scripts", "scaling_exponents.py"), *args],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+
+
+def test_scaling_fit_reads_the_committed_sweeps():
+    r = _scaling_exponents()
+    assert r.returncode == 0, r.stderr[-2000:]
+    used = [ln.split()[-1] for ln in r.stderr.splitlines() if ln.startswith("# using ")]
+    assert used == SWEEP_ARTIFACTS
+    assert re.match(r"\d+ queries; median exponent ", r.stdout)
+
+
+def test_scaling_gate_passes_on_committed_law():
+    r = _scaling_exponents("--gate")
+    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
+    assert "# gate: no entry worsened by more than the threshold" in r.stdout

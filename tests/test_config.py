@@ -2,7 +2,8 @@
 
 Tuning values are module constants, the way the reference hard-codes its
 own (R = 10 reduce tasks in mrcoordinator.go), so tier-1 and the benchmark
-cover the one configuration every run uses.
+cover the one configuration every run uses. The code and its docs cite
+only repository files that exist.
 """
 
 from __future__ import annotations
@@ -44,3 +45,41 @@ def test_bench_reads_only_the_driver_contract_settings():
 def test_session_keeps_spark_default_aqe_coalescing(spark):
     key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
     assert spark.conf.get(key) == "true"
+
+
+REPO = Path(__file__).resolve().parent.parent
+CITING = ["mapreduce_simple_go_spark", "scripts", "tests", "README.md", "bench.py", ".claude"]
+# Root-document-style names (upper-case stem, optional round suffix) and
+# plan-dump paths; a citation of either must resolve to a file in the tree.
+DOC_NAME = re.compile(
+    r"\b[A-Z][A-Z0-9_]*(?:_r[0-9]+)?\.(?:md|json|txt)\b|plans/r[0-9]+\S*"
+)
+
+
+def _citing_texts():
+    for entry in CITING:
+        top = REPO / entry
+        for path in [top] if top.is_file() else sorted(top.rglob("*")):
+            if not path.is_file() or "__pycache__" in path.parts or path.suffix == ".zip":
+                continue
+            try:
+                yield path, path.read_text()
+            except UnicodeDecodeError:
+                continue
+
+
+def test_cited_documents_exist():
+    texts = list(_citing_texts())
+    basenames = {path.name for path, _ in texts}
+    cited = {
+        (path.relative_to(REPO).as_posix(), m.group(0).rstrip(".,:;)'\"`"))
+        for path, text in texts
+        for m in DOC_NAME.finditer(text)
+    }
+    assert cited
+    missing = sorted(
+        (where, name)
+        for where, name in cited
+        if not (REPO / name).exists() and name not in basenames
+    )
+    assert missing == []

@@ -1,7 +1,7 @@
 """The size gates and stream staging must be deployment-agnostic (r9).
 
-r8 verdict blemish: three paths (ngram size gate, complete-mode scratch
-dir, stream staging) assumed driver-local POSIX fixture paths via
+Three paths (ngram size gate, complete-mode scratch
+dir, stream staging) used to assume driver-local POSIX fixture paths via
 ``os.stat`` / ``os.listdir`` / ``os.symlink``. They now route through
 ``fsutil`` (Hadoop FileSystem resolved from the path's own scheme). The
 probative vehicle here is a ``file:``-SCHEME URI: it resolves through the
@@ -63,7 +63,7 @@ def test_du_bytes_on_directory(spark, tmp_path):
 def test_du_suffix_bytes_matches_stat_sum(spark, tmp_path):
     """du_suffix_bytes == the original per-*.parquet os.stat sum, on a
     plain fixture file AND a Spark-written dir (where ContentSummary-based
-    du_bytes also counts _SUCCESS/.crc — the r9 ADVICE gate drift). This
+    du_bytes also counts _SUCCESS/.crc, which drifts the gate). This
     equality is the exemption evidence for the r10 events-probe change."""
     p = os.path.join(SF_DIR, "documents.parquet")
     want_file = os.stat(p).st_size

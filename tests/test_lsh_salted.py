@@ -143,7 +143,7 @@ def test_salted_runtime_reuses_band_index(spark):
 
 @pytest.mark.slow
 def test_salted_ten_thousand_dupe_bucket_linear_pairs(spark):
-    """The round-6 verdict's adversarial shape at full size: ONE band
+    """The adversarial degenerate-corpus shape at full size: ONE band
     bucket holding 10^4 identical docs. The salted join must emit pairs
     linear in k (chain of cap-sized cliques: per band ceil(k/cap) groups
     of <= cap+1 members), stay one connected component, and never build a
@@ -199,7 +199,7 @@ def test_salted_ten_thousand_dupe_bucket_linear_pairs(spark):
 
 
 def test_planted_jaccard_recall_floors(spark):
-    """r10 (r9 verdict #6): measured recall floors for the SHIPPED band
+    """r10: measured recall floors for the SHIPPED band
     layout (16 perms, 4 bands x 4 rows) on planted exact-Jaccard pairs —
     the number a near-dedup user needs, now pinned instead of assumed.
     Analytic collision expectation 1-(1-J^4)^4: 0.99 @ J=0.9,

@@ -4,7 +4,7 @@ The cache (scripts/oracle_cache.py) keys on (fixture content digest,
 oracle-SQL hash): any oracle edit or fixture regeneration MUST miss, and a
 hit must return exactly the stored verdict material. Spark results are
 never cached — only the DuckDB oracle side, whose re-runs dominated the
-at-scale sweep wall clock (r8 verdict directive 7).
+at-scale sweep wall clock.
 """
 
 from __future__ import annotations
@@ -63,7 +63,7 @@ def test_fixture_regeneration_invalidates(tmp_path, monkeypatch):
 
 
 def test_mtime_preserving_restore_invalidates(tmp_path):
-    """r9 ADVICE: a different fixture restored with identical size AND
+    """A different fixture restored with identical size AND
     mtime (cp -p / tar / rsync -a) must still miss — the digest now
     samples file content (first/last 64 KB), not just stat metadata.
     Also true when only MIDDLE-adjacent tail bytes differ on a file larger
@@ -129,3 +129,19 @@ def test_sweep_second_run_hits_and_stays_green(tmp_path):
     assert first["hash_match"] and "oracle_cached" not in first
     assert second["hash_match"] and second.get("oracle_cached") is True
     assert second["oracle_rows"] == first["oracle_rows"]
+
+
+def test_sweep_without_output_path_exits_2_and_writes_nothing(tmp_path):
+    """The output path is required: run with no argument, the sweep prints
+    its usage and exits 2 before building a session, and writes no file
+    into the working directory."""
+    r = subprocess.run(
+        [sys.executable, os.path.join(REPO, "scripts", "self_correctness.py")],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 2, r.stderr[-2000:]
+    assert "usage:" in r.stderr
+    assert list(tmp_path.iterdir()) == []

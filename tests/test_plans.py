@@ -257,7 +257,7 @@ def test_q11_total_is_broadcast_single_row(spark):
     materialized per_part + driver-scalar total, so the returned plan
     reads the materialized intermediate and carries the threshold as a
     LITERAL — zero lineitem rescans, no join of the aggregate against
-    itself. r13 (r12 ADVICE): the materialization moved from a
+    itself. r13: the materialization moved from a
     session-lifetime .cache() (leaked one InMemoryRelation per call) to
     localCheckpoint, so the pin is now the checkpoint's RDD scan."""
     from mapreduce_simple_go_spark.operators.relational import q11_important_stock
@@ -389,7 +389,7 @@ def test_pagerank_iteration_joins_have_partial_aggregation(spark):
 
 
 def test_pagerank_and_simhash_leave_no_cached_relation(spark):
-    """r14 cache-hygiene pins (r13 VERDICT #6): the reused intermediates
+    """r14 cache-hygiene pins: the reused intermediates
     (pagerank's ew/nodes, simhash's signature set) materialize via
     localCheckpoint / are unpersisted before return — a registry call must
     not leave a session-lifetime InMemoryRelation behind."""

@@ -72,7 +72,7 @@ def test_ensure_protobuf_discovers_bundle_or_reports_absence():
 
 
 def test_incomplete_bundle_fails_loudly_at_registration(tmp_path):
-    """r10 (r9 verdict #4a): a fallback bundle that ACTIVATES (google.
+    """r10: a fallback bundle that ACTIVATES (google.
     protobuf imports) but cannot satisfy pyspark's gencode import surface
     must raise a RuntimeError pointing at the vendor README — at
     registration time on the driver, not as an opaque ImportError inside a
@@ -119,7 +119,7 @@ def test_incomplete_bundle_fails_loudly_at_registration(tmp_path):
 
 
 def test_incomplete_bundle_unwinds_and_next_fallback_wins(tmp_path):
-    """r11 (r10 ADVICE): an activating-but-incomplete bundle must be fully
+    """r11: an activating-but-incomplete bundle must be fully
     unwound (sys.path, PYTHONPATH, cached google.* modules) and the NEXT
     fallback probed — a stale first bundle must not mask a later complete
     one, nor leave the process half-configured. Simulated with a broken
@@ -158,7 +158,7 @@ def test_incomplete_bundle_unwinds_and_next_fallback_wins(tmp_path):
 
 
 def test_unwind_spares_host_owned_google_modules(tmp_path):
-    """r12 (r11 ADVICE): the incomplete-bundle unwind must purge ONLY
+    """r12: the incomplete-bundle unwind must purge ONLY
     google.* modules loaded from the failed bundle dir — a host-owned
     google.* package imported earlier by unrelated code (google.auth et
     al.) must keep its sys.modules entry, because importers hold live

@@ -3,7 +3,7 @@
 ``stream_user_totals_tws`` (the 148th registry entry) registers only when a
 ``google.protobuf`` runtime resolves. Round 7's discovery depended entirely
 on a google-cloud-sdk install being present on the host — fragile by
-construction (r7 verdict #5). Round 8 vendors the pure-Python runtime as a
+construction. Round 8 vendors the pure-Python runtime as a
 zipimport-able archive inside the package; these tests prove each fallback
 entry works ALONE, in a subprocess (discovery mutates process-global
 sys.path/env, so isolation is mandatory), all the way through pyspark's
@@ -32,7 +32,7 @@ entries = json.loads(sys.argv[1])
 # under test are exercised UNCONDITIONALLY. Without this, a host that has
 # protobuf installed lets ensure_protobuf() return True before probing the
 # zip and the test passes vacuously exactly where drift-proofing is meant
-# to be guaranteed (r8 ADVICE). The finder vetoes any google.* spec whose
+# to be guaranteed. The finder vetoes any google.* spec whose
 # origin resolves outside the entries under test; fallback-zip resolutions
 # (origin prefixed by the entry path) pass through untouched.
 import importlib.machinery as M
@@ -89,14 +89,13 @@ def _probe(entries: list[str]) -> dict:
 def test_vendored_zip_alone_satisfies_gencode():
     """Registration survives removal of every HOST discovery path: the
     vendored zip alone resolves google.protobuf and pyspark's gencode
-    roundtrips (this is the r8 drift-proofing directive's 'survives
-    removal of the first discovery path', with the host bundle gone).
+    roundtrips (drift-proofing: registration survives removal of the
+    first discovery path, with the host bundle gone).
 
     The probe blocks any real google.protobuf install, so this assertion
     is strict on EVERY host: the vendored zip must be the active runtime
-    (no silent real-install escape — r8 ADVICE flagged the old
-    `or active is None` clause as making the test vacuous exactly on
-    hosts with protobuf installed)."""
+    (no silent real-install escape — an `or active is None` clause would
+    make the test vacuous exactly on hosts with protobuf installed)."""
     out = _probe([VENDORED])
     assert out["ensured"] and out.get("roundtrip")
     assert out["active"] == VENDORED

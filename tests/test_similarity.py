@@ -369,7 +369,7 @@ SELECT vec_id, cell FROM assign ORDER BY vec_id
 
 
 def test_srp_recall_mid_cosine_tiers(spark, tmp_path):
-    """Mid-cosine recall frontier (r9, per r8 verdict #5): the planted pin
+    """Mid-cosine recall frontier (r9): the planted pin
     at cos >= 0.93 covers the near-dup regime, but real embedding retrieval
     lives at cos 0.7-0.9. Plant EXACT-cosine neighbors (dup = cos*v_hat +
     sqrt(1-cos^2)*orthonormal noise) and bound the 8x8 layout's recall per
@@ -400,7 +400,7 @@ def test_srp_recall_mid_cosine_tiers(spark, tmp_path):
 
 
 def test_exact_blocked_topk_bit_identical_to_brute(spark):
-    """r10 (r9 verdict #3): the blocked-scan exact top-k must be
+    """r10: the blocked-scan exact top-k must be
     BIT-identical to the join brute — same IEEE scoring sequence, same
     9-dp rounding, same (cosine DESC, vec_id ASC) tie-break — because the
     registry entry runs the blocked scan in place of the brute, so the
@@ -447,7 +447,7 @@ def test_exact_blocked_topk_tie_margin_survives_tiny_blocks(spark):
 
 
 def test_blocked_topk_sliced_path_hash_identical(spark, monkeypatch):
-    """r11 (r10 verdict #4): the query-side collect is hard-gated at
+    """r11: the query-side collect is hard-gated at
     _BLOCKED_QUERY_SLICE_ROWS — above it the query set splits into
     contiguous query_id ranges, each an independent one-pass scan.
     Forcing a tiny slice bound (several slices, at least one uneven) must

@@ -314,7 +314,7 @@ def test_watermark_drops_data_later_than_allowance(spark, tmp_path):
 
 
 def test_session_fold_bucketed_equivalence(spark, tmp_path):
-    """r11 (r10 verdict #6): the bucket-keyed sessionizer must emit, per
+    """r11: the bucket-keyed sessionizer must emit, per
     micro-batch, EXACTLY the per-user fold's rows — including 'timeout'
     closures — on a 3-batch drain engineered to exercise every path:
 
@@ -1018,7 +1018,7 @@ def _mini_upsert_drain(spark, tmp_path, rows, out, ckpt, tag="0"):
 
 
 def test_foreachbatch_upsert_bucket_count_env_knob(spark, tmp_path, monkeypatch):
-    """UPSERT_BUCKETS is a knob (r9, per r8 verdict #4): a different bucket
+    """UPSERT_BUCKETS is a knob (r9): a different bucket
     count must still converge to max-version-wins state, and the sink layout
     must actually use that count (bucket ids bounded by it, stamp recorded)."""
     import os
@@ -1072,8 +1072,8 @@ def test_foreachbatch_upsert_refuses_bucket_count_mismatch(spark, tmp_path, monk
 def test_foreachbatch_upsert_refuses_flat_parquet_layout(spark, tmp_path):
     """A sink dir holding flat (non-bucketed) parquet files — e.g. a pre-r8
     unbucketed sink — must fail loudly instead of being treated as empty
-    (r8 ADVICE: the old check silently dropped those rows from the merge
-    and left a mixed layout)."""
+    (a check that treats it as empty silently drops those rows from the
+    merge and leaves a mixed layout)."""
     import pytest as _pytest
 
     out = str(tmp_path / "out")
@@ -1087,7 +1087,7 @@ def test_foreachbatch_upsert_refuses_flat_parquet_layout(spark, tmp_path):
 
 
 def test_foreachbatch_upsert_uri_sink_merges_prior_rows(spark, tmp_path, monkeypatch):
-    """URI out_dir end-to-end (r9 ADVICE, medium): with the pre-r10
+    """URI out_dir end-to-end (r9): with the pre-r10
     driver-local probes, a ``file:``-URI sink made _check_layout_and_stamp
     silently no-op and skipped the existing-bucket read, so dynamic
     partition overwrite DROPPED prior rows in touched buckets and the

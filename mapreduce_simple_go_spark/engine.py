@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from .operators import all_queries
 from .operators.mapreduce import (
-    DEFAULT_N_REDUCE,
     MapF,
     ReduceF,
     map_reduce_files,
@@ -45,7 +44,7 @@ class Engine:
         inputs: DataFrame,
         mapf: MapF,
         reducef: ReduceF,
-        n_reduce: int = DEFAULT_N_REDUCE,
+        n_reduce: int | None = None,
         combinef: ReduceF | None = None,
     ) -> DataFrame:
         return map_reduce_kv(self.spark, inputs, mapf, reducef, n_reduce, combinef)
@@ -55,7 +54,7 @@ class Engine:
         path_glob: str,
         mapf: MapF,
         reducef: ReduceF,
-        n_reduce: int = DEFAULT_N_REDUCE,
+        n_reduce: int | None = None,
     ) -> DataFrame:
         return map_reduce_files(self.spark, path_glob, mapf, reducef, n_reduce)
 
@@ -81,15 +80,17 @@ class Engine:
         """Run ANSI SQL against the fixture tables (registered as temp views).
 
         The full Spark SQL dialect — the query surface the reference never
-        had. ``events`` is registered with its timestamp normalized.
+        had. ``events`` is registered with its timestamp normalized; only
+        tables named in ``query`` are read (each read infers a schema).
         """
         import os
+        import re
 
         from .sources import load_events
 
         for name in self.FIXTURE_TABLES:
             path = os.path.join(sf_dir, f"{name}.parquet")
-            if not os.path.exists(path):
+            if not os.path.exists(path) or not re.search(rf"\b{name}\b", query, re.I):
                 continue
             df = (
                 load_events(self.spark, sf_dir)

@@ -13,9 +13,11 @@ has the identical limitation, its map outputs all cross the shuffle,
 worker.go:92-94).
 
 Execution mapping (SURVEY.md §3.1): wholeTextFiles -> flatMap(mapf) ->
-groupByKey(R) -> mapValues(reducef). Spark supplies the scheduler, phase
+groupByKey(R) -> map(reducef). Spark supplies the scheduler, phase
 barrier, shuffle, straggler re-execution, and atomic output commit that
-coordinator.go/worker.go hand-roll (E10-E15).
+coordinator.go/worker.go hand-roll (E10-E15). R defaults to the session's
+``defaultParallelism`` (its cores); ``n_reduce=10`` reproduces the
+reference's fixed R (mrcoordinator.go:23) and its ten ``mr-out`` files.
 
 Every *named* query also has a pure-DataFrame implementation in the sibling
 modules — that is the scale path; this API is the compatibility veneer.
@@ -25,15 +27,12 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterable
 
+from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
-
-from ..sources import whole_text_files
 
 KeyValue = tuple[str, str]
 MapF = Callable[[str, str], Iterable[KeyValue]]
 ReduceF = Callable[[str, list[str]], str]
-
-DEFAULT_N_REDUCE = 10  # the reference's hard-coded R (mrcoordinator.go:23)
 
 
 # Map-side partial values per key accumulated before an in-flight combine
@@ -42,12 +41,33 @@ DEFAULT_N_REDUCE = 10  # the reference's hard-coded R (mrcoordinator.go:23)
 _COMBINE_CHUNK = 1024
 
 
+def _map_reduce_pairs(spark: SparkSession, pairs: RDD, mapf: MapF, reducef: ReduceF,
+                      n_reduce: int | None, combinef: ReduceF | None) -> DataFrame:
+    mapped = pairs.flatMap(lambda kv: mapf(kv[0], kv[1]))
+    if combinef is not None:
+
+        def _partition_combine(it):
+            acc: dict[str, list[str]] = {}
+            for k, v in it:
+                bucket = acc.setdefault(k, [])
+                bucket.append(v)
+                if len(bucket) >= _COMBINE_CHUNK:
+                    acc[k] = [combinef(k, bucket)]
+            for k, vs in acc.items():
+                yield (k, combinef(k, vs))
+
+        mapped = mapped.mapPartitions(_partition_combine)
+    r = n_reduce or spark.sparkContext.defaultParallelism
+    out = mapped.groupByKey(r).map(lambda kv: (kv[0], reducef(kv[0], list(kv[1]))))
+    return spark.createDataFrame(out, schema="key string, value string")
+
+
 def map_reduce_kv(
     spark: SparkSession,
     inputs: DataFrame,
     mapf: MapF,
     reducef: ReduceF,
-    n_reduce: int = DEFAULT_N_REDUCE,
+    n_reduce: int | None = None,
     combinef: ReduceF | None = None,
 ) -> DataFrame:
     """Run a MapReduce job over (key, value) input rows.
@@ -74,28 +94,8 @@ def map_reduce_kv(
     aggregation, now available to raw-UDF jobs (differentially tested:
     combiner on == combiner off == DuckDB oracle).
     """
-    c0, c1 = inputs.columns[0], inputs.columns[1]
-    rdd = inputs.select(c0, c1).rdd.map(lambda r: (r[0], r[1]))
-    mapped = rdd.flatMap(lambda kv: mapf(kv[0], kv[1]))
-    if combinef is not None:
-
-        def _partition_combine(it):
-            acc: dict[str, list[str]] = {}
-            for k, v in it:
-                bucket = acc.setdefault(k, [])
-                bucket.append(v)
-                if len(bucket) >= _COMBINE_CHUNK:
-                    acc[k] = [combinef(k, bucket)]
-            for k, vs in acc.items():
-                yield (k, combinef(k, vs))
-
-        mapped = mapped.mapPartitions(_partition_combine)
-    out = (
-        mapped
-        .groupByKey(numPartitions=n_reduce)
-        .map(lambda kv: (kv[0], reducef(kv[0], list(kv[1]))))
-    )
-    return spark.createDataFrame(out, schema="key string, value string")
+    rows = inputs.select(*inputs.columns[:2]).rdd
+    return _map_reduce_pairs(spark, rows, mapf, reducef, n_reduce, combinef)
 
 
 def map_reduce_files(
@@ -103,19 +103,17 @@ def map_reduce_files(
     path_glob: str,
     mapf: MapF,
     reducef: ReduceF,
-    n_reduce: int = DEFAULT_N_REDUCE,
+    n_reduce: int | None = None,
 ) -> DataFrame:
     """Reference entry point: file glob in, (key, value) rows out.
 
-    Mirrors ``mrcoordinator pg*.txt`` + workers (test-mr.sh:74-83): one
-    (filename, contents) record per file via
-    :func:`~mapreduce_simple_go_spark.sources.whole_text_files`, R reduce
-    partitions. Map tasks hold whole files but are not one per file:
-    wholeTextFiles packs all files into about ``min(defaultParallelism, 2)``
-    partitions.
+    Mirrors ``mrcoordinator pg*.txt`` + workers (test-mr.sh:74-83). The
+    ``wholeTextFiles`` (filename, contents) pairs feed the map directly, in
+    about ``min(defaultParallelism, 2)`` partitions, not one per file. R
+    defaults to ``defaultParallelism``; ``n_reduce=10`` is the reference's R.
     """
-    inputs = whole_text_files(spark, path_glob)
-    return map_reduce_kv(spark, inputs, mapf, reducef, n_reduce)
+    pairs = spark.sparkContext.wholeTextFiles(path_glob)
+    return _map_reduce_pairs(spark, pairs, mapf, reducef, n_reduce, None)
 
 
 def map_reduce_sequential(

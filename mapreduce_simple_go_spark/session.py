@@ -1,9 +1,9 @@
 """The engine's one SparkSession factory, with scale-oriented defaults.
 
-The reference engine hard-codes its parallelism (M = number of input files,
-R = 10 reduce tasks, in the reference's mrcoordinator.go). Tuning here is
-hard-coded the same way, as module constants, so every operator inherits
-one configuration that holds up on a real cluster:
+Tuning is hard-coded as module constants, so every operator inherits one
+configuration that holds up on a real cluster. The raw-UDF MapReduce path's
+R is the session's parallelism, not the reference's fixed R = 10
+(mrcoordinator.go; ``n_reduce=10`` reproduces it). The constants give:
 
 - AQE on (runtime coalescing of shuffle partitions + skew-join splitting),
 - Arrow for any pandas exchange,

@@ -1,8 +1,10 @@
 """The runtime package reads only deployment settings from the environment.
 
 Tuning values are module constants, the way the reference hard-codes its
-own (R = 10 reduce tasks in mrcoordinator.go), so tier-1 and the benchmark
-cover the one configuration every run uses. The code and its docs cite
+own, so tier-1 and the benchmark cover the one configuration every run
+uses. The raw-UDF path's R is the exception that follows the session: it
+defaults to ``defaultParallelism`` where the reference fixes R = 10 in
+mrcoordinator.go, and ``n_reduce=10`` reproduces the reference. The code and its docs cite
 only repository files that exist.
 """
 

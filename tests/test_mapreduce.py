@@ -71,10 +71,9 @@ def test_text_sink_roundtrip(engine, doc_inputs, spark, tmp_path):
     out = engine.map_reduce(doc_inputs, mr.wc_map, mr.wc_reduce, n_reduce=4)
     path = str(tmp_path / "mr-out")
     engine.save_text_kv(out, path)
-    lines = spark.read.text(path)
-    assert lines.count() == out.count()
-    first = lines.first().value
-    assert len(first.split(" ")) == 2
+    written = sorted(tuple(r.value.split(" ")) for r in spark.read.text(path).collect())
+    assert written and all(len(kv) == 2 for kv in written)
+    assert written == sorted_rows(out)
 
 
 def test_engine_sql_surface(engine):
@@ -88,6 +87,42 @@ def test_engine_sql_surface(engine):
     )
     rows = df.collect()
     assert len(rows) > 0 and all(r.n > 0 for r in rows)
+
+
+def test_engine_sql_reads_only_the_tables_it_names(engine, spark):
+    """Each schema-less parquet read runs a Spark job to infer the schema,
+    so a one-table query builds with exactly one job, not one per fixture
+    table."""
+    sc = spark.sparkContext
+    sc.setJobGroup("engine-sql-build", "Engine.sql build")
+    try:
+        engine.sql("SELECT count(*) FROM region", SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker learns of jobs through the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("engine-sql-build")) == 1
+
+
+def test_engine_sql_matches_table_names_case_insensitively(engine, spark):
+    """SQL identifiers are case-insensitive, so the table filter must be
+    too: with no fixture view left over from earlier tests, an upper-case
+    join must find both tables and equal the same SQL on views registered
+    by hand."""
+    query = """
+        SELECT o_orderstatus, COUNT(*) AS n, SUM(l_quantity) AS qty
+        FROM LINEITEM JOIN ORDERS ON l_orderkey = o_orderkey
+        GROUP BY o_orderstatus
+    """
+    for name in Engine.FIXTURE_TABLES:
+        spark.catalog.dropTempView(name)
+    got = sorted_rows(engine.sql(query, SF_DIR))
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    assert views & set(Engine.FIXTURE_TABLES) == {"lineitem", "orders"}
+    for name in ("lineitem", "orders"):
+        spark.read.parquet(f"{SF_DIR}/{name}.parquet").createOrReplaceTempView(name)
+    want = sorted_rows(spark.sql(query))
+    assert got and got == want
 
 
 def test_engine_sql_events_ts_normalized(engine):
@@ -152,6 +187,32 @@ def test_wc_combiner_on_equals_off_equals_oracle(engine, doc_inputs, spark, duck
     assert rows_on == sorted_rows(off) == sorted_rows(ref_form)
     want = sorted((w, str(c)) for w, c in duck.execute(WORD_COUNT_SQL).fetchall())
     assert rows_on == want
+
+
+def test_combiner_in_flight_collapse(engine, doc_inputs, spark, duck, monkeypatch):
+    """With a chunk of 2, every repeated word in a map partition goes
+    through the combiner's in-flight collapse (``len(bucket) >=
+    _COMBINE_CHUNK``); the result must still equal the no-combiner job and
+    the DuckDB oracle. The nested combine function is pickled by value,
+    globals included, so the patched chunk reaches the Python workers."""
+    from mapreduce_simple_go_spark.operators.text import WORD_COUNT_SQL
+
+    monkeypatch.setattr(mr, "_COMBINE_CHUNK", 2)
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted_sum(key, values):
+        calls.add(1)
+        return mr.wc_sum_reduce(key, values)
+
+    on = sorted_rows(engine.map_reduce(
+        doc_inputs, mr.wc_map, mr.wc_sum_reduce, combinef=counted_sum
+    ))
+    off = sorted_rows(engine.map_reduce(doc_inputs, mr.wc_map, mr.wc_sum_reduce))
+    want = sorted((w, str(c)) for w, c in duck.execute(WORD_COUNT_SQL).fetchall())
+    assert on == off == want
+    # the end-of-partition combine alone calls it at most once per key and
+    # map partition; more calls mean the in-flight collapse ran
+    assert calls.value > len(want) * doc_inputs.rdd.getNumPartitions()
 
 
 def test_combiner_shrinks_shuffle(doc_inputs):

@@ -50,6 +50,39 @@ def test_map_reduce_files_end_to_end(spark, tmp_path):
     assert got == dict(want)
 
 
+def _read_text_kv(path) -> dict[str, str]:
+    got = {}
+    for name in os.listdir(path):
+        if name.startswith("part-"):
+            with open(os.path.join(path, name), encoding="utf-8") as f:
+                for line in f.read().splitlines():
+                    k, v = line.split(" ")
+                    assert k not in got, f"key {k!r} written twice"
+                    got[k] = v
+    return got
+
+
+def test_map_reduce_files_reduce_partitions(spark, tmp_path):
+    """R defaults to the session's parallelism; ``n_reduce=10`` gives the
+    reference's ten mr-out files. Both commit the same key -> value map."""
+    path, _ = _dump_docs_as_files(spark, tmp_path)
+    glob = os.path.join(path, "*.txt")
+    eng = Engine(spark)
+    default = eng.map_reduce_files(glob, mr.wc_map, mr.wc_reduce)
+    n = spark.sparkContext.defaultParallelism
+    assert default.rdd.getNumPartitions() == n
+    reference = eng.map_reduce_files(glob, mr.wc_map, mr.wc_reduce, n_reduce=10)
+    sinks = []
+    for name, df, parts in (("default", default, n), ("reference", reference, 10)):
+        out = tmp_path / name
+        eng.save_text_kv(df, str(out))
+        files = os.listdir(out)
+        assert len([f for f in files if f.startswith("part-")]) == parts
+        assert "_SUCCESS" in files
+        sinks.append(_read_text_kv(out))
+    assert sinks[0] and sinks[0] == sinks[1]
+
+
 def test_csv_json_text_roundtrip(spark, tmp_path):
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").limit(100)
     base = orders.select(

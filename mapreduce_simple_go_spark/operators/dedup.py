@@ -68,7 +68,8 @@ def doc_shingles(
 
     posexplode keeps the token ARRAY in scope, so the n-gram is built by
     direct index (element_at(t, pos+k)) in the SAME codegen stage as the
-    explode — no shuffle at all until the distinct. r13 (guide §2.4): the
+    explode — no shuffle at all until the distinct. r13 (remove a wide
+    shuffle outright): the
     previous formulation shuffled every raw token row through a
     doc_id-window (partitionBy doc_id ORDER BY pos + lead()) just to see
     the next n-1 tokens, paying a full-corpus Exchange + per-doc sort
@@ -631,7 +632,8 @@ def dedup_ngram_jaccard(
     over full shingle sets (no fan-out protection — only safe on corpora
     known to lack boilerplate shingles).
     """
-    # Materialize the per-shingle doc lists ONCE (r14, guide §2.4/§5):
+    # Materialize the per-shingle doc lists ONCE (r14, never evaluate
+    # one subtree twice):
     # Spark performs no common-subexpression elimination across a plan
     # tree, so when both the candidate branch and the sizes branch hung
     # off sh_capped, the rare aggregation AND the capped join executed
@@ -654,7 +656,7 @@ def dedup_ngram_jaccard(
         .agg(F.count("*").alias("n"))
     )
     # Candidate pairs by per-shingle enumeration, not a self-join (r14,
-    # guide §2.4): emit each ordered pair once per shared shingle via
+    # remove one side of a join outright): emit each ordered pair once per shared shingle via
     # posexplode + slice — the classic MapReduce pairs pattern. vs the
     # r7-r13 a⋈b shingle self-join this removes one whole side of the
     # join (its exchange read + sort/hash build); the only wide operation
@@ -1732,8 +1734,8 @@ def line_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     only kept spans.
     """
     docs = _docs(spark, sf_dir)
-    # r13 (guide §4.2's CollapseProject corollary, same hazard _bigram_edges
-    # documents): the former transform(span_idx, i -> slice(toks, ...))
+    # r13 (CollapseProject inlines a projected column into every lambda
+    # that reads it, the same hazard _bigram_edges documents): the former transform(span_idx, i -> slice(toks, ...))
     # embedded the FULL tokenizer expression inside the lambda, so the
     # interpreted HOF re-ran split+filter once PER SPAN — O(len²/W) splits
     # per document. Tokenize once into an attribute bound by the Generate

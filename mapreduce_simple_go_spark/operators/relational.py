@@ -172,8 +172,8 @@ def q3_bucketed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     suffix = uuid.uuid4().hex[:8]
     ot, lt = f"orders_bkt_{suffix}", f"lineitem_bkt_{suffix}"
     try:
-        # Ingest only the columns the serving query reads (guide §2.3
-        # "project before the exchange" / §6 column pruning, r13): the
+        # Ingest only the columns the serving query reads (project before
+        # the exchange, r13): the
         # bucketed write IS this operator's one exchange, and it was
         # shuffling + writing all 9 orders / 16 lineitem columns to serve
         # a query that reads 5 and 3. Projection cuts the ingest shuffle
@@ -181,7 +181,7 @@ def q3_bucketed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # column-pruned either way, so the hash is unchanged.
         #
         # The two ingests are INDEPENDENT jobs — submit them concurrently
-        # (guide §2.6 "overlap independent jobs") so the lineitem write's
+        # (overlap independent jobs) so the lineitem write's
         # tasks back-fill the cores the orders write's tail leaves idle;
         # Spark's scheduler runs concurrent actions FIFO, which is exactly
         # the back-fill behavior wanted. Same at scale: the ingest wall
@@ -1465,8 +1465,8 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier, so the former second branch (a distinct over the late lines
     joined back onto the profile: a second lineitem⋈orders evaluation plus
     two more fact-wide Exchanges) collapses into the aggregate itself
-    (guide §2.4: remove shuffles outright / don't evaluate a fact subtree
-    twice; r13). The qualifying orders then aggregate by that supplier —
+    (remove shuffles outright and don't evaluate a fact subtree twice;
+    r13). The qualifying orders then aggregate by that supplier —
     a #orders-sized shuffle, not a fact one. Top-20 via
     TakeOrderedAndProject.
     """

@@ -252,7 +252,7 @@ def _curated_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
     group (min doc_id per md5(text) — the dedup_exact retention rule).
     Returns (doc_id, lang, source, digest).
 
-    r14 (guide §2.3 — shuffle fewer bytes): neither consumer reads text;
+    r14 (shuffle fewer bytes): neither consumer reads text;
     the split hash downstream is a function of the digest itself. So the
     dedup exchange carries (digest, doc_id, lang, source) — never the
     document body — and the min-doc_id retention is a partially

@@ -72,7 +72,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     All ratios are double divisions of integer counts computed identically
     in both engines, so the score is bit-reproducible.
     """
-    # ONE scan, zero joins (r14, guide §2.4): the old form joined
+    # ONE scan, zero joins (r14, remove the join outright): the old form joined
     # token_stats back onto documents just to re-attach `text` — a
     # doc_id-keyed self-join of two scans of the SAME table. Every
     # signal is a per-row property; compute them in one projection.
@@ -196,7 +196,8 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash — robust to word-order-preserving edits far from the minimum),
     alongside the exact md5 digest and distinct-shingle cardinality.
 
-    ONE narrow pass, zero shuffles (r14, guide §2.4): every output value
+    ONE narrow pass, zero shuffles (r14, remove the wide ops outright):
+    every output value
     is a per-document property, so the old explode → groupBy(doc_id) →
     join-back-onto-docs plan (two corpus scans, one Exchange, one join)
     is computed instead as per-row array expressions over a
@@ -556,7 +557,8 @@ def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary64 divisions of exact integer counts — bit-identical
     cross-engine.
 
-    r14 note (guide §1 — measured, rejected): a zero-shuffle per-row
+    r14 note (a rewrite is kept only if it measures faster; this one was
+    rejected): a zero-shuffle per-row
     rewrite (sort each doc's token/bigram array, one aggregate() fold
     computing max-run = top count and run count = distinct count) was
     built, EQ-verified and A/B'd: sf0.1 0.66/0.72 -> 0.87/0.98 min/median
@@ -786,7 +788,8 @@ def word_pagerank(
 ) -> DataFrame:
     """Integer PageRank (damping 0.85) over the bigram graph, ``iters`` steps.
 
-    r13 (guide §2.4/§5): the out-weight is a property of the EDGE LIST, not
+    r13 (hoist loop-invariant work out of the loop): the out-weight is a
+    property of the EDGE LIST, not
     of the iteration — join it onto the edges ONCE before the loop
     (w/ow ride the same row), instead of re-running the groupBy("a") +
     second join inside every iteration; ``nodes`` is likewise reused
@@ -794,7 +797,8 @@ def word_pagerank(
     join (plan: 2 fewer Exchanges per step); the contribution arithmetic
     is unchanged so ranks are bit-identical.
 
-    r14 (guide §5): both reused relations materialize via
+    r14 (materialize a reused relation once, and release it): both
+    reused relations materialize via
     ``localCheckpoint(eager=True)`` instead of ``.cache()`` — the caches
     were never unpersisted (a leaked InMemoryRelation per call for any
     library caller; the exact class q11 fixed in r12), and the columnar

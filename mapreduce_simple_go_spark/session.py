@@ -18,6 +18,16 @@ task (coordinator.go). Spark already defaults ``spark.task.maxFailures`` to
 master is ``local[N,4]``. Output stays visible exactly once: only the
 successful attempt's result is returned and only its files are committed.
 
+Python workers: on local masters (``local[...]``, ``local-cluster[...]``)
+Spark's Python workers run under ``WORKER_DAEMON`` (``_pydaemon.py``). It
+stops the re-read of ``pyspark.zip`` and the spark-core jar that PySpark's
+per-task ``importlib.invalidate_caches()`` caused, 0.15-0.4 s per task on
+a 4-core host. The package's parent directory leads the workers'
+``PYTHONPATH``, so the daemon and module-level map/reduce functions import
+whatever the driver's cwd. A cluster deployment that installs the package
+on its executors gets the same fix by setting ``spark.python.daemon.module``
+to ``WORKER_DAEMON``.
+
 Only deployment settings come from the environment: ``SPARK_GRAFT_CPUS``
 (``local[$SPARK_GRAFT_CPUS,4]``, default ``*``), ``SPARK_GRAFT_DRIVER_MEM``
 and ``SPARK_GRAFT_WAREHOUSE``. Nothing in here assumes single-node.
@@ -31,6 +41,8 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 TASK_MAX_FAILURES = 4
+WORKER_DAEMON = "mapreduce_simple_go_spark._pydaemon"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -92,6 +104,12 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
     )
+    if master == "local" or master.startswith(("local[", "local-cluster[")):
+        paths = [_PACKAGE_PARENT, *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+        builder = builder.config("spark.python.daemon.module", WORKER_DAEMON).config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(dict.fromkeys(p for p in paths if p)),
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -297,7 +297,7 @@ def run_available_now(
     value actually works, where the old ``tempfile.mkdtemp(dir=...)`` +
     ``os.listdir`` required a driver-local POSIX path).
 
-    r13 (guide §2.4's "remove work outright", applied to micro-batches):
+    r13 (remove work outright, applied to micro-batches):
     ``skip_final_nodata_batch=True`` disables ``noDataMicroBatches`` for
     the drain's duration. An availableNow drain otherwise appends one
     FINAL no-data micro-batch after the data batches — a full state-store

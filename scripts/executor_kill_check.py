@@ -84,11 +84,6 @@ def main() -> int:
         app_name="executor-kill-check",
         master="local-cluster[2,1,1024]",
         shuffle_partitions=4,
-        # executors are separate processes here: ship the repo on their
-        # Python path so module-level map/reduce functions unpickle
-        extra_conf={
-            "spark.executorEnv.PYTHONPATH": REPO + os.pathsep + os.environ.get("PYTHONPATH", ""),
-        },
     )
     try:
         docs = (

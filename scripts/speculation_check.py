@@ -76,7 +76,6 @@ def main() -> int:
             # 3.4+ gates speculation on task-efficiency metrics Python RDD
             # tasks don't report; disable so duration alone decides
             "spark.speculation.efficiency.enabled": "false",
-            "spark.executorEnv.PYTHONPATH": REPO + os.pathsep + os.environ.get("PYTHONPATH", ""),
         },
     )
     try:

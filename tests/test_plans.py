@@ -676,8 +676,8 @@ def test_curation_dedup_is_windowless_and_text_never_shuffles(spark):
     md5(text) digest) must run as a partially-aggregated min_by — no
     Window node anywhere in curation_pipeline or training_corpus_pipeline
     — and the dedup Exchange must carry only the digest + aggregation
-    buffer, never the document text (guide §2.3: the old window form
-    shuffled the full corpus body just to pick a survivor)."""
+    buffer, never the document text (shuffle fewer bytes: the old window
+    form shuffled the full corpus body just to pick a survivor)."""
     from mapreduce_simple_go_spark.operators.sampling import (
         curation_pipeline,
         training_corpus_pipeline,

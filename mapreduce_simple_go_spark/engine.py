@@ -16,6 +16,8 @@ same surface plus the DataFrame-native operators:
 
 from __future__ import annotations
 
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,12 +32,16 @@ from .operators.mapreduce import (
     map_reduce_sequential,
 )
 from .session import get_spark
+from .sources import load_events, table
 
 
 class Engine:
     def __init__(self, spark: SparkSession | None = None):
         self.spark = spark or get_spark()
-        self._registry = all_queries()
+        # built on first use: the registry imports all nine operator
+        # modules (pandas, pyarrow, protobuf), which the raw-UDF surface
+        # above does not need
+        self._registry: dict | None = None
 
     # -- reference-parity MapReduce surface --------------------------------
 
@@ -64,10 +70,12 @@ class Engine:
     # -- named operators ----------------------------------------------------
 
     def queries(self) -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+        if self._registry is None:
+            self._registry = all_queries()
         return dict(self._registry)
 
     def query(self, name: str, sf_dir: str) -> DataFrame:
-        return self._registry[name](self.spark, sf_dir)
+        return self.queries()[name](self.spark, sf_dir)
 
     # -- SQL surface ---------------------------------------------------------
 
@@ -81,13 +89,9 @@ class Engine:
 
         The full Spark SQL dialect — the query surface the reference never
         had. ``events`` is registered with its timestamp normalized; only
-        tables named in ``query`` are read (each read infers a schema).
+        tables named in ``query`` are read, through ``sources.table``, so a
+        table's schema is inferred once per file version, not per call.
         """
-        import os
-        import re
-
-        from .sources import load_events
-
         for name in self.FIXTURE_TABLES:
             path = os.path.join(sf_dir, f"{name}.parquet")
             if not os.path.exists(path) or not re.search(rf"\b{name}\b", query, re.I):
@@ -95,7 +99,7 @@ class Engine:
             df = (
                 load_events(self.spark, sf_dir)
                 if name == "events"
-                else self.spark.read.parquet(path)
+                else table(self.spark, sf_dir, name)
             )
             df.createOrReplaceTempView(name)
         return self.spark.sql(query)

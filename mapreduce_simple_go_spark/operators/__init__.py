@@ -9,25 +9,28 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import (
-    dedup,
-    events,
-    kv,
-    multimodal,
-    relational,
-    sampling,
-    similarity,
-    text,
-    textstats,
-)
-
 
 def _modules():
-    # strict imports: a broken module must fail loudly here, not silently
-    # drop its queries from the registry the driver's gate checks.
+    # Imported here, not at module level: together they pull in pandas,
+    # pyarrow and protobuf (~0.8 s), which a caller of one operator
+    # module -- a Python worker unpickling ``mapreduce.wc_map`` -- must not
+    # pay. Strict imports: a broken module must fail loudly here, not
+    # silently drop its queries from the registry the driver's gate checks.
     #
     # Order matters: it is the registry's iteration order, which the driver
     # contract fixes (tests/test_protobuf_probe.py pins it).
+    from . import (
+        dedup,
+        events,
+        kv,
+        multimodal,
+        relational,
+        sampling,
+        similarity,
+        text,
+        textstats,
+    )
+
     return [events, multimodal, sampling, textstats, text, kv, dedup, similarity, relational]
 
 

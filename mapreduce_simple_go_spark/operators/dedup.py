@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import duckdb_hash48, hash48, tokens
+from ..sources import table
 
 SHINGLE_N = 3
 NUM_PERM = 16
@@ -58,7 +59,7 @@ DUCK_DOC_SHINGLES = f"""
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return table(spark, sf_dir, "documents")
 
 
 def doc_shingles(
@@ -847,7 +848,7 @@ def fuzzy_name_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _t_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "supplier.parquet"))
+    return table(spark, sf_dir, "supplier")
 
 
 FUZZY_NAME_SQL = """

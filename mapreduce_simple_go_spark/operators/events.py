@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import money
-from ..sources import load_events
+from ..sources import load_events, table
 
 SESSION_GAP_MIN = 30
 
@@ -820,9 +820,7 @@ def stream_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..streaming import enriched_counts
 
-    dim = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).select(
-        "c_custkey", "c_mktsegment"
-    )
+    dim = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     # State is one row per (mktsegment, event_type) — ~25 rows; same
     # narrow-stateful-width rationale as stream_hourly_counts (gated on
     # input size in _drain_staged).

@@ -20,7 +20,6 @@ binary column from documents.text (utf-8 bytes as the "payload").
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -36,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..sources import table
+
 FEATURE_DIM = 8
 
 
@@ -45,7 +46,7 @@ def synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stands in for an ingested image/audio table; payload = utf-8 document
     bytes, metadata = declared format + payload size.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.encode("text", "utf-8").alias("media"),
@@ -473,7 +474,7 @@ def wave_decoder(b: bytes) -> bytes:
 
 def synth_wav_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, media, media_meta) with media = a real WAV file per doc."""
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+    docs = table(spark, sf_dir, "documents").select(
         "doc_id", F.encode("text", "utf-8").alias("raw")
     )
 

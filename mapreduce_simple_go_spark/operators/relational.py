@@ -18,17 +18,12 @@ Scale notes baked into each plan:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..functions import money
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from ..sources import table as _t
 
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,16 +17,15 @@ once on the stratum key).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import duckdb_hash48, hash48, tokens
+from ..sources import table
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return table(spark, sf_dir, "documents")
 
 
 # Rule thresholds (Gopher-flavored, tuned so the synthetic fixture corpus

@@ -26,13 +26,13 @@ Embeddings fixture: vec_id bigint, embedding array<float> (64 dims), label.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..functions import duckdb_hash48, hash48
+from ..sources import table
 
 TOP_K = 5
 QUERY_MOD = 100   # vec_id % QUERY_MOD == 0 -> query vector
@@ -178,7 +178,7 @@ assign AS (
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    return table(spark, sf_dir, "embeddings")
 
 
 EMBED_DIM = 64  # fixture embedding dimensionality; asserted in tests

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import tokens
+from ..sources import table
 
 DUCK_TOKENS = (
     "list_filter(regexp_split_to_array({col}, '[^\\p{{L}}]+'), w -> w <> '')"
@@ -34,7 +35,7 @@ DUCK_TOKENS = (
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return table(spark, sf_dir, "documents")
 
 
 def doc_tokens(docs: DataFrame) -> DataFrame:

@@ -15,12 +15,11 @@ embarrassingly and the only shuffles are final aggregations, if any.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import duckdb_hash48, hash48, tokens
+from ..sources import table
 
 # BPE-ish pre-tokenizer: letter runs | digit runs | single non-space symbol.
 BPE_REGEX = r"[\p{L}]+|[0-9]+|[^\s\p{L}0-9]"
@@ -38,7 +37,7 @@ LANG_MARKERS = {
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return table(spark, sf_dir, "documents")
 
 
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

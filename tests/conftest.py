@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 import os
+import uuid
 
 import duckdb
 import pytest
@@ -99,6 +100,20 @@ def rows_digest(columns, rows):
         acc = (acc + int.from_bytes(h, "big")) & ((1 << 128) - 1)
         n += 1
     return (n, acc)
+
+
+def jobs_started(spark, fn):
+    """(fn(), number of Spark jobs fn started), counted by a job group."""
+    sc = spark.sparkContext
+    group = "jobs-started-" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker learns of jobs through the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def assert_matches_oracle(spark_df, duck_con, sql, check_schema_names=True):

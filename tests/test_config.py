@@ -6,12 +6,21 @@ uses. The raw-UDF path's R is the exception that follows the session: it
 defaults to ``defaultParallelism`` where the reference fixes R = 10 in
 mrcoordinator.go, and ``n_reduce=10`` reproduces the reference. The code and its docs cite
 only repository files that exist, and no section of a guide outside it.
+The session turns off PySpark's per-call call-site capture, and the raw-UDF
+surface imports nothing only the registry needs.
 """
 
 from __future__ import annotations
 
 import re
+import subprocess
+import sys
 from pathlib import Path
+
+import pytest
+from pyspark.errors import AnalysisException, ArithmeticException
+from pyspark.errors.utils import is_debugging_enabled
+from pyspark.sql import functions as F
 
 import mapreduce_simple_go_spark
 
@@ -49,7 +58,42 @@ def test_session_keeps_spark_default_aqe_coalescing(spark):
     assert spark.conf.get(key) == "true"
 
 
+def test_call_site_capture_is_off_and_errors_keep_their_class(spark):
+    """The session turns off PySpark's per-call Python call-site capture.
+    Errors still carry their error class; only the Python file:line of the
+    DataFrame context is gone."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    # PySpark reads the conf once per process, at the first wrapped call
+    assert not is_debugging_enabled()
+    df = spark.range(3)
+    with pytest.raises(AnalysisException) as exc:
+        df.select(F.col("nope")).collect()
+    assert exc.value.getCondition() == "UNRESOLVED_COLUMN.WITH_SUGGESTION"
+    with pytest.raises(ArithmeticException) as exc:
+        df.select(F.col("id") / F.lit(0)).collect()
+    assert exc.value.getCondition() == "DIVIDE_BY_ZERO"
+
+
 REPO = Path(__file__).resolve().parent.parent
+
+
+def test_raw_udf_surface_imports_no_registry_dependencies():
+    """A Python worker unpickling ``mapreduce.wc_map`` imports the operators
+    package; it, and the Engine facade, must not pull in what only the
+    registry's modules use."""
+    heavy = ("pandas", "pyarrow", "google.protobuf")
+    code = (
+        "import sys\n"
+        "import mapreduce_simple_go_spark.engine\n"
+        "import mapreduce_simple_go_spark.operators.mapreduce\n"
+        f"print(sorted(m for m in {heavy!r} if m in sys.modules))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "[]"
+
+
 CITING = ["mapreduce_simple_go_spark", "scripts", "tests", "README.md", "bench.py", ".claude"]
 # Root-document-style names (upper-case stem, optional round suffix) and
 # plan-dump paths; a citation of either must resolve to a file in the tree.

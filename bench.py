@@ -5,7 +5,6 @@ local[$SPARK_GRAFT_CPUS,4] session, best-of-$SPARK_GRAFT_BENCH_PASSES
 bench_out.json, stdout, and a last stdout line that fits the driver's tail.
 
     python bench.py
-    python bench.py --one NAME --out P   # one query in a fresh session
 
 Timing counts full query execution including the driver-side collect of the
 (small) result — the same observable the reference's test harness times
@@ -106,35 +105,6 @@ def tail_line(out: dict) -> str:
     return json.dumps(final)
 
 
-def _one_query_main(name: str, out_path: str) -> None:
-    """`bench.py --one NAME --out P`: time one query (same warmup + best-of
-    protocol) in this fresh session and write {"query","sec","rows"}."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
-    spark = get_spark(app_name="bench-one")
-    spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).selectExpr(
-        "sum(length(text))"
-    ).collect()
-    spark.range(32).mapInPandas(lambda it: it, schema="id long").collect()
-    fn = all_queries()[name]
-    # One UNTIMED execution of the target query itself: a fresh session's
-    # generic warmup leaves this query's table footers, codegen, and
-    # broadcast machinery cold, and best-of-2 then averages one cold pass
-    # into the estimate — r12 calibration measured --one overshooting the
-    # in-suite number ~2x on sub-second queries for exactly this reason.
-    len(fn(spark, sf_dir).collect())
-    spark.catalog.clearCache()
-    best, rows = float("inf"), 0
-    for _ in range(passes):
-        t0 = time.monotonic()
-        rows = len(fn(spark, sf_dir).collect())
-        best = min(best, time.monotonic() - t0)
-        spark.catalog.clearCache()
-    with open(out_path, "w") as f:
-        json.dump({"query": name, "sec": round(best, 3), "rows": rows}, f)
-    spark.stop()
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="bench")
@@ -172,7 +142,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 5 and sys.argv[1] == "--one" and sys.argv[3] == "--out":
-        _one_query_main(sys.argv[2], sys.argv[4])
-    else:
-        main()
+    main()

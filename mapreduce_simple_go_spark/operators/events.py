@@ -529,25 +529,33 @@ def retention_cohorts(spark: SparkSession, sf_dir: str, max_weeks: int = 3) -> D
     """Weekly cohort retention: users grouped by first-activity week,
     counted as retained in each following week they act again.
 
-    The canonical product-analytics matrix. Two aggregations over one
-    events scan: per-user first week (groupBy user), then distinct
-    (user, week) activity joined back to its cohort — the join key is
-    user_id, the same partitioning both aggregates already use, so AQE
-    plans one co-partitioned exchange chain, no re-shuffle.
+    The canonical product-analytics matrix. One aggregation per user
+    collects the set of weeks it was active in; the cohort is the set's
+    minimum, and exploding the set gives each (user, week) once. So the
+    plan has one exchange on user_id, map-side partial, and the final
+    (cohort, offset) rollup. No join of first weeks back onto activity:
+    AQE makes such a join a broadcast join built on whichever side's
+    shuffle finishes first, and one of the two choices adds an exchange,
+    so the plan would vary from run to run.
     """
-    ev = load_events(spark, sf_dir)
     week = F.date_trunc("week", F.col("ts"))
-    first = ev.groupBy("user_id").agg(F.min(week).alias("cohort_week"))
-    activity = ev.select("user_id", week.alias("wk")).distinct()
+    weeks = (
+        load_events(spark, sf_dir)
+        .filter(F.col("user_id").isNotNull())
+        .groupBy("user_id")
+        .agg(F.collect_set(week).alias("weeks"))
+    )
     return (
-        activity.join(first, "user_id")
+        weeks.select(F.array_min("weeks").alias("cohort_week"), F.explode("weeks").alias("wk"))
         .withColumn(
             "week_offset",
             (F.datediff(F.col("wk"), F.col("cohort_week")) / 7).cast("int"),
         )
         .filter(F.col("week_offset") <= max_weeks)
         .groupBy("cohort_week", "week_offset")
-        .agg(F.count_distinct("user_id").alias("n_users"))
+        # one row per (user, week) and distinct weeks give distinct
+        # offsets, so a row count is the distinct-user count
+        .agg(F.count("*").alias("n_users"))
     )
 
 

@@ -158,11 +158,13 @@ def q3_bucketed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Startup sweep: a driver crash between saveAsTable and the finally-
     # drop leaves orphaned uuid-suffixed scratch tables behind; drop any
     # leftovers from previous invocations before creating this run's pair
-    # (cheap catalog listing — the names are namespaced so nothing else
-    # matches).
-    for tbl in spark.catalog.listTables():
-        if tbl.name.startswith(("orders_bkt_", "lineitem_bkt_")):
-            spark.sql(f"DROP TABLE IF EXISTS {tbl.name}")
+    # (the names are namespaced so nothing else matches). SHOW TABLES, not
+    # catalog.listTables(): PySpark reads that listing through
+    # toLocalIterator, which runs a Spark job per partition, and the listing
+    # has up to one partition per catalog entry, so the sweep's job count
+    # followed the session's temp views.
+    for tbl in spark.sql("SHOW TABLES LIKE 'orders_bkt_*|lineitem_bkt_*'").collect():
+        spark.sql(f"DROP TABLE IF EXISTS {tbl.tableName}")
 
     suffix = uuid.uuid4().hex[:8]
     ot, lt = f"orders_bkt_{suffix}", f"lineitem_bkt_{suffix}"

@@ -1190,8 +1190,7 @@ ORACLES["ann_srp_topk"] = ANN_SRP_SQL
 # same plans, same oracles modulo the query predicate — giving the law a
 # fixed-q arm whose expected exponent is ~1.0 for the brute scan (q*n
 # pairs) and below it for IVF/SRP (per-query probe cost grows slower than
-# n). Vetted exponents live in scaling_law_vetted.json; SCALE.md "Fixed-q
-# ANN arm" discusses the numbers.
+# n). SCALE.md "Fixed-q ANN arm" discusses the measured numbers.
 
 
 def ann_cosine_topk_fixedq(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import math
 import os
-import uuid
+from typing import NamedTuple
 
 import duckdb
 import pytest
@@ -102,18 +102,48 @@ def rows_digest(columns, rows):
     return (n, acc)
 
 
+class Cost(NamedTuple):
+    """What a call cost Spark, in counts rather than seconds."""
+
+    jobs: int
+    stages: int  # stage attempts that ran; a stage whose shuffle was reused is skipped
+    tasks: int
+    shuffle_records: int  # records written to shuffle files
+    input_records: int  # records read from files and from cached or checkpointed blocks
+
+
 def jobs_started(spark, fn):
-    """(fn(), number of Spark jobs fn started), counted by a job group."""
+    """(fn(), Cost of the Spark jobs started while fn ran).
+
+    Jobs are counted by job id, not by job group: jobs started on other
+    threads carry another group (a stream's micro-batches) or none (writes
+    submitted from a thread pool), so a group would miss them. Nothing else
+    may start jobs on the context meanwhile. Stages, tasks and records come from the
+    status store's per-stage data (the numbers the Spark UI shows); a stage
+    listed by several of the jobs is counted once.
+    """
     sc = spark.sparkContext
-    group = "jobs-started-" + uuid.uuid4().hex[:8]
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status tracker learns of jobs through the asynchronous listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    jsc = sc._jsc.sc()
+    first_job = jsc.dagScheduler().numTotalJobs()
+    out = fn()
+    job_ids = range(first_job, jsc.dagScheduler().numTotalJobs())
+    # the status store learns of jobs through the asynchronous listener bus
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stage_ids = {s for j in job_ids for s in tracker.getJobInfo(j).stageIds}
+    no_status, no_quantiles = sc._jvm.java.util.ArrayList(), sc._gateway.new_array(sc._jvm.double, 0)
+    stages = tasks = shuffle_records = input_records = 0
+    for sid in stage_ids:
+        attempts = jsc.statusStore().stageData(sid, False, no_status, False, no_quantiles)
+        for i in range(attempts.size()):
+            a = attempts.apply(i)
+            if a.status().toString() == "SKIPPED":
+                continue
+            stages += 1
+            tasks += a.numTasks()
+            shuffle_records += a.shuffleWriteRecords()
+            input_records += a.inputRecords()
+    return out, Cost(len(job_ids), stages, tasks, shuffle_records, input_records)
 
 
 def assert_matches_oracle(spark_df, duck_con, sql, check_schema_names=True):

@@ -121,3 +121,15 @@ def test_q3_bucketed_ingest_matches_plain_q3(spark):
     got = sorted(map(tuple, q3_bucketed_ingest(spark, SF_DIR).collect()))
     want = sorted(map(tuple, q3_shipping_priority(spark, SF_DIR).collect()))
     assert got == want and len(want) > 0
+
+
+def test_q3_bucketed_ingest_drops_leftover_scratch_tables(spark):
+    """A crash between the ingest and the final drop leaves uuid-suffixed
+    tables behind; the next run sweeps them, and leaves none of its own."""
+    from mapreduce_simple_go_spark.operators.relational import q3_bucketed_ingest
+
+    for name in ("orders_bkt_leftover", "lineitem_bkt_leftover"):
+        spark.range(1).write.mode("overwrite").saveAsTable(name)
+    q3_bucketed_ingest(spark, SF_DIR).collect()
+    names = {t.name for t in spark.catalog.listTables()}
+    assert not {n for n in names if n.startswith(("orders_bkt_", "lineitem_bkt_"))}

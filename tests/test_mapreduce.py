@@ -104,9 +104,9 @@ def test_engine_sql_reads_only_the_tables_it_names(engine, spark, tmp_path):
     _, first = jobs_started(spark, lambda: engine.sql(query, str(tmp_path)))
     views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
     assert views & set(Engine.FIXTURE_TABLES) == {"region"}
-    assert first == 1
+    assert first.jobs == 1
     _, again = jobs_started(spark, lambda: engine.sql(query, str(tmp_path)))
-    assert again == 0
+    assert again.jobs == 0
 
 
 def test_engine_sql_matches_table_names_case_insensitively(engine, spark):

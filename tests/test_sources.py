@@ -301,8 +301,8 @@ def test_warm_build_starts_no_spark_job(spark, duck, name):
     result still equals the DuckDB oracle's."""
     query = all_queries()[name]
     query(spark, SF_DIR).collect()
-    df, jobs = jobs_started(spark, lambda: query(spark, SF_DIR))
-    assert jobs == 0
+    df, cost = jobs_started(spark, lambda: query(spark, SF_DIR))
+    assert cost.jobs == 0
     cur = duck.execute(all_oracles()[name])
     cols = [c[0] for c in cur.description]
     assert sorted(df.columns) == sorted(cols)

@@ -65,22 +65,6 @@ def duckdb_hash48(expr: str) -> str:
     )
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity of two float-array columns, computed JVM-side.
-
-    Left-to-right sequential sums via ``aggregate`` so the floating-point
-    result is reproducible (and matches DuckDB's sequential list functions).
-    """
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
-    return dot / (na * nb)
-
-
 def money(col: Column) -> Column:
     """Cast a double money column to DECIMAL(18,2) for exact aggregation.
 

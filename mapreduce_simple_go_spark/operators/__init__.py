@@ -11,14 +11,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def _modules():
-    # Imported here, not at module level: together they pull in pandas,
-    # pyarrow and protobuf (~0.8 s), which a caller of one operator
-    # module -- a Python worker unpickling ``mapreduce.wc_map`` -- must not
-    # pay. Strict imports: a broken module must fail loudly here, not
-    # silently drop its queries from the registry the driver's gate checks.
+    # Imported here, not at module level: together they pull in pandas and
+    # pyarrow, which a caller of one operator module -- a Python worker
+    # unpickling ``mapreduce.wc_map`` -- must not pay. Strict imports: a
+    # broken module must fail loudly here, not silently drop its queries
+    # from the registry the driver's gate checks.
     #
     # Order matters: it is the registry's iteration order, which the driver
-    # contract fixes (tests/test_protobuf_probe.py pins it).
+    # contract fixes (tests/test_oracle_parity.py pins it).
     from . import (
         dedup,
         events,

@@ -1004,22 +1004,17 @@ def stream_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming entries (32 partitions x RocksDB column families priced
     ~1.5 s/batch in store management alone; hash-identical output,
     pinned by test_tws_totals_converge_to_batch).
-    First operator on the post-applyInPandasWithState API; gated on the
-    google.protobuf dependency its driver worker imports (see note at the
-    bottom of this file).
+    First operator on the post-applyInPandasWithState API; its workers
+    import google.protobuf, which _protobuf.ensure_protobuf provides (a
+    real install, else the vendored runtime) when this query builds.
     """
     import uuid
 
     from .. import fsutil
-    from .._protobuf import spark_worker_env
+    from .._protobuf import ensure_protobuf
     from ..streaming import run_available_now, user_totals_tws
 
-    # When the protobuf runtime is a discovered host bundle, export it into
-    # sc.environment BEFORE the UDF below is wrapped, so executor-side
-    # workers inherit it; the driver-side pre-init worker is covered by the
-    # pickle-time repair hook inside user_totals_tws (StreamingPythonRunner
-    # drops envVars' PYTHONPATH — see _protobuf.py).
-    spark_worker_env(spark)
+    ensure_protobuf()  # raise before any staging job if no runtime serves
     # transformWithState keeps each named state variable in its own column
     # family — supported by the RocksDB provider only (the HDFS-backed
     # default raises multipleColumnFamiliesNotSupported). Scope the
@@ -1167,46 +1162,6 @@ SELECT user_id, COUNT(*) AS n_events,
 FROM events
 GROUP BY user_id
 """
-
-# RUNTIME-GATED registration: Spark 4's transformWithState driver worker
-# requires the google.protobuf Python package (ImportError at
-# StreamingPythonRunner init when absent — no network in this container to
-# pip-install it, and the runtime is ~10k LoC of generated-message
-# machinery, not something to vendor into the repo). tws_available() now
-# goes through _protobuf.ensure_protobuf(), which falls back to a
-# pure-Python protobuf runtime bundled by public host tooling
-# (google-cloud-sdk ships one); where neither a real install nor a bundle
-# exists the entry stays out of the registry (a red driver row for an
-# environment reason would be noise, not signal). On a multi-node cluster
-# the bundle probe only helps hosts that carry the same tooling — there,
-# install protobuf on the executors like any other Python dep. The
-# operator and its convergence test are gated the same way — see
-# tests/test_streaming.py::test_tws_totals_converge_to_batch and
-# tests/test_streaming.py::test_tws_registration_gate.
-
-
-def tws_available() -> bool:
-    """True iff the transformWithStateInPandas worker's hard dependency
-    (google.protobuf) is importable in this interpreter — either a real
-    install, or a pure-Python runtime bundled by public host tooling that
-    :mod:`.._protobuf` discovers and wires in (sys.path + protobuf's own
-    documented version-skew escape hatch). Discovery also exports the
-    settings through os.environ, so a SparkSession created after this call
-    passes them to every Spark-spawned Python process."""
-    from .._protobuf import ensure_protobuf
-
-    return ensure_protobuf()
-
-
-def register_tws(queries: dict, oracles: dict, available: bool | None = None) -> bool:
-    """Register stream_user_totals_tws into the given registries iff the
-    protobuf dependency is present (``available`` overrides detection for
-    tests). Returns whether registration happened."""
-    ok = tws_available() if available is None else available
-    if ok:
-        queries["stream_user_totals_tws"] = stream_user_totals_tws
-        oracles["stream_user_totals_tws"] = STREAM_TWS_SQL
-    return ok
 
 
 def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1512,6 +1467,5 @@ def stream_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["stream_session_window_native"] = stream_session_window_native
 ORACLES["stream_session_window_native"] = SESSION_WINDOW_NATIVE_SQL
 
-# transformWithStateInPandas entry — registers only where its protobuf
-# dependency exists (see register_tws above).
-register_tws(QUERIES, ORACLES)
+QUERIES["stream_user_totals_tws"] = stream_user_totals_tws
+ORACLES["stream_user_totals_tws"] = STREAM_TWS_SQL

@@ -20,6 +20,7 @@ streams are used in tests (``availableNow`` trigger = bounded replay).
 from __future__ import annotations
 
 import os
+import sys
 from typing import Iterator
 
 import pandas as pd
@@ -1012,65 +1013,33 @@ def user_totals_tws(events: DataFrame) -> DataFrame:
     """
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    from .._protobuf import _FALLBACK_DIRS, _VERSION_FLAG
+    from .._protobuf import _VENDORED, _VERSION_FLAG, ensure_protobuf
 
-    fallback_dirs = tuple(_FALLBACK_DIRS)
-    version_flag = str(_VERSION_FLAG)
+    ensure_protobuf()
+    # The driver resolved protobuf from the vendored zip iff it is on
+    # sys.path; workers (same host) then need it too.
+    vendored = _VENDORED if _VENDORED in sys.path else None
 
-    def _repair_protobuf() -> None:
+    def _rebuild_totals():
         # Self-contained (closure-pickled by value) so it runs inside BARE
-        # Spark worker processes: StreamingPythonRunner's driver worker
-        # drops the PYTHONPATH entry sc.environment provides (only
-        # sparkPythonPath survives — observed on Spark 4.1.2), so a
-        # discovered protobuf bundle must be re-wired from WITHIN the
-        # worker, before stateful_processor_api_client lazily imports
-        # StateMessage_pb2. Also note spark-core's jar serves
-        # google/protobuf as an empty namespace package, so a plain
-        # find_spec succeeds spuriously — require a real origin.
-        import importlib
+        # Spark worker processes, at read_command time: before the api
+        # client's lazy StateMessage_pb2 import. StreamingPythonRunner's
+        # driver worker drops the PYTHONPATH entry sc.environment provides
+        # (observed on Spark 4.1.2), so the zip is wired in from here. No
+        # find_spec probe: it would import `google` as the spark-core jar's
+        # empty namespace package, which a zip appended later cannot join.
         import os
         import sys
 
-        def real_pkg() -> bool:
-            try:
-                spec = importlib.util.find_spec("google.protobuf")
-            except ModuleNotFoundError:
-                return False
-            return spec is not None and spec.origin is not None
-
-        if real_pkg():
-            os.environ.setdefault(version_flag, "true")
-            return
-        for d in fallback_dirs:
-            # entries may be bundle dirs OR zipimport-able archives
-            # (the repo's vendored runtime) — mirror _protobuf._entry_usable
-            usable = (
-                os.path.isfile(d)
-                if d.endswith(".zip")
-                else os.path.isdir(os.path.join(d, "google", "protobuf"))
-            )
-            if not usable:
-                continue
-            sys.path.append(d)
-            importlib.invalidate_caches()
-            if real_pkg():
-                os.environ.setdefault(version_flag, "true")
-                return
-            sys.path.remove(d)
-            importlib.invalidate_caches()
-
-    def _rebuild_totals():
-        _repair_protobuf()
+        if vendored is not None and vendored not in sys.path:
+            sys.path.append(vendored)
+        os.environ.setdefault(_VERSION_FLAG, "true")
         return Totals.__new__(Totals)
 
     class Totals(StatefulProcessor):
         def __reduce__(self):
-            # Unpickling happens in the worker at read_command time —
-            # BEFORE the api client's lazy StateMessage_pb2 import — so
-            # routing reconstruction through _repair_protobuf makes the
-            # protobuf bundle visible exactly where the hard dependency
-            # bites, independent of env propagation order.
             return (_rebuild_totals, ())
+
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._state = handle.getValueState(
                 "totals", "n_events LONG, sum_event_ids LONG, version LONG"

@@ -24,3 +24,16 @@ def test_query_matches_oracle(name, spark, duck):
 
 def test_all_oracle_keys_have_queries():
     assert set(ORACLES) <= set(QUERIES)
+
+
+def test_driver_window_structure():
+    """Window policy invariants: the head the driver checks is at most 50
+    names, every window name resolves to a registered query AND oracle, and
+    the window occupies exactly the front of the registry iteration order."""
+    from mapreduce_simple_go_spark.operators import _WINDOW_PRIORITY
+
+    names = list(QUERIES)
+    assert len(_WINDOW_PRIORITY) <= 50
+    assert names[: len(_WINDOW_PRIORITY)] == list(_WINDOW_PRIORITY)
+    for n in _WINDOW_PRIORITY:
+        assert n in ORACLES, f"window name {n} lacks an oracle"

@@ -620,19 +620,6 @@ def test_kv_stream_final_state_multifile_drain_same_hash(spark):
     assert one == sorted_rows(kv_final_state(spark, SF_DIR))
 
 
-def _has_tws_deps() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_tws_deps(),
-    reason="transformWithState driver worker needs google.protobuf",
-)
 def test_tws_totals_converge_to_batch(spark):
     """Spark 4 StatefulProcessor (transformWithStateInPandas): the
     versioned per-user fold across a multi-file drain (_TWS_DROPS
@@ -780,26 +767,6 @@ def test_native_session_window_append_withholds_open_sessions(spark, events_src)
     # exactly the watermark-open sessions are withheld
     assert withheld == {k for k in map(key, complete) if k[2] > watermark}
     assert len(withheld) > 0
-
-
-def test_tws_registration_gate():
-    """stream_user_totals_tws registers exactly when the protobuf worker
-    dependency is importable: forced-available registration lands both the
-    query and its oracle; forced-unavailable leaves the dicts untouched;
-    the live registry agrees with live detection."""
-    from mapreduce_simple_go_spark.operators import all_queries
-    from mapreduce_simple_go_spark.operators.events import (
-        register_tws,
-        tws_available,
-    )
-
-    q, o = {}, {}
-    assert register_tws(q, o, available=True)
-    assert set(q) == set(o) == {"stream_user_totals_tws"}
-    q2, o2 = {}, {}
-    assert not register_tws(q2, o2, available=False)
-    assert not q2 and not o2
-    assert ("stream_user_totals_tws" in all_queries()) == tws_available()
 
 
 def test_complete_mode_sink_gate_parity(spark, events_src):

@@ -95,6 +95,47 @@ def test_vendored_zip_alone_satisfies_gencode():
     assert out.startswith(VENDORED + os.sep), out
 
 
+def test_ensure_protobuf_discovers_bundle_or_reports_absence(tmp_path):
+    """With every real install blocked, ensure_protobuf finds the zip (once:
+    a second call leaves sys.path alone); with no zip at its path either, it
+    raises RuntimeError naming the vendor README and google.protobuf stays
+    unimportable."""
+    out = _run(
+        """
+        import sys
+        from mapreduce_simple_go_spark._protobuf import _VENDORED, ensure_protobuf
+        ensure_protobuf()
+        ensure_protobuf()
+        from google.protobuf import descriptor
+        print(sys.path.count(_VENDORED), descriptor.__file__)
+        """,
+        allowed=VENDORED,
+    )
+    count, path = out.split(" ", 1)
+    assert count == "1" and path.startswith(VENDORED + os.sep), out
+
+    missing = str(tmp_path / "absent.zip")
+    out = _run(
+        f"""
+        import importlib.util
+        import mapreduce_simple_go_spark._protobuf as P
+        P._VENDORED = {missing!r}
+        try:
+            P.ensure_protobuf()
+        except RuntimeError as e:
+            print(e)
+        try:
+            found = importlib.util.find_spec("google.protobuf") is not None
+        except ModuleNotFoundError:
+            found = False
+        print(found)
+        """,
+        allowed=missing,
+    )
+    msg, found = out.rsplit("\n", 1)
+    assert "_vendor/README.md" in msg and found == "False", out
+
+
 def test_vendored_zip_joins_a_host_google_namespace(tmp_path):
     """Another google.* distribution already imported as the ``google``
     namespace package (google-auth and the like) does not keep the zip out:

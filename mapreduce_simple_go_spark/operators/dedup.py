@@ -1027,7 +1027,7 @@ def connected_components(
     ``spark.sql.limit.initialNumPartitions`` on the SESSION conf
     non-atomically, so any concurrent query on the same SparkSession that
     issues a ``limit`` during the probe inherits the 2^20 override (same
-    hazard class as ``_drain_staged``'s shuffle_partitions override,
+    hazard class as the streaming drain's ``streaming.scoped_confs``,
     documented there). Registry/bench harnesses run single-threaded; a
     caller composing this from parallel code should bypass the probe
     (``driver_threshold=0`` or ``algorithm="star"``), or run it through a

@@ -20,160 +20,30 @@ from ..sources import load_events, table
 SESSION_GAP_MIN = 30
 
 
-def _events_stream(spark: SparkSession, sf_dir: str):
-    """Stream the events table IN PLACE from the fixture + its staged size.
-
-    Returns ``(stream_df, input_bytes)``. Zero staging (r9): the fixture's
-    events.parquet is a single FILE at driver SFs (streamed from ``sf_dir``
-    with a filename ``pathGlobFilter``, so sibling tables are invisible to
-    the source) and a Spark-written DIRECTORY for the scaled fixtures
-    (streamed directly). Replaces the r8 symlink staging, which was
-    zero-copy but required a driver-local POSIX fixture path — this form
-    takes any URI the cluster's Hadoop conf resolves, and
-    drops the per-drain scratch dir entirely. ``input_bytes`` (gates the
-    complete-mode sink) comes from the same FS API.
-    """
-    from ..fsutil import du_suffix_bytes, is_dir
-    from ..streaming import stream_events
-
-    src = os.path.join(sf_dir, "events.parquet")
-    if is_dir(spark, src):
-        stream = stream_events(spark, src)
-    else:
-        stream = stream_events(spark, sf_dir, glob="events.parquet")
-    # data-file bytes only: ContentSummary also counts
-    # _SUCCESS and local-FS .crc siblings in a Spark-written dir, which
-    # drifted the complete-mode memory-vs-parquet gate ~1% vs the original
-    # per-*.parquet stat sum. du_suffix_bytes restores the original
-    # threshold semantics on every scheme.
-    return stream, du_suffix_bytes(spark, src, ".parquet")
+# Below this much stream input, most streaming entries run their stateful
+# operator on 8 shuffle partitions instead of the session default (streaming
+# disables AQE, so the width is fixed): state-store open/commit is a flat
+# per-partition cost per micro-batch, and it dominates a small drain. Above
+# it the fold is compute-bound and wants the session default's parallelism:
+# at the 100x fixture a pinned 8 cost the bucketed sessionizer ~4x and was
+# the memory pressure behind a Python-worker crash. At the 17.9 MB 10x
+# fixture the narrow width still wins (session_window_native best-of-4:
+# 9.3 s at 8 partitions vs 11.7 s at 32), hence 32 MB.
+_DRAIN_SMALL_INPUT_BYTES = 32 * 1024 * 1024
 
 
-def _drain_staged(
-    spark: SparkSession,
-    prefix: str,
-    build,
-    mode: str,
-    select_sql: str,
-    *,
-    sf_dir: str | None = None,
-    stage_df: DataFrame | None = None,
-    shuffle_partitions: int | None = None,
-    single_file: bool = True,
-    force_complete_parquet: bool = False,
-) -> DataFrame:
-    """Shared stage-and-drain ritual for the streaming registry entries.
+def _narrow_state(
+    input_bytes: int, below: int = _DRAIN_SMALL_INPUT_BYTES
+) -> dict[str, str]:
+    """Drain confs: 8 stateful shuffle partitions below ``below`` bytes."""
+    return {"spark.sql.shuffle.partitions": "8"} if input_bytes < below else {}
 
-    Builds a bounded stream source (the raw events table streamed IN PLACE
-    from ``sf_dir``, or ``stage_df`` written as ONE parquet file to a
-    scratch dir so arrival order is its row order), runs ``build(stream)``
-    through an availableNow drain into a uuid-named memory sink, and
-    returns ``select_sql`` (with ``{name}`` interpolated) over it —
-    localCheckpointed so the temp view can be dropped immediately. All
-    probes/staging/cleanup go through fsutil (Hadoop FS API), so both
-    ``sf_dir`` and ``SPARK_GRAFT_SCRATCH_DIR`` may be URIs on any scheme
-    the deployment resolves. ``shuffle_partitions`` temporarily sizes the
-    stateful shuffle to key cardinality (restored after the drain); the
-    try/finally around the final SELECT means a post-drain failure can't
-    leak the view into the catalog.
 
-    NOT thread-safe: the shuffle_partitions save/restore mutates SESSION
-    conf non-atomically, so concurrent queries sharing the SparkSession
-    would race on the global value. Registry entries run single-threaded
-    (driver gate and bench both iterate sequentially) — if this helper is
-    ever reused from parallel code, scope the override per-query instead
-    (e.g. a dedicated session clone via ``spark.newSession()``).
-    """
-    import uuid
+def _events_bytes(spark: SparkSession, sf_dir: str) -> int:
+    """Data-file bytes of the events table (fsutil: any URI scheme)."""
+    from ..fsutil import du_suffix_bytes
 
-    from ..fsutil import delete as fs_delete
-    from ..fsutil import du_suffix_bytes, mkscratch
-    from ..streaming import run_available_now, stream_events
-
-    scratch = None
-    try:
-        if stage_df is not None:
-            # ONE parquet file (coalesce(1)) so arrival order is row order;
-            # streamed in place from the write dir via a glob — no
-            # driver-local copy step (r9, FS-agnostic staging).
-            # single_file=False keeps the write PARALLEL for callers whose
-            # semantics are arrival-order-free (all files land in the one
-            # availableNow batch anyway) — the coalesce(1) write is a
-            # single-task funnel of the whole staged table (r11: ~3.5 s of
-            # stream_dedup_counts' 7 s at the 10x fixture was this write).
-            scratch = mkscratch(spark, prefix)
-            stage = scratch.rstrip("/") + "/stage"
-            staged_write = (
-                stage_df.coalesce(1) if single_file else stage_df
-            )
-            staged_write.write.mode("overwrite").parquet(stage)
-            stream = stream_events(spark, stage, glob="*.parquet")
-            # data files only, not _SUCCESS/.crc siblings — keeps the
-            # gate's threshold semantics equal to a plain-file source
-            input_bytes = du_suffix_bytes(spark, stage, ".parquet")
-        else:
-            stream, input_bytes = _events_stream(spark, sf_dir)
-        name = prefix + uuid.uuid4().hex[:8]
-        # staged-source size gates the complete-mode sink (memory below
-        # the threshold, parquet above)
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        # The shuffle_partitions override is a SMALL-INPUT optimization
-        # (fewer state stores when the flat per-partition cost dominates)
-        # and is gated on input size like tws' r10 gate: above the
-        # threshold the stateful fold is compute-bound and WANTS the
-        # session default's parallelism — the r11 sf10 sweep measured the
-        # hard-pinned 8 costing the bucketed sessionizer ~4x (and it was
-        # the memory pressure behind a Python-worker crash). Threshold is
-        # 32 MB here (vs tws' 8 MB): at the 17.9 MB 10x fixture the
-        # narrow width still wins for these drains (session_window_native
-        # isolated best-of-4: 9.3 s at 8 partitions vs 11.7 s at 32).
-        if (
-            shuffle_partitions is not None
-            and input_bytes < _DRAIN_SMALL_INPUT_BYTES
-        ):
-            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        try:
-            # defer_cleanup: the final SELECT below localCheckpoints the
-            # result anyway, so the complete-parquet sink skips its own
-            # checkpoint (one materialization of a large result, not two)
-            # and hands us the scratch deleter to run after ours.
-            # force_complete_parquet: for operators whose COMPLETE result
-            # scales with the input (sessions ~= events), the input-byte
-            # gate mispredicts the memory sink's driver cost — the result
-            # is what must fit, not the source. input_bytes=None forces
-            # the executor-side parquet sink (r11: sf1 11.2 -> 9.6 s for
-            # session_window_native; no slower at driver SFs now that
-            # defer_cleanup removed the roundtrip's second checkpoint).
-            # skip_final_nodata_batch: every _drain_staged entry's final
-            # SELECT reads only data-batch emissions (complete/update
-            # snapshots; append entries are dropDuplicates / inner join /
-            # closed_by='gap' filters), so the trailing no-data batch is
-            # pure state-store overhead here — see run_available_now
-            # (r13). An append-mode entry whose semantics NEED the final
-            # watermark advance (event-time timeout sweeps, watermark-close
-            # window emissions) must drain through run_available_now
-            # directly instead.
-            sink_cleanup = run_available_now(
-                build(stream),
-                name,
-                mode,
-                None if force_complete_parquet else input_bytes,
-                defer_cleanup=True,
-                skip_final_nodata_batch=True,
-            )
-        finally:
-            if shuffle_partitions is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-    finally:
-        if scratch is not None:
-            fs_delete(spark, scratch)
-    try:
-        out = spark.sql(select_sql.format(name=name)).localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView(name)
-        if sink_cleanup is not None:
-            sink_cleanup()
-    return out
+    return du_suffix_bytes(spark, os.path.join(sf_dir, "events.parquet"), ".parquet")
 
 
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -591,14 +461,13 @@ def stream_sessions_gap_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry row after kv_stream_final_state where the correctness gate
     hashes actual streaming-engine output.
 
-    r11: runs the BUCKET-keyed fold (session_fold_bucketed) — per-batch
+    It runs the BUCKET-keyed fold (session_fold_bucketed): per-batch
     emissions identical to the per-user fold (equivalence pinned incl.
     timeout batches), with the ~1 ms-per-group Python overhead amortized
-    over ~|users|/32 users per call: the sf1 drain was ~15k Python calls
-    ≈ 15 s of pure call overhead, now ~32 calls.
+    over ~|users|/32 users per call: keyed per user, the sf1 drain was
+    ~15k Python calls, ~15 s of pure call overhead; bucketed, ~32 calls.
     """
-    from .. import fsutil
-    from ..streaming import SESSION_FOLD_BUCKETS, session_fold_bucketed
+    from .. import streaming
 
     ev = load_events(spark, sf_dir).select(
         "user_id", "ts", "event_id", "value"
@@ -607,18 +476,18 @@ def stream_sessions_gap_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded (~32 MB of source per bucket-group): 32 at driver SFs, ~192
     # at the 100x fixture — measured there, 256 buckets beat 32 by ~25%
     # and smaller per-group emissions remove the worker-memory cliff.
-    src_bytes = fsutil.du_suffix_bytes(
-        spark, os.path.join(sf_dir, "events.parquet"), ".parquet"
+    n_buckets = streaming.SESSION_FOLD_BUCKETS * max(
+        1, _events_bytes(spark, sf_dir) // (32 << 20)
     )
-    n_buckets = SESSION_FOLD_BUCKETS * max(1, src_bytes // (32 << 20))
-    return _drain_staged(
-        spark, "sessfold_",
-        lambda st: session_fold_bucketed(st, n_buckets=n_buckets),
-        "append",
-        "SELECT user_id, session_start_us, session_end_us, n_events, total_cents "
-        "FROM {name} WHERE closed_by = 'gap'",
-        stage_df=ev, shuffle_partitions=8,
-    )
+    # one time-sorted file: arrival order is ts order
+    with streaming.staged_source(spark, ev) as (stream, nbytes):
+        return streaming.drain(
+            streaming.session_fold_bucketed(stream, n_buckets=n_buckets),
+            "append",
+            "SELECT user_id, session_start_us, session_end_us, n_events, total_cents "
+            "FROM {name} WHERE closed_by = 'gap'",
+            input_bytes=nbytes, confs=_narrow_state(nbytes),
+        )
 
 
 STREAM_SESSIONS_SQL = f"""
@@ -708,19 +577,18 @@ def stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session windows), all three streaming operator families have a
     correctness row hashing actual streaming-engine output.
     """
-    from ..streaming import hourly_counts
+    from .. import streaming
 
     # State is ~#(hour, event_type) groups — thousands of rows however big
-    # the input. Streaming disables AQE, so without this the stateful
-    # shuffle runs the session-default 32 partitions and pays 32 state-
-    # store open/commit roundtrips per batch for a state that fits in one
-    # (r12 bisect: width 32 -> 8 cut the warm drain 1.84 -> 1.31 s at
-    # sf0.1). The _drain_staged gate applies it only below 32 MB of input.
-    return _drain_staged(
-        spark, "evh_", hourly_counts, "complete",
-        "SELECT hour, event_type, n_events, total_value FROM {name}",
-        sf_dir=sf_dir, shuffle_partitions=8,
-    )
+    # the input, so the session-default 32 partitions pay 32 state-store
+    # open/commit roundtrips per batch for a state that fits in one (width
+    # 32 -> 8 cut the warm drain 1.84 -> 1.31 s at sf0.1).
+    with streaming.events_source(spark, sf_dir) as (stream, nbytes):
+        return streaming.drain(
+            streaming.hourly_counts(stream), "complete",
+            "SELECT hour, event_type, n_events, total_value FROM {name}",
+            input_bytes=nbytes, confs=_narrow_state(nbytes),
+        )
 
 
 QUERIES["stream_hourly_counts"] = stream_hourly_counts
@@ -740,21 +608,21 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     run 20% hot). Fourth streaming family under the driver's hash gate,
     after the stateful fold, session windows and watermarked window agg.
     """
-    from ..streaming import dedup_events_stream
+    from .. import streaming
 
     ev = load_events(spark, sf_dir)
     log = ev.unionByName(ev.filter(F.col("event_id") % 5 == 0))
-    return _drain_staged(
-        spark, "evdd_",
-        lambda st: dedup_events_stream(st).select("event_type", "event_id"),
-        "append",
-        "SELECT event_type, COUNT(*) AS n_events, "
-        "COUNT(DISTINCT event_id) AS n_distinct FROM {name} GROUP BY event_type",
-        # dedup + the final aggregate are arrival-order-free (one
-        # availableNow batch sees every row regardless of file layout), so
-        # the staging write stays parallel
-        stage_df=log, single_file=False,
-    )
+    # dedup + the final aggregate are arrival-order-free (one availableNow
+    # batch sees every row regardless of file layout), so the staging write
+    # stays parallel; the dedup state keeps the session-default width
+    with streaming.staged_source(spark, log, single_file=False) as (stream, nbytes):
+        return streaming.drain(
+            streaming.dedup_events_stream(stream).select("event_type", "event_id"),
+            "append",
+            "SELECT event_type, COUNT(*) AS n_events, "
+            "COUNT(DISTINCT event_id) AS n_distinct FROM {name} GROUP BY event_type",
+            input_bytes=nbytes, confs={},
+        )
 
 
 STREAM_DEDUP_SQL = """
@@ -826,17 +694,17 @@ def stream_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the equivalent batch join+group — streaming output must converge to
     it exactly.
     """
-    from ..streaming import enriched_counts
+    from .. import streaming
 
     dim = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     # State is one row per (mktsegment, event_type) — ~25 rows; same
-    # narrow-stateful-width rationale as stream_hourly_counts (gated on
-    # input size in _drain_staged).
-    return _drain_staged(
-        spark, "eve_", lambda st: enriched_counts(st, dim), "complete",
-        "SELECT c_mktsegment, event_type, n_events, total_value FROM {name}",
-        sf_dir=sf_dir, shuffle_partitions=8,
-    )
+    # narrow-stateful-width rationale as stream_hourly_counts.
+    with streaming.events_source(spark, sf_dir) as (stream, nbytes):
+        return streaming.drain(
+            streaming.enriched_counts(stream, dim), "complete",
+            "SELECT c_mktsegment, event_type, n_events, total_value FROM {name}",
+            input_bytes=nbytes, confs=_narrow_state(nbytes),
+        )
 
 
 STREAM_ENRICHED_SQL = """
@@ -996,164 +864,67 @@ def stream_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     count the batches that touched the key — the kv.py versioned-fold
     discipline). All-integer totals make the fold exact, so the oracle is
     the plain batch GROUP BY; version itself is NOT emitted downstream
-    because the file split is a staging choice, not a semantic one —
-    r10 trimmed it 3 -> 2 (each TWS micro-batch costs
-    ~2.5 s flat in store opens + state-server handshakes at driver SF,
-    so the third batch bought nothing the second doesn't already prove)
-    and sized the stateful shuffle to 8 partitions like the other
-    streaming entries (32 partitions x RocksDB column families priced
-    ~1.5 s/batch in store management alone; hash-identical output,
-    pinned by test_tws_totals_converge_to_batch).
+    because the file split is a staging choice, not a semantic one.
     First operator on the post-applyInPandasWithState API; its workers
     import google.protobuf, which _protobuf.ensure_protobuf provides (a
     real install, else the vendored runtime) when this query builds.
     """
-    import uuid
-
-    from .. import fsutil
+    from .. import streaming
     from .._protobuf import ensure_protobuf
-    from ..streaming import run_available_now, user_totals_tws
 
     ensure_protobuf()  # raise before any staging job if no runtime serves
-    # transformWithState keeps each named state variable in its own column
-    # family — supported by the RocksDB provider only (the HDFS-backed
-    # default raises multipleColumnFamiliesNotSupported). Scope the
-    # provider switch to this query and restore the session's previous
-    # setting after the drain.
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    _ROCKSDB = (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    try:
-        prev_provider = spark.conf.get(_PROVIDER_KEY)
-    except Exception:
-        prev_provider = None
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # Everything from the first conf.set onward sits inside ONE
-    # try/finally: the size probe, load_events, and
-    # mkscratch can all raise (e.g. a missing events path surfaces as a
-    # py4j FileNotFound from the probe), and the session confs must be
-    # restored on every such path — a leaked provider/partitions setting
-    # would silently reshape every later query in a suite run.
-    root = None
-    try:
-        spark.conf.set(_PROVIDER_KEY, _ROCKSDB)
-        # Stateful-shuffle sizing, size-gated (r10): at driver SF the flat
-        # per-partition cost dominates (32 RocksDB column-family stores per
-        # batch priced ~1.5 s/batch -> 8 partitions), but at 10x+ the fold is
-        # compute-bound and WANTS the parallelism (8 partitions measured 14.4 s
-        # vs 32's 12.3 s at sf1) — so only shrink below _TWS_SMALL_INPUT_BYTES
-        # and leave the session default above it. Same probe family as the
-        # complete-mode sink gate (fsutil, data files only).
-        ev_src = os.path.join(sf_dir, "events.parquet")
-        ev_bytes = fsutil.du_suffix_bytes(spark, ev_src, ".parquet")
-        if ev_bytes < _TWS_SMALL_INPUT_BYTES:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-        ev = load_events(spark, sf_dir).select("ts", "user_id", "event_id")
-        # Staging through fsutil (r9): scratch may be a shared URI
-        # (SPARK_GRAFT_SCRATCH_DIR) and the per-file copy is an FS-to-FS
-        # Hadoop FileUtil copy, so the multi-drop layout works off the
-        # driver's local disk too. Copy order stamps ascending mtimes — the
-        # file source's micro-batch order.
-        root = fsutil.mkscratch(spark, "ev_tws_q_")
-        src = root.rstrip("/") + "/src"
-        fsutil.mkdirs(spark, src)
-        # ONE staging job (r10): write all drops in a single
-        # partitionBy(drop) pass — repartition(_TWS_DROPS, drop) puts each
-        # drop's rows in exactly one task, so every drop= dir holds exactly
-        # one data file (vs _TWS_DROPS separate filter+coalesce(1) jobs,
-        # each a full events scan). The sequential copies below stamp the
-        # ascending mtimes that order the micro-batches.
-        stage = root.rstrip("/") + "/stage"
-        (
-            ev.withColumn(
-                "drop", (F.col("event_id") % _TWS_DROPS).cast("int")
-            )
-            .repartition(_TWS_DROPS, "drop")
-            .write.mode("overwrite")
-            .partitionBy("drop")
-            .parquet(stage)
-        )
-        # A drop with no rows (degenerate fixture: empty events, or all
-        # event_id sharing one parity) writes no drop= directory at all —
-        # skip it instead of indexing into an empty listing.
-        # Fewer staged files just means fewer micro-batches; the fold's
-        # semantics don't depend on the batch count.
-        for i in range(_TWS_DROPS):
-            try:
-                files = fsutil.list_files(
-                    spark, stage + f"/drop={i}", suffix=".parquet"
-                )
-            except Exception:  # missing drop= dir (FileNotFound via py4j)
-                continue
-            if files:
-                fsutil.copy(spark, files[0], src + f"/drop{i}.parquet")
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        name = "tws_" + uuid.uuid4().hex[:8]
-        # The tws drain's output is one versioned row per user per batch
-        # — ~input_rows/60 per batch (fixture users average ~60 events),
-        # so it is input-PROPORTIONAL, just 60x narrower. A literal 0
-        # here would pin the memory sink unconditionally and reintroduce
-        # the driver-OOM class the append-mode sink gate closes:
-        # at the 100 TB target, input/60 per batch is still terabytes.
-        # Charge the gate the scaled estimate instead: small fixtures
-        # (sf0.1 ~2 MB -> ~70 KB estimate) keep the cheap memory sink,
-        # while a large staged source trips the executor-side parquet
-        # path exactly as the sessionizer's input-sized drains do.
-        run_available_now(
-            user_totals_tws(stream),
-            name,
+    ev_bytes = _events_bytes(spark, sf_dir)
+    ev = load_events(spark, sf_dir).select("ts", "user_id", "event_id")
+    drops = (F.col("event_id") % _TWS_DROPS).cast("int")
+    with streaming.ordered_drops_source(spark, ev, drops, _TWS_DROPS) as (stream, _):
+        return streaming.drain(
+            streaming.user_totals_tws(stream),
             "append",
-            input_bytes=max(1, ev_bytes * _TWS_DROPS // 60),
-            # NO skip_final_nodata_batch here (r14):
-            # this fold has no watermark and no timers, so the availableNow
-            # drain never runs a trailing no-data batch AT ALL — probed at
-            # sf0.1: batchIds [(0, 50000), (1, 50000)] identical with the
-            # flag on and off, and a 5-pass interleaved A/B read the flag
-            # at min 6.29 vs 6.27 s (pure noise). The r13 driver's −16%
-            # on this entry coincided with the flag but was not caused by
-            # it; reverting removes the confound at zero cost.
-        )
-        out = spark.sql(
-            f"""
+            """
             SELECT user_id, n_events, sum_event_ids FROM (
               SELECT *, ROW_NUMBER() OVER (
                 PARTITION BY user_id ORDER BY version DESC
               ) AS rn FROM {name}
             ) WHERE rn = 1
-            """
-        ).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prev_provider)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if root is not None:
-            fsutil.delete(spark, root)
+            """,
+            # The drain's output is one versioned row per user per batch,
+            # ~input_rows/60 per batch (fixture users average ~60 events):
+            # input-PROPORTIONAL, just 60x narrower. A literal 0 would pin
+            # the memory sink unconditionally and reintroduce the
+            # driver-OOM class the sink gate closes (at 100 TB, input/60 per
+            # batch is still terabytes), so the gate gets the scaled
+            # estimate: small fixtures (sf0.1 ~2 MB -> ~70 KB) keep the
+            # memory sink, a large source takes the parquet path.
+            input_bytes=max(1, ev_bytes * _TWS_DROPS // 60),
+            # transformWithState keeps each named state variable in its own
+            # column family, which only the RocksDB provider supports (the
+            # HDFS-backed default raises multipleColumnFamiliesNotSupported).
+            confs={
+                _PROVIDER_KEY: _ROCKSDB,
+                **_narrow_state(ev_bytes, _TWS_SMALL_INPUT_BYTES),
+            },
+        )
 
 
 # Micro-batch count for the tws drain: 2 proves cross-batch ValueState
-# accumulation (the operator's point) at the minimum per-batch flat cost;
-# the final totals are split-invariant (all-integer fold), so the value is
-# a pure staging/perf knob — see the r10 note in the docstring above.
+# accumulation (the operator's point) at the minimum per-batch flat cost
+# (each TWS micro-batch costs ~2.5 s flat in store opens and state-server
+# handshakes at driver SF, so a third batch buys nothing the second does
+# not already prove). The final totals are split-invariant (all-integer
+# fold), so the value is a pure staging/perf knob.
 _TWS_DROPS = 2
 
-# Below this events-table size the stateful shuffle shrinks to 8
-# partitions (store-open flat cost dominates); above it the session
-# default stands (the fold is compute-bound — measured at sf1, see the
-# docstring). sf0.1's events sit ~2 MB, sf1's ~18 MB.
+# Below this events-table size the tws stateful shuffle shrinks to 8
+# partitions: at driver SF the flat per-partition cost dominates (32 RocksDB
+# column-family stores per batch priced ~1.5 s/batch in store management;
+# hash-identical output, pinned by test_tws_totals_converge_to_batch). Above
+# it the fold is compute-bound and wants the session default (8 partitions
+# measured 14.4 s vs 32's 12.3 s at sf1). sf0.1's events sit ~2 MB, sf1's
+# ~18 MB.
 _TWS_SMALL_INPUT_BYTES = 8 * 1024 * 1024
 
-# Small-input gate for _drain_staged's shuffle_partitions override (r11;
-# measured threshold — see the gate's comment in _drain_staged).
-_DRAIN_SMALL_INPUT_BYTES = 32 * 1024 * 1024
+_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
 
 STREAM_TWS_SQL = """
@@ -1172,16 +943,16 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the hash gate: tumbling (stream_hourly_counts), session
     (stream_sessions_gap_closed), sliding (this row).
     """
-    from ..streaming import sliding_counts
+    from .. import streaming
 
     # State is ~2 windows per (hour, event_type) — thousands of rows; same
-    # narrow-stateful-width rationale as stream_hourly_counts (gated on
-    # input size in _drain_staged).
-    return _drain_staged(
-        spark, "evs_", sliding_counts, "complete",
-        "SELECT window_start, event_type, n_events, total_value FROM {name}",
-        sf_dir=sf_dir, shuffle_partitions=8,
-    )
+    # narrow-stateful-width rationale as stream_hourly_counts.
+    with streaming.events_source(spark, sf_dir) as (stream, nbytes):
+        return streaming.drain(
+            streaming.sliding_counts(stream), "complete",
+            "SELECT window_start, event_type, n_events, total_value FROM {name}",
+            input_bytes=nbytes, confs=_narrow_state(nbytes),
+        )
 
 
 QUERIES["stream_sliding_counts"] = stream_sliding_counts
@@ -1264,17 +1035,18 @@ def stream_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the emitted pair set must equal the batch interval join —
     purchase_within_hour_of_click's oracle, reused verbatim.
     """
-    from ..streaming import purchases_after_clicks
+    from .. import streaming
 
-    # shuffle_partitions=8, the kv_stream_final_state sizing: the join
+    # 8 stateful partitions, the kv_stream_final_state sizing: the join
     # buffers state per user_id on BOTH sides, and 32 near-empty
     # state-store partitions cost more in per-partition setup than the
     # join itself (measured 10 s -> 3 s).
-    return _drain_staged(
-        spark, "ssj_", purchases_after_clicks, "append",
-        "SELECT user_id, click_id, purchase_id, gap_us FROM {name}",
-        sf_dir=sf_dir, shuffle_partitions=8,
-    )
+    with streaming.events_source(spark, sf_dir) as (stream, nbytes):
+        return streaming.drain(
+            streaming.purchases_after_clicks(stream), "append",
+            "SELECT user_id, click_id, purchase_id, gap_us FROM {name}",
+            input_bytes=nbytes, confs=_narrow_state(nbytes),
+        )
 
 
 QUERIES["stream_click_purchase_join"] = stream_click_purchase_join
@@ -1432,36 +1204,21 @@ def stream_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval+aggregate row, evicted on merge; at scale the same one
     shuffle on user_id as the batch twin, sized here to key cardinality.
     """
-    def build(ev):
-        return (
-            ev.withWatermark("ts", "2 hours")
-            .groupBy(
-                F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("sw"),
-                "user_id",
-            )
-            .agg(
-                F.count("*").alias("n_events"),
-                F.sum(money(F.col("value"))).cast("double").alias("total_value"),
-            )
-            .select(
-                "user_id",
-                F.col("sw.start").alias("session_start"),
-                F.col("sw.end").alias("session_end"),
-                "n_events",
-                "total_value",
-            )
-        )
+    from .. import streaming
 
-    return _drain_staged(
-        spark, "snat_", build, "complete",
-        "SELECT user_id, session_start, session_end, n_events, total_value "
-        "FROM {name}",
-        sf_dir=sf_dir, shuffle_partitions=8,
-        # complete result ~= one row per session ~= input cardinality: the
-        # executor-side parquet sink beats the driver memory sink at every
-        # SF (see _drain_staged)
-        force_complete_parquet=True,
-    )
+    with streaming.events_source(spark, sf_dir) as (stream, nbytes):
+        return streaming.drain(
+            streaming.session_windows(stream, f"{SESSION_GAP_MIN} minutes"),
+            "complete",
+            "SELECT user_id, session_start, session_end, n_events, total_value "
+            "FROM {name}",
+            # The complete result is one row per session, ~ the input's
+            # cardinality, so the input-byte gate mispredicts the memory
+            # sink's driver cost (the result must fit, not the source):
+            # None forces the executor-side parquet sink: 11.2 -> 9.6 s at
+            # sf1, and no slower at the driver SFs.
+            input_bytes=None, confs=_narrow_state(nbytes),
+        )
 
 
 QUERIES["stream_session_window_native"] = stream_session_window_native

@@ -20,8 +20,6 @@ value from the event payload) — identically in Spark and the DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -319,113 +317,60 @@ def kv_stream_final_state(
     runs — and the final per-key state must equal the batch fold, so this
     query SHARES kv_final_state's DuckDB oracle. This is the one registry
     row where the correctness gate hashes actual streaming-engine output
-    instead of a batch twin. The memory-sink table name is unique per
-    invocation so repeated runs in one session don't collide. Final state
+    instead of a batch twin. Final state
     per key = the max-``version`` row (version = max seq applied, emitted
     by the stateful fold itself) — correct for any micro-batch split of
     the drain; sink row order is never consulted.
 
-    Staging (r9): the default single-batch drain does NOT rewrite the op
-    log — the events table streams IN PLACE from the fixture (pathGlobFilter
-    for single-file fixtures, the part dir directly for scaled ones; any
-    URI works — replaces the r8 symlink staging, which needed a
-    driver-local POSIX path) and the op-log projection is applied to the
-    STREAM DataFrame (the fold
-    sorts each micro-batch by seq internally, so file order and row order
-    are both immaterial within one batch — and with no maxFilesPerTrigger
-    an availableNow drain takes every listed file in one batch). That
-    removes the old sort+coalesce(1)+rewrite of the whole log (~1s of the
-     2.8s sf0.1 cost; driver-visible after the r7 complete-mode hardening
-    made the entry read 3.5s under load).
+    The default single-batch drain does NOT rewrite the op log: the
+    events table streams IN PLACE from the fixture and the op-log
+    projection is applied to the STREAM DataFrame (the fold sorts each
+    micro-batch by seq internally, so file order and row order are both
+    immaterial within one batch, and with no maxFilesPerTrigger an
+    availableNow drain takes every listed file in one batch). That removes
+    a sort+coalesce(1)+rewrite of the whole log (~1 s of the 2.8 s sf0.1
+    cost).
 
-    ``n_files`` > 1 keeps the explicit staging: the log is written as that
-    many contiguous-seq file drops and drained with maxFilesPerTrigger=1,
-    forcing a multi-micro-batch drain of THIS exact code path (state
-    carried across batches, version re-emissions per batch; cross-batch
-    ORDER matters there, hence contiguous seq ranges) —
+    ``n_files`` > 1 stages the log as that many contiguous-seq file drops
+    drained one per micro-batch, forcing a multi-micro-batch drain of THIS
+    exact code path (state carried across batches, version re-emissions
+    per batch; cross-batch ORDER matters there, hence contiguous seq
+    ranges: drop order = seq order, the stream's arrival-order contract) —
     tests/test_streaming.py asserts n_files=3 produces the identical
     result.
     """
-    import uuid
+    from .. import streaming
 
-    from .. import fsutil
-    from ..streaming import kv_append_state, run_available_now, stream_events
-
-    root = None
-    try:
+    writes = F.col("op") != "get"
+    if n_files <= 1:
+        source = streaming.events_source(spark, sf_dir)
+    else:
+        ops = kv_ops(spark, sf_dir).filter(writes)
+        hi = ops.agg(F.max("seq")).first()[0] + 1
+        drops = F.expr(f"seq * {n_files} div {hi}")
+        source = streaming.ordered_drops_source(spark, ops, drops, n_files)
+    with source as (stream, nbytes):
         if n_files <= 1:
-            # zero staging: stream the events table in place (driver
-            # fixtures are single files — filename glob; scaled fixtures
-            # are part dirs — streamed directly)
-            path = os.path.join(sf_dir, "events.parquet")
-            ev = (
-                stream_events(spark, path)
-                if fsutil.is_dir(spark, path)
-                else stream_events(spark, sf_dir, glob="events.parquet")
-            )
-            stream = _ops_projection(ev).filter(F.col("op") != "get")
-        else:
-            root = fsutil.mkscratch(spark, "kv_stream_q_")
-            src = root.rstrip("/") + "/src"
-            fsutil.mkdirs(spark, src)
-            ops = kv_ops(spark, sf_dir).filter(F.col("op") != "get")
-            # contiguous seq ranges: drop order = seq order, the stream's
-            # arrival-order contract (out-of-order arrival is a different
-            # operator — the watermarked dedup path covers that).
-            hi = ops.agg(F.max("seq")).first()[0] + 1
-            splits = [
-                ops.filter(
-                    (F.col("seq") >= i * hi / n_files)
-                    & (F.col("seq") < (i + 1) * hi / n_files)
-                )
-                for i in range(n_files)
-            ]
-            for i, part in enumerate(splits):
-                stage = root.rstrip("/") + f"/stage{i}"
-                part.coalesce(1).write.mode("overwrite").parquet(stage)
-                pfile = fsutil.list_files(spark, stage, suffix=".parquet")[0]
-                # sequential FS-to-FS copies stamp ascending mtimes — the
-                # file source's micro-batch order
-                fsutil.copy(spark, pfile, src + f"/drop{i}.parquet")
-            stream = (
-                spark.readStream.schema(splits[0].schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-        name = "kvsfs_" + uuid.uuid4().hex[:8]
-        # Size the stateful shuffle to the state's key cardinality (50 keys
-        # here): state-store partitions are fixed at the first checkpoint of
-        # a real deployment, and 32 near-empty partitions just spin 32
-        # Python state workers for nothing (measured 3.6 -> 2.2 s).
-        # Restored after the drain so batch queries keep the session value.
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            # update-mode snapshot fold with NoTimeout: nothing emits in a
-            # no-data batch, so skip it (see run_available_now, r13)
-            run_available_now(
-                kv_append_state(stream), name, "update",
-                skip_final_nodata_batch=True,
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    finally:
-        if root is not None:
-            fsutil.delete(spark, root)
-    # update-mode memory sink appends one row per (key, micro-batch);
-    # the max-version emission per key is the final state. localCheckpoint
-    # severs lineage from the memory-sink table so the temp view can be
-    # dropped immediately — repeated invocations don't litter the catalog.
-    out = spark.sql(
-        f"""
-        SELECT key, state FROM (
-          SELECT key, state, row_number() OVER (PARTITION BY key ORDER BY version DESC) AS r
-          FROM {name}
-        ) WHERE r = 1
-        """
-    ).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return out
+            stream = _ops_projection(stream).filter(writes)
+        # update mode appends one row per (key, micro-batch); the
+        # max-version emission per key is the final state
+        return streaming.drain(
+            streaming.kv_append_state(stream),
+            "update",
+            """
+            SELECT key, state FROM (
+              SELECT key, state, row_number() OVER (PARTITION BY key ORDER BY version DESC) AS r
+              FROM {name}
+            ) WHERE r = 1
+            """,
+            input_bytes=nbytes,
+            # Size the stateful shuffle to the state's key cardinality (50
+            # keys here): state-store partitions are fixed at the first
+            # checkpoint of a real deployment, and 32 near-empty partitions
+            # just spin 32 Python state workers for nothing (measured 3.6 ->
+            # 2.2 s). Unlike the events entries, at every input size.
+            confs={"spark.sql.shuffle.partitions": "8"},
+        )
 
 
 QUERIES["kv_stream_final_state"] = kv_stream_final_state

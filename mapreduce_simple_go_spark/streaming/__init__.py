@@ -12,19 +12,27 @@ module provides the streaming forms:
   maintained across micro-batches, converging to
   ``operators.kv.kv_final_state``.
 
+The registry's streaming entries (operators.events, operators.kv) each pick
+a bounded source (:func:`events_source`, :func:`staged_source`,
+:func:`ordered_drops_source`), build one of these operators over it and
+hand the result to :func:`drain`, the one path that scopes their confs,
+drains an ``availableNow`` query into a sink, runs the final SELECT,
+materializes it and cleans up.
+
 Scale notes: watermarks bound window state; the KV operator's state is one
-string per key (exactly the reference server's in-memory map). File-source
-streams are used in tests (``availableNow`` trigger = bounded replay).
+string per key (exactly the reference server's in-memory map).
 """
 
 from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -35,36 +43,153 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions import money
+
+
+def _events_reader_confs(spark: SparkSession) -> None:
+    # Same session-independence contract as sources.load_events: the
+    # fixture's ts physical type has varied across generations (NANOS-as-
+    # long, MICROS-NTZ, MICROS); with these two confs _normalize_ts lands
+    # every form on TimestampType.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def _parquet_stream(
+    spark: SparkSession,
+    path: str,
+    schema: StructType,
+    glob: str | None = None,
+    per_trigger: int | None = None,
+) -> DataFrame:
+    """File-source stream over the parquet files in ``path`` (file sources
+    require an explicit schema). ``glob`` is a ``pathGlobFilter``;
+    ``per_trigger`` a ``maxFilesPerTrigger``."""
+    reader = spark.readStream.schema(schema)
+    if glob is not None:
+        reader = reader.option("pathGlobFilter", glob)
+    if per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", per_trigger)
+    return reader.parquet(path)
+
+
 def stream_events(
     spark: SparkSession, src_dir: str, glob: str | None = None
 ) -> DataFrame:
     """File-source stream over events parquet files in ``src_dir``.
 
-    Schema is taken from a batch read of the same directory (file sources
-    require an explicit schema); the nanosecond ``ts`` is normalized to
-    TimestampType exactly like sources.load_events.
-
+    Schema is taken from a batch read of the same files; the nanosecond
+    ``ts`` is normalized to TimestampType exactly like sources.load_events.
     ``glob`` (a ``pathGlobFilter``) restricts the source to matching file
-    names — how single-file fixtures stream IN PLACE from a directory that
-    also holds other tables (r9; replaces the symlink staging, which
-    required a driver-local POSIX fixture path). ``src_dir`` may be any
-    URI the cluster's Hadoop conf resolves.
+    names. ``src_dir`` may be any URI the cluster's Hadoop conf resolves.
+    The registry entries stream the fixture through :func:`events_source`,
+    which takes the schema from ``sources.table``'s cache instead.
     """
-    # Same session-independence contract as sources.load_events: the
-    # fixture's ts physical type has varied across generations (NANOS-as-
-    # long, MICROS-NTZ, MICROS); normalize all of them to TimestampType.
     from ..sources import _normalize_ts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    batch = spark.read
-    stream = spark.readStream
-    if glob is not None:
-        batch = batch.option("pathGlobFilter", glob)
-        stream = stream.option("pathGlobFilter", glob)
+    _events_reader_confs(spark)
+    batch = spark.read if glob is None else spark.read.option("pathGlobFilter", glob)
     schema = batch.parquet(src_dir).schema
-    ev = stream.schema(schema).parquet(src_dir)
-    return _normalize_ts(ev)
+    return _normalize_ts(_parquet_stream(spark, src_dir, schema, glob=glob))
+
+
+# --- Bounded sources of the registry entries ---------------------------------
+#
+# Each is a context manager yielding ``(stream_df, input_bytes)``: the stream
+# and the bytes of its data files (never _SUCCESS/.crc siblings, so the sink
+# and width gates mean the same on every source). Staged sources write under
+# fsutil.mkscratch and delete it on exit; all probes, writes and copies go
+# through the Hadoop FS API, so ``sf_dir`` and SPARK_GRAFT_SCRATCH_DIR may be
+# URIs on any scheme the deployment resolves.
+
+
+@contextmanager
+def events_source(spark: SparkSession, sf_dir: str):
+    """The fixture's events table streamed IN PLACE: no staging copy.
+
+    A single-file fixture streams from ``sf_dir`` through a filename glob,
+    so sibling tables are invisible to the source; a Spark-written
+    directory (the scaled fixtures) streams directly. The schema comes
+    from ``sources.table``'s per-file-version cache, so a warm build runs
+    no schema-inference job.
+    """
+    from ..fsutil import du_suffix_bytes, is_dir
+    from ..sources import _normalize_ts, table
+
+    _events_reader_confs(spark)
+    src = os.path.join(sf_dir, "events.parquet")
+    schema = table(spark, sf_dir, "events").schema
+    if is_dir(spark, src):
+        stream = _parquet_stream(spark, src, schema)
+    else:
+        stream = _parquet_stream(spark, sf_dir, schema, glob="events.parquet")
+    yield _normalize_ts(stream), du_suffix_bytes(spark, src, ".parquet")
+
+
+@contextmanager
+def staged_source(spark: SparkSession, df: DataFrame, single_file: bool = True):
+    """``df`` written to scratch and streamed back as ONE micro-batch.
+
+    ``single_file`` writes one file (coalesce(1)), so arrival order is
+    ``df``'s row order; a caller whose result depends on that order (the
+    sessionizer sorts by ts first) must keep it, since a hash repartition
+    would lose the order. ``single_file=False`` keeps the write parallel
+    for arrival-order-free callers: the coalesce(1) write is a one-task
+    funnel of the whole staged table (~3.5 s of stream_dedup_counts' 7 s
+    at the 10x fixture). The stream takes the schema of the frame just
+    written.
+    """
+    from ..fsutil import delete, du_suffix_bytes, mkscratch
+
+    scratch = mkscratch(spark, "stage_")
+    try:
+        stage = scratch.rstrip("/") + "/stage"
+        (df.coalesce(1) if single_file else df).write.mode("overwrite").parquet(stage)
+        stream = _parquet_stream(spark, stage, df.schema, glob="*.parquet")
+        yield stream, du_suffix_bytes(spark, stage, ".parquet")
+    finally:
+        delete(spark, scratch)
+
+
+@contextmanager
+def ordered_drops_source(
+    spark: SparkSession, df: DataFrame, drop: Column, n_drops: int
+):
+    """``df`` split by the integer column ``drop`` (values 0..n_drops-1)
+    into one file per drop, drained ONE FILE PER MICRO-BATCH in drop order.
+
+    One staging job: repartition(n_drops, drop) puts each drop's rows in
+    one task, so partitionBy(drop) writes exactly one file per drop (where
+    a filter + coalesce(1) per drop would scan ``df`` once per drop).
+    Sequential copies then stamp ascending mtimes, the file source's
+    micro-batch order, and maxFilesPerTrigger=1 makes each file its own
+    micro-batch. A drop with no rows writes no directory and is skipped:
+    fewer files just means fewer micro-batches.
+    """
+    from ..fsutil import copy, delete, du_suffix_bytes, exists, list_files
+    from ..fsutil import mkdirs, mkscratch
+
+    scratch = mkscratch(spark, "drops_")
+    try:
+        stage = scratch.rstrip("/") + "/stage"
+        src = scratch.rstrip("/") + "/src"
+        (
+            df.withColumn("drop", drop)
+            .repartition(n_drops, "drop")
+            .write.mode("overwrite")
+            .partitionBy("drop")
+            .parquet(stage)
+        )
+        mkdirs(spark, src)
+        for i in range(n_drops):
+            part = f"{stage}/drop={i}"
+            if exists(spark, part):
+                first = list_files(spark, part, suffix=".parquet")[0]
+                copy(spark, first, f"{src}/drop{i}.parquet")
+        stream = _parquet_stream(spark, src, df.schema, per_trigger=1)
+        yield stream, du_suffix_bytes(spark, src, ".parquet")
+    finally:
+        delete(spark, scratch)
 
 
 def hourly_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -245,15 +370,112 @@ def dedup_events_stream(events: DataFrame, watermark: str = "2 hours") -> DataFr
     )
 
 
-# Complete-mode sink gate (r8): below this many INPUT bytes the memory sink
-# is safe and ~0.5-1 s cheaper per drain than the parquet round-trip; above
-# it the parquet path removes the driver-size term entirely. Calibration:
-# the r7 driver OOM happened at the 100x fixture
-# (~187 MB of staged events -> a 9.5 M-row complete result on an 8 GB
-# driver); 32 MB keeps a >5x margin below that while still letting every
-# driver-SF (sf0.001-0.1, <=2 MB) and 10x (17 MB) drain stay on the memory
-# sink. Same shape as the brute/IVF gate in operators.similarity.
+# Complete/append sink gate: at or below this many INPUT bytes the memory
+# sink is safe and ~0.5-1 s cheaper per drain than the parquet round-trip
+# (a 50-row result paid the whole round-trip); above it the parquet path
+# removes the driver-size term entirely. Calibration: the driver OOM'd at
+# the 100x fixture (~187 MB of staged events -> a 9.5 M-row complete
+# result on an 8 GB driver); 32 MB keeps a >5x margin below that while
+# still letting every driver-SF (sf0.001-0.1, <=2 MB) and 10x (17 MB)
+# drain stay on the memory sink. Same shape as the brute/IVF gate in
+# operators.similarity.
 _COMPLETE_MEMORY_MAX_BYTES = 32 << 20
+
+_NODATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the with-body, then restore each
+    key's prior value (unset again if it had none).
+
+    NOT thread-safe: it mutates SESSION conf, so concurrent queries sharing
+    the session would race on it. Registry entries run sequentially (the
+    driver gate, bench and perfbench all iterate); parallel callers need a
+    session of their own (``spark.newSession()``).
+    """
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@contextmanager
+def _sink_view(
+    stream_df: DataFrame,
+    name: str,
+    output_mode: str,
+    input_bytes: int | None,
+    confs: dict[str, str],
+):
+    """Drain ``stream_df`` (availableNow, under ``confs``) into temp view
+    ``name``. Yields the parquet sink dir, or None for the memory sink, and
+    deletes the sink dir on exit; the caller drops the view.
+
+    Update drains use the memory sink (their per-batch output is
+    incremental and small). COMPLETE mode keeps the ENTIRE result table in
+    DRIVER memory and rewrites it every micro-batch (a driver-side collect
+    in disguise: at the 100x fixture the native-session-window drain's
+    full result OOM'd an 8 GB driver heap). APPEND mode accumulates every
+    emitted row in driver memory the same way, which is fine for
+    rollup-sized outputs but fatal for INPUT-SIZED ones (an sf100
+    spot-check OOM'd a 32 GB heap on the sessionizer's ~10^8-row append
+    drain). So complete and append drains whose ``input_bytes`` exceed
+    ``_COMPLETE_MEMORY_MAX_BYTES``, or is None, go through foreachBatch ->
+    parquet (an executor-side write), and the view reads the files back.
+    Both sinks are hash-identical by construction (tests pin it).
+
+    The parquet sink root comes from ``fsutil.mkscratch``: driver-local
+    ``tempfile`` by default (right for local[*]); on a multi-node cluster
+    set ``SPARK_GRAFT_SCRATCH_DIR`` to a shared root (any URI the Hadoop
+    conf resolves).
+    """
+    from ..fsutil import delete, list_files, mkscratch
+
+    spark = stream_df.sparkSession
+    sink = None
+    if output_mode != "update" and (
+        input_bytes is None or input_bytes > _COMPLETE_MEMORY_MAX_BYTES
+    ):
+        sink = mkscratch(spark, f"{name}_sink_")
+    try:
+        writer = stream_df.writeStream.outputMode(output_mode).trigger(
+            availableNow=True
+        )
+        if sink is None:
+            writer = writer.format("memory").queryName(name)
+        else:
+            # complete: every batch REWRITES the full table (overwrite
+            # keeps only the final batch). append: each batch's emissions
+            # are final and disjoint, so batches APPEND and the union of
+            # files IS the drained stream.
+            batch_mode = "overwrite" if output_mode == "complete" else "append"
+            writer = writer.foreachBatch(
+                lambda df, _bid: df.write.mode(batch_mode).parquet(sink)
+            )
+        with scoped_confs(spark, confs):
+            q = writer.start()
+            try:
+                q.awaitTermination()
+            finally:
+                q.stop()  # a no-op after a finished drain; ends an interrupted one
+        if sink is not None:
+            if list_files(spark, sink, suffix=".parquet"):
+                out = spark.read.parquet(sink)
+            else:  # zero batches ran (empty bounded source)
+                out = spark.createDataFrame([], stream_df.schema)
+            out.createOrReplaceTempView(name)
+        yield sink
+    finally:
+        if sink is not None:
+            delete(spark, sink)
 
 
 def run_available_now(
@@ -261,153 +483,72 @@ def run_available_now(
     query_name: str,
     output_mode: str,
     input_bytes: int | None = None,
-    defer_cleanup: bool = False,
     skip_final_nodata_batch: bool = False,
-):
-    """Drain a bounded stream into a queryable temp view named ``query_name``.
+) -> None:
+    """Drain a bounded stream into a queryable temp view named ``query_name``
+    (the memory or parquet sink, gated on ``input_bytes``: see
+    :func:`_sink_view`). A parquet-sink view is localCheckpointed so its
+    scratch dir can go at once; callers are agnostic to which sink ran.
 
-    Update drains use the memory sink (their per-batch output is
-    incremental and small). COMPLETE mode keeps the ENTIRE result table in
-    DRIVER memory and rewrites it every micro-batch — a driver-side
-    collect in disguise; at the 100x fixture the native-session-window
-    drain's full result put an 8 GB driver heap at its margin (observed
-    OOM, r7). APPEND mode accumulates every emitted row in driver memory
-    the same way, which is fine for rollup-sized outputs but fatal for
-    INPUT-SIZED ones — the r12 sf100 spot-check OOM'd a 32 GB heap on the
-    sessionizer's ~10^8-row append drain. LARGE complete AND append drains
-    therefore go through foreachBatch -> parquet (executor-side write,
-    overwrite-per-batch for complete, append-per-batch for append); the
-    table is read back, eagerly localCheckpointed (so the scratch dir can
-    be removed immediately), and registered under the same view name —
-    callers are agnostic to which sink ran.
-
-    ``input_bytes`` (the staged source size, which callers know for free)
-    gates the two complete-mode sinks: at or below
-    ``_COMPLETE_MEMORY_MAX_BYTES`` the memory sink's result is provably
-    tiny and the parquet round-trip is pure overhead (r7 charged every
-    small drain ~0.5-1 s for a 50-row result); above it — or when the
-    caller passes None — the parquet path runs. Both sinks are
-    hash-identical by construction (tests pin it).
-
-    Scratch-dir note: the parquet sink root comes from ``fsutil.mkscratch``
-    — driver-local ``tempfile`` by default (correct for local[*], this
-    repo's test target); on a multi-node cluster set
-    ``SPARK_GRAFT_SCRATCH_DIR`` to a shared root (NFS/DBFS/object-store
-    URI — any scheme the Hadoop conf resolves; r9 made the sink write,
-    existence probe, and cleanup go through the Hadoop FS API so a URI
-    value actually works, where the old ``tempfile.mkdtemp(dir=...)`` +
-    ``os.listdir`` required a driver-local POSIX path).
-
-    r13 (remove work outright, applied to micro-batches):
     ``skip_final_nodata_batch=True`` disables ``noDataMicroBatches`` for
     the drain's duration. An availableNow drain otherwise appends one
-    FINAL no-data micro-batch after the data batches — a full state-store
-    open/commit roundtrip across every stateful partition, and in
-    complete mode a full rewrite of the result table — whose only
-    observable effects are (a) rewriting complete-mode output that is
-    already final, and (b) emitting rows the final watermark advance
-    closes (append-mode windows still open after the last data batch;
-    event-time TIMEOUT sweeps). The flag is OPT-IN per call because (b)
-    is real semantics for a watermarked append-mode aggregation (and the
-    tests pin it): only callers whose final SELECT provably never reads a
-    no-data-batch emission may pass it — complete/update snapshots,
-    append entries with no timeout path (dropDuplicatesWithinWatermark,
-    stream-stream inner join, NoTimeout folds), and append entries that
-    filter to data-batch-only rows (``closed_by = 'gap'``). Every
-    registry drain qualifies and passes True (the saving is one
-    state-store roundtrip per partition per drain, scale-independent; in
-    complete mode a full result rewrite). The session value is restored
-    after the drain.
-
-    NOT thread-safe (same caveat as _drain_staged's shuffle_partitions
-    override): the conf save/set/restore mutates SESSION state around the
-    drain.
+    FINAL no-data micro-batch after the data batches: a full state-store
+    open/commit roundtrip across every stateful partition, and in complete
+    mode a full rewrite of the result table. Its only observable effects
+    are (a) rewriting complete-mode output that is already final, and (b)
+    emitting rows the final watermark advance closes (append-mode windows
+    still open after the last data batch; event-time TIMEOUT sweeps). So
+    the skip is opt-in: (b) is real semantics for a watermarked
+    append-mode aggregation (the tests pin it), and only a caller whose
+    result never reads a no-data-batch emission may pass it.
     """
-    if skip_final_nodata_batch:
-        spark_ = stream_df.sparkSession
-        _NODATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
-        prev_nodata = spark_.conf.get(_NODATA_KEY)
-        spark_.conf.set(_NODATA_KEY, "false")
-        try:
-            return _run_available_now_inner(
-                stream_df, query_name, output_mode, input_bytes, defer_cleanup
-            )
-        finally:
-            spark_.conf.set(_NODATA_KEY, prev_nodata)
-    return _run_available_now_inner(
-        stream_df, query_name, output_mode, input_bytes, defer_cleanup
-    )
+    confs = {_NODATA_KEY: "false"} if skip_final_nodata_batch else {}
+    with _sink_view(stream_df, query_name, output_mode, input_bytes, confs) as sink:
+        if sink is not None:
+            stream_df.sparkSession.table(query_name).localCheckpoint(
+                eager=True
+            ).createOrReplaceTempView(query_name)
 
 
-def _run_available_now_inner(
+def drain(
     stream_df: DataFrame,
-    query_name: str,
     output_mode: str,
-    input_bytes: int | None = None,
-    defer_cleanup: bool = False,
-):
-    """Body of :func:`run_available_now` (wrapped for the no-data-batch
-    conf scope — see its docstring)."""
-    if output_mode in ("complete", "append") and (
-        input_bytes is None or input_bytes > _COMPLETE_MEMORY_MAX_BYTES
-    ):
-        from ..fsutil import delete as fs_delete
-        from ..fsutil import list_files, mkscratch
+    select_sql: str,
+    *,
+    input_bytes: int | None,
+    confs: dict[str, str],
+) -> DataFrame:
+    """The one drain path of the streaming registry entries: drain
+    ``stream_df`` with ``confs`` set, run ``select_sql`` (``{name}`` names
+    the drained table) and return its result, materialized once.
 
-        spark = stream_df.sparkSession
-        sink = mkscratch(spark, f"{query_name}_sink_")
-        delete_in_finally = True
-        # complete: every batch REWRITES the full table (overwrite keeps
-        # only the final batch). append: each batch's emissions are final
-        # and disjoint, so batches APPEND — the union of files IS the
-        # drained stream. The r12 sf100 spot-check OOM'd a 32 GB driver
-        # heap on the sessionizer's APPEND drain (input-sized output
-        # through the memory sink — a driver collect in disguise, the
-        # same failure complete mode hit at the 100x fixture in r7);
-        # append now goes through the same gated executor-side sink.
-        batch_mode = "overwrite" if output_mode == "complete" else "append"
-        try:
-            q = (
-                stream_df.writeStream.foreachBatch(
-                    lambda df, _bid: df.write.mode(batch_mode).parquet(sink)
-                )
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            if list_files(spark, sink, suffix=".parquet"):
-                out = spark.read.parquet(sink)
-            else:  # zero batches ran (empty bounded source)
-                out = spark.createDataFrame([], stream_df.schema)
-            if defer_cleanup:
-                # The caller materializes the view itself (e.g.
-                # _drain_staged's final localCheckpoint) — skipping the
-                # checkpoint HERE avoids materializing a large complete
-                # result twice (r11: ~2 s of session_window_native's sf1
-                # drain), at the price that the caller MUST invoke the
-                # returned callback once done with the view.
-                out.createOrReplaceTempView(query_name)
+    The caller picks the policy: ``confs`` (e.g. the stateful shuffle
+    width, the state-store provider) and ``input_bytes``, the sink gate's
+    size (None forces the parquet sink). On every exit path the confs are
+    restored, the query is stopped, the view is dropped and the sink
+    scratch is deleted. The eager localCheckpoint severs the result from
+    both, and is the only materialization at every input size.
 
-                def cleanup(spark=spark, sink=sink):
-                    fs_delete(spark, sink)
-
-                delete_in_finally = False  # deferred to the callback
-                return cleanup
-            out.localCheckpoint(eager=True).createOrReplaceTempView(query_name)
-        finally:
-            if delete_in_finally:
-                fs_delete(spark, sink)
-        return None
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return None
+    The trailing no-data micro-batch is always skipped (see
+    :func:`run_available_now`): every registry entry's SELECT reads only
+    data-batch emissions. Complete and update snapshots are final after
+    the last data batch; the append entries emit from
+    dropDuplicatesWithinWatermark, a stream-stream inner join, the tws
+    fold (no watermark, no timers) or filter to ``closed_by = 'gap'``
+    rows. The stateful tws drain runs the same batches either way (batchIds
+    [0, 1] with the skip on and off at sf0.01 and sf0.1). An entry whose
+    result NEEDS the final watermark advance (event-time timeout sweeps,
+    watermark-closed append windows) cannot use this path.
+    """
+    spark = stream_df.sparkSession
+    name = "drain_" + uuid.uuid4().hex[:8]
+    try:
+        with _sink_view(
+            stream_df, name, output_mode, input_bytes, {**confs, _NODATA_KEY: "false"}
+        ):
+            return spark.sql(select_sql.format(name=name)).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def sliding_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -429,20 +570,23 @@ def sliding_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
 
 
 def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Native session windows (gap-merged) per user — Spark's built-in
-    session_window; semantics equal the batch gaps-and-islands fold in
-    operators.events.sessionization for start/count (the built-in window
-    end extends gap past the last event)."""
+    """Native session windows (gap-merged) per user: Spark's built-in
+    session_window as the group key of a watermarked aggregation. Start,
+    count and value equal the batch gaps-and-islands fold in
+    operators.events.sessionization; ``session_end`` is last event + gap
+    (the interval end), as in the batch twin
+    operators.events.session_window_native."""
     return (
         events.withWatermark("ts", "2 hours")
         .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
+            F.sum(money(F.col("value"))).cast("double").alias("total_value"),
         )
         .select(
             "user_id",
             F.col("win.start").alias("session_start"),
+            F.col("win.end").alias("session_end"),
             "n_events",
             "total_value",
         )

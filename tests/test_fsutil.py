@@ -140,11 +140,11 @@ def test_ngram_size_gate_probe_is_uri_capable(spark):
 @pytest.mark.parametrize(
     "name",
     [
-        "stream_hourly_counts",        # _drain_staged raw-events path
+        "stream_hourly_counts",        # streaming.events_source in place
         "stream_sliding_counts",       # complete-mode sink gate path
         "kv_stream_final_state",       # kv in-place stream + ops projection
         "dedup_ngram_jaccard",         # size-gated join strategy
-        "stream_sessions_gap_closed",  # _drain_staged stage_df scratch path
+        "stream_sessions_gap_closed",  # streaming.staged_source scratch path
     ],
 )
 def test_queries_hash_identical_under_file_uri(spark, name):
@@ -157,12 +157,22 @@ def test_queries_hash_identical_under_file_uri(spark, name):
     assert _digest(fn(spark, SF_DIR)) == _digest(fn(spark, SF_URI))
 
 
-@pytest.mark.parametrize("name", ["csv_roundtrip", "schema_evolution_roundtrip"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "csv_roundtrip",
+        "schema_evolution_roundtrip",
+        "stream_sessions_gap_closed",    # streaming.staged_source
+        "stream_user_totals_tws",        # streaming.ordered_drops_source
+        "stream_session_window_native",  # the drain's forced parquet sink
+    ],
+)
 def test_roundtrip_sinks_honor_uri_scratch_root(spark, tmp_path, monkeypatch, name):
-    """The format-roundtrip entries write their sink through
-    fsutil.mkscratch (r9): with SPARK_GRAFT_SCRATCH_DIR set to a
-    file:-scheme URI the whole write/read-back/cleanup cycle must run
-    through the FS API and hash-match the default driver-local run."""
+    """The format-roundtrip entries' sinks and the streaming entries'
+    staging and sink dirs come from fsutil.mkscratch: with
+    SPARK_GRAFT_SCRATCH_DIR set to a file:-scheme URI the whole
+    write/read-back/cleanup cycle must run through the FS API and
+    hash-match the default driver-local run."""
     from mapreduce_simple_go_spark.operators import all_queries
 
     fn = all_queries()[name]

@@ -725,30 +725,20 @@ def test_native_session_window_append_withholds_open_sessions(spark, events_src)
     whose end is within the 2 h allowance of max event time)."""
     import datetime as dt
 
-    from pyspark.sql import functions as F
-
     from mapreduce_simple_go_spark.operators.events import (
         SESSION_GAP_MIN,
         session_window_native,
     )
-    from mapreduce_simple_go_spark.streaming import run_available_now, stream_events
+    from mapreduce_simple_go_spark.streaming import (
+        run_available_now,
+        session_windows,
+        stream_events,
+    )
 
     def drained(mode):
-        agg = (
-            stream_events(spark, events_src)
-            .withWatermark("ts", "2 hours")
-            .groupBy(
-                F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("sw"),
-                "user_id",
-            )
-            .agg(F.count("*").alias("n_events"))
-            .select(
-                "user_id",
-                F.col("sw.start").alias("session_start"),
-                F.col("sw.end").alias("session_end"),
-                "n_events",
-            )
-        )
+        agg = session_windows(
+            stream_events(spark, events_src), f"{SESSION_GAP_MIN} minutes"
+        ).drop("total_value")
         run_available_now(agg, f"snat_t_{mode}", mode)
         return spark.sql(f"SELECT * FROM snat_t_{mode}").collect()
 
@@ -886,6 +876,76 @@ def test_skip_final_nodata_batch_parity_and_fewer_batches(spark, events_src):
     assert results[True] == results[False]
     assert len(results[True]) > 0
     assert progress[True] < progress[False], progress
+
+
+# The registry's streaming entries: each is a source, a build and one
+# streaming.drain call.
+STREAM_ENTRIES = [
+    "kv_stream_final_state",
+    "stream_sessions_gap_closed",
+    "stream_hourly_counts",
+    "stream_dedup_counts",
+    "stream_enriched_counts",
+    "stream_user_totals_tws",
+    "stream_sliding_counts",
+    "stream_click_purchase_join",
+    "stream_session_window_native",
+]
+
+
+@pytest.mark.parametrize("name", STREAM_ENTRIES)
+def test_failed_drain_leaves_the_session_as_found(spark, tmp_path, monkeypatch, name):
+    """A sink step that raises mid-drain (the query has started) must leave
+    no trace: every conf a drain scopes is back at its prior value, no temp
+    view or active query remains, and the scratch root is empty again."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    from mapreduce_simple_go_spark.operators import all_queries
+
+    width = "spark.sql.shuffle.partitions"
+    keys = [
+        width,
+        "spark.sql.streaming.stateStore.providerClass",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    ]
+
+    def state():
+        confs = {k: spark.conf.get(k, None) for k in keys}
+        views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        return confs, views
+
+    def sink_fails(self, *a, **kw):
+        raise RuntimeError("sink failed mid-drain")
+
+    query = all_queries()[name]
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    prev_width = spark.conf.get(width)
+    spark.conf.set(width, "7")  # a width no entry sets
+    try:
+        before = state()
+        with monkeypatch.context() as m:
+            m.setattr(StreamingQuery, "awaitTermination", sink_fails)
+            with pytest.raises(RuntimeError, match="mid-drain"):
+                query(spark, SF_DIR)
+        assert state() == before
+        assert spark.streams.active == []
+        assert os.listdir(tmp_path) == []
+    finally:
+        spark.conf.set(width, prev_width)
+
+
+def test_stream_hourly_counts_warm_build_jobs(spark):
+    """A warm stream_hourly_counts build starts two jobs: the one
+    micro-batch and the result's localCheckpoint. The in-place source takes
+    the events schema from sources.table's cache (no inference job), and
+    the drain materializes its result once."""
+    from mapreduce_simple_go_spark.operators.events import stream_hourly_counts
+
+    from .conftest import jobs_started
+
+    stream_hourly_counts(spark, SF_DIR)  # warm: the schema cache fills
+    _, cost = jobs_started(spark, lambda: stream_hourly_counts(spark, SF_DIR))
+    assert cost.jobs == 2, cost
 
 
 def test_foreachbatch_upsert_rewrites_only_touched_buckets(spark, tmp_path):

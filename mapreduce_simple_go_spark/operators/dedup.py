@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import duckdb_hash48, hash48, tokens
+from ..session import scoped_confs
 from ..sources import table
 
 SHINGLE_N = 3
@@ -1023,12 +1024,11 @@ def connected_components(
     All paths produce identical output (asserted in tests/test_sampling.py
     and tests/test_star_components.py).
 
-    NOT thread-safe: the driver-tier probe saves/restores
-    ``spark.sql.limit.initialNumPartitions`` on the SESSION conf
-    non-atomically, so any concurrent query on the same SparkSession that
-    issues a ``limit`` during the probe inherits the 2^20 override (same
-    hazard class as the streaming drain's ``streaming.scoped_confs``,
-    documented there). Registry/bench harnesses run single-threaded; a
+    NOT thread-safe: the driver-tier probe overrides
+    ``spark.sql.limit.initialNumPartitions`` on the SESSION conf through
+    ``session.scoped_confs``, so any concurrent query on the same
+    SparkSession that issues a ``limit`` during the probe inherits the 2^20
+    override. Registry/bench harnesses run single-threaded; a
     caller composing this from parallel code should bypass the probe
     (``driver_threshold=0`` or ``algorithm="star"``), or run it through a
     session clone — ``spark.newSession()`` gets its own SQLConf, but the
@@ -1056,19 +1056,9 @@ def connected_components(
         # small-graph case is the overwhelmingly common one for near-dup
         # candidate graphs, which are far sparser than the corpus.
         spark = edges.sparkSession
-        prev_init = None
-        try:
-            prev_init = spark.conf.get("spark.sql.limit.initialNumPartitions")
-        except Exception:
-            prev_init = None
-        spark.conf.set("spark.sql.limit.initialNumPartitions", str(1 << 20))
-        try:
+        limit_conf = {"spark.sql.limit.initialNumPartitions": str(1 << 20)}
+        with scoped_confs(spark, limit_conf):
             probe = edges.limit(driver_threshold + 1).collect()
-        finally:
-            if prev_init is None:
-                spark.conf.unset("spark.sql.limit.initialNumPartitions")
-            else:
-                spark.conf.set("spark.sql.limit.initialNumPartitions", prev_init)
         if len(probe) <= driver_threshold:
             labels = _union_find_labels((r.src, r.dst) for r in probe)
             return spark.createDataFrame(

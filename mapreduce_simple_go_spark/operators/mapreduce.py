@@ -185,8 +185,3 @@ def crash_map(filename: str, contents: str) -> list[KeyValue]:
 def sorted_concat_reduce(_key: str, values: list[str]) -> str:
     """crash.go:45-55 — sort values, join with spaces (deterministic)."""
     return " ".join(sorted(values))
-
-
-def count_reduce(_key: str, values: list[str]) -> str:
-    """early_exit.go:32-40 — count per key."""
-    return str(len(values))

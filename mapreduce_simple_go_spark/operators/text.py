@@ -691,12 +691,15 @@ def partitioned_prune_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually uses — partition columns become directories, so a reader
     filtering on lang never opens the other partitions' files), then reads
     back ONLY one partition via a filter that must prune at planning time
-    (PartitionFilters in the scan, pinned in test_plans). The returned
-    per-row projection is hash-compared against the oracle computing the
-    same filter on the original — any loss in the partitioned writer or
-    any partition mis-assignment breaks the hash; the lang column also
-    proves partition-column values survive the directory-encoding
-    roundtrip.
+    (PartitionFilters in the scan). The returned frame is a
+    localCheckpoint, whose plan shows no scan, so this layout and filter
+    are pinned by
+    tests/test_partitioned_sink.py::test_partitioned_write_and_pruned_read.
+    The returned per-row projection is hash-compared against the oracle
+    computing the same filter on the original — any loss in the
+    partitioned writer or any partition mis-assignment breaks the hash; the
+    lang column also proves partition-column values survive the
+    directory-encoding roundtrip.
     """
     from .. import fsutil
 

@@ -74,11 +74,16 @@ directory resets it; the next start dumps again.
 Only deployment settings come from the environment: ``SPARK_GRAFT_CPUS``
 (``local[$SPARK_GRAFT_CPUS,4]``, default ``*``), ``SPARK_GRAFT_DRIVER_MEM``
 and ``SPARK_GRAFT_WAREHOUSE``. Nothing in here assumes single-node.
+
+:func:`scoped_confs` is the one way an operator overrides a runtime conf
+for part of its work: the streaming drain and the connected-components
+probe both restore the session as they found it.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -159,3 +164,26 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return get_or_create(builder, master, extra_conf or {})
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the with-body, then restore each
+    key's prior value (unset again if it had none).
+
+    NOT thread-safe: it mutates SESSION conf, so concurrent queries sharing
+    the session would race on it. Registry entries run sequentially (the
+    driver gate, bench and perfbench all iterate); parallel callers need a
+    session of their own (``spark.newSession()``).
+    """
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

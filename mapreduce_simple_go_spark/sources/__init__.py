@@ -86,16 +86,23 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
       the same naive-as-UTC reading DuckDB applies.
     - TIMESTAMP(MICROS, adjusted): already TimestampType.
     """
-    # Self-contained under ANY session: nanosAsLong and session.timeZone are
-    # runtime-settable, so set them here rather than relying on session
-    # construction (session.get_spark also sets them, but callers may hand
-    # us a plain SparkSession -- e.g. the external correctness harness).
-    # timeZone=UTC matters for the NTZ branch of _normalize_ts: the NTZ->TS
-    # cast interprets the wall clock in the session TZ, and the oracle
-    # (DuckDB) reads the same values naive-as-UTC.
+    _events_reader_confs(spark)
+    return _normalize_ts(table(spark, sf_dir, "events"))
+
+
+def _events_reader_confs(spark: SparkSession) -> None:
+    """The two reader confs every events read sets first, batch or stream.
+
+    Self-contained under ANY session: nanosAsLong and session.timeZone are
+    runtime-settable, so they are set per read rather than left to session
+    construction (session.get_spark also sets them, but callers may hand
+    us a plain SparkSession -- e.g. the external correctness harness).
+    timeZone=UTC matters for the NTZ branch of :func:`_normalize_ts`: the
+    NTZ->TS cast interprets the wall clock in the session TZ, and the
+    oracle (DuckDB) reads the same values naive-as-UTC.
+    """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return _normalize_ts(table(spark, sf_dir, "events"))
 
 
 def _normalize_ts(ev: DataFrame, col: str = "ts") -> DataFrame:

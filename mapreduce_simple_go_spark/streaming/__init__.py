@@ -44,15 +44,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import money
-
-
-def _events_reader_confs(spark: SparkSession) -> None:
-    # Same session-independence contract as sources.load_events: the
-    # fixture's ts physical type has varied across generations (NANOS-as-
-    # long, MICROS-NTZ, MICROS); with these two confs _normalize_ts lands
-    # every form on TimestampType.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+from ..session import scoped_confs
 
 
 def _parquet_stream(
@@ -85,7 +77,7 @@ def stream_events(
     The registry entries stream the fixture through :func:`events_source`,
     which takes the schema from ``sources.table``'s cache instead.
     """
-    from ..sources import _normalize_ts
+    from ..sources import _events_reader_confs, _normalize_ts
 
     _events_reader_confs(spark)
     batch = spark.read if glob is None else spark.read.option("pathGlobFilter", glob)
@@ -114,7 +106,7 @@ def events_source(spark: SparkSession, sf_dir: str):
     no schema-inference job.
     """
     from ..fsutil import du_suffix_bytes, is_dir
-    from ..sources import _normalize_ts, table
+    from ..sources import _events_reader_confs, _normalize_ts, table
 
     _events_reader_confs(spark)
     src = os.path.join(sf_dir, "events.parquet")
@@ -382,29 +374,6 @@ def dedup_events_stream(events: DataFrame, watermark: str = "2 hours") -> DataFr
 _COMPLETE_MEMORY_MAX_BYTES = 32 << 20
 
 _NODATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
-
-
-@contextmanager
-def scoped_confs(spark: SparkSession, confs: dict[str, str]):
-    """Set ``confs`` on the session for the with-body, then restore each
-    key's prior value (unset again if it had none).
-
-    NOT thread-safe: it mutates SESSION conf, so concurrent queries sharing
-    the session would race on it. Registry entries run sequentially (the
-    driver gate, bench and perfbench all iterate); parallel callers need a
-    session of their own (``spark.newSession()``).
-    """
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @contextmanager

@@ -41,12 +41,22 @@ def _clear_spark_cache(request):
         request.getfixturevalue("spark").catalog.clearCache()
 
 
+def duck_views(con, sf_dir):
+    """One DuckDB view per fixture table. A driver fixture's table is a
+    single file; a scaled fixture's (scripts/make_scaled_fixture.py) is a
+    Spark-written directory of part files, which DuckDB reads only through
+    a glob."""
+    for t in TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(SF_DIR, f"{t}.parquet")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    con = duck_views(duckdb.connect(), SF_DIR)
     yield con
     con.close()
 
@@ -81,12 +91,12 @@ def rows_digest(columns, rows):
     collisions — negligible). Each row is normalized through the SAME
     ``_norm`` as rows_key, then hashed (blake2b-128 of the tuple repr) and
     SUMMED mod 2^128 — addition commutes, so row order is immaterial, and
-    nothing is retained per row. This is what the at-scale sweeps use:
+    nothing is retained per row. perfbench's workloads check with it:
     sorting 10M+ normalized tuples (rows_key) costs minutes of driver CPU
-    and ~1 KB/row of resident tuples per engine, which dominated the r8
-    sf10 sweep's wall clock; the digest is one pass, O(1) memory.
-    rows_key stays the test-suite form — on fixture-sized results it is
-    just as fast and its sorted rows give first-differing-row diagnostics.
+    and ~1 KB/row of resident tuples per engine, while the digest is one
+    pass, O(1) memory. rows_key stays the test-suite form — on
+    fixture-sized results it is just as fast and its sorted rows give
+    first-differing-row diagnostics.
     Equivalence is property-tested in tests/test_harness_digest.py.
     """
     import hashlib

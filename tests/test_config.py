@@ -100,6 +100,8 @@ CITING = ["mapreduce_simple_go_spark", "scripts", "tests", "README.md", "bench.p
 DOC_NAME = re.compile(
     r"\b[A-Z][A-Z0-9_]*(?:_r[0-9]+)?\.(?:md|json|txt)\b|plans/r[0-9]+\S*"
 )
+# Script citations; each must name a file under scripts/ exactly.
+SCRIPT_PATH = re.compile(r"\bscripts/[\w.-]+\.(?:py|sh)\b")
 # Section citations of an optimization guide the repository does not hold
 # (spelled with an escape so this file does not match itself).
 GUIDE_SECTION = re.compile(r"\bguide \u00a7")
@@ -132,6 +134,13 @@ def test_cited_documents_exist():
         if not (REPO / name).exists() and name not in basenames
     )
     assert missing == []
+    scripts = {
+        (path.relative_to(REPO).as_posix(), m.group(0))
+        for path, text in texts
+        for m in SCRIPT_PATH.finditer(text)
+    }
+    assert scripts
+    assert sorted((where, name) for where, name in scripts if not (REPO / name).is_file()) == []
     guide_citations = sorted(
         path.relative_to(REPO).as_posix() for path, text in texts if GUIDE_SECTION.search(text)
     )

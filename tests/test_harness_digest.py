@@ -1,11 +1,12 @@
-"""rows_digest ⟺ rows_key equivalence (the at-scale sweep's comparison).
+"""rows_digest ⟺ rows_key equivalence.
 
-scripts/self_correctness.py compares engine outputs with the streaming
-multiset digest instead of the sorted-tuple canonical form; these
-properties pin that the two judgments agree — same multiset ⇒ equal
-digests (incl. any row/column permutation), different multiset ⇒
-different digests — over the cell types the registry actually emits
-(ints, floats incl. nan/integral, strings, None, nested lists).
+perfbench's workloads check their results with the one-pass multiset
+digest; the tests keep the sorted-tuple canonical form (rows_key, through
+assert_matches_oracle). These properties pin that the two judgments
+agree — same multiset ⇒ equal digests (incl. any row/column
+permutation), different multiset ⇒ different digests — over the cell
+types the registry actually emits (ints, floats incl. nan/integral,
+strings, None, nested lists).
 """
 
 from __future__ import annotations

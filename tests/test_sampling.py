@@ -8,6 +8,7 @@ rerun/partitioning stability, transitive cluster closure.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_simple_go_spark.operators.sampling import (
@@ -97,6 +98,27 @@ def test_connected_components_transitive_closure(spark):
     }
     assert got_driver == want
     assert got_dist == want
+
+
+@pytest.mark.parametrize("before", [None, "7"])
+def test_connected_components_probe_leaves_the_conf_as_found(spark, before):
+    """The driver-tier probe overrides spark.sql.limit.initialNumPartitions
+    only while it collects: afterwards the conf is unset again, or holds
+    the value it held before."""
+    from mapreduce_simple_go_spark.operators.dedup import connected_components
+
+    key = "spark.sql.limit.initialNumPartitions"
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    if before is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, before)
+    try:
+        got = {r.node: r.label for r in connected_components(edges).collect()}
+        assert got == {1: 1, 2: 1, 3: 1}
+        assert spark.conf.get(key, None) == before
+    finally:
+        spark.conf.unset(key)
 
 
 def test_training_pipeline_drops_near_dups_from_curated_set(spark):

@@ -50,16 +50,6 @@ def is_dir(spark: SparkSession, uri: str) -> bool:
     return bool(fs.getFileStatus(p).isDirectory())
 
 
-def du_bytes(spark: SparkSession, uri: str) -> int:
-    """Total on-disk bytes under a file or directory (ContentSummary).
-
-    The FS-agnostic replacement for ``os.stat`` size probes: one RPC on
-    HDFS, one LIST on object stores, a stat walk on the local FS.
-    """
-    fs, p = _fs_path(spark, uri)
-    return int(fs.getContentSummary(p).getLength())
-
-
 def list_files(spark: SparkSession, uri: str, suffix: str = "") -> list[str]:
     """Direct children of ``uri`` whose names end with ``suffix`` — full
     URIs, name-sorted (NOT recursive; mirrors the one-level layouts the
@@ -109,12 +99,11 @@ def du_suffix_bytes(spark: SparkSession, uri: str, suffix: str) -> int:
     """Bytes in ``uri`` counting ONLY the data files: a plain file's own
     length, or the sum over direct children ending in ``suffix``.
 
-    The data-only sibling of :func:`du_bytes` for size GATES: a Spark sink
-    dir also holds ``_SUCCESS`` (and ``.crc`` siblings on the local FS)
-    which ContentSummary counts — harmless for reporting, but a gate
-    compared against a byte threshold should see the same number whether
-    the input is one fixture file or a committed sink dir (with
-    ContentSummary alone the events complete-mode memory-vs-parquet gate
+    The size probe of every gate. A Spark sink dir also holds ``_SUCCESS``
+    (and ``.crc`` siblings on the local FS), which a ContentSummary total
+    counts; a gate compared against a byte threshold must see the same
+    number whether the input is one fixture file or a committed sink dir
+    (with ContentSummary the events complete-mode memory-vs-parquet gate
     drifted ~1%).
     """
     fs, p = _fs_path(spark, uri)
@@ -126,35 +115,6 @@ def du_suffix_bytes(spark: SparkSession, uri: str, suffix: str) -> int:
         for c in fs.listStatus(p)
         if c.getPath().getName().endswith(suffix)
     )
-
-
-def read_text(spark: SparkSession, uri: str) -> str:
-    """Read a small control file (stamps, markers) as UTF-8 via the FS API
-    — works for any scheme, unlike ``open()`` which silently requires the
-    driver to share a POSIX view of the sink."""
-    fs, p = _fs_path(spark, uri)
-    stream = fs.open(p)
-    try:
-        # One JVM-side drain + one py4j byte-array transfer: a
-        # stream.read() loop is one py4j round trip PER BYTE — fine for a
-        # 2-byte stamp, a trap for anything bigger.
-        jvm = spark._jvm
-        sink = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, sink, 65536, False)
-        return bytes(sink.toByteArray()).decode("utf-8")
-    finally:
-        stream.close()
-
-
-def write_text(spark: SparkSession, uri: str, text: str) -> None:
-    """Write a small control file atomically enough for a stamp (create
-    w/ overwrite) via the FS API."""
-    fs, p = _fs_path(spark, uri)
-    stream = fs.create(p, True)
-    try:
-        stream.write(bytearray(text.encode("utf-8")))
-    finally:
-        stream.close()
 
 
 def mkscratch(spark: SparkSession, prefix: str) -> str:

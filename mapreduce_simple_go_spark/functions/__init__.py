@@ -28,21 +28,6 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(text, TOKEN_SPLIT_REGEX), lambda w: w != F.lit(""))
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Array of n-word shingles (space-joined runs of n consecutive tokens)."""
-    toks = tokens(text)
-    # sequence(0, size-n) -> starting indices; slice each run of n tokens.
-    # Documents with fewer than n tokens produce no shingles (callers that
-    # need short-doc coverage should lower n).
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def hash48(col: Column) -> Column:
     """Deterministic 48-bit integer hash of a string column (md5-derived).
 

@@ -78,9 +78,9 @@ def doc_shingles(
     before the distinct; building the shingle from the array removes that
     wide shuffle outright (measured through the full LSH pipeline at
     sf0.1: 1.78 -> 1.20 s, identical pairs). The per-document
-    higher-order-function form (array_distinct over word_shingles) stays
-    rejected — HOFs evaluate interpreted and measured 4.24 s on the same
-    A/B. The distinct's Exchange now carries (doc_id, shingle) with
+    higher-order-function form (array_distinct over an n-gram transform)
+    stays rejected — HOFs evaluate interpreted and measured 4.24 s on the
+    same A/B. The distinct's Exchange now carries (doc_id, shingle) with
     map-side partial dedup (duplicates of a doc's shingle are all in its
     scan partition), and downstream groupBy(doc_id) consumers pay one
     narrow Exchange of partially-aggregated rows instead of riding the
@@ -523,18 +523,21 @@ NGRAM_BROADCAST_MAX_DOC_BYTES = 2 << 20
 
 
 def _docs_bytes(spark: SparkSession, sf_dir: str) -> int:
-    """On-disk size of the documents table (single file or part dir).
+    """Data bytes of the documents table (single file or part dir).
 
     Goes through the Hadoop FileSystem resolved from ``sf_dir``'s own
-    scheme (fsutil.du_bytes), so the join-strategy gate below works for
-    any URI the cluster can read — not just driver-local POSIX paths
-    (an ``os.stat`` probe returns the same number but only exists on the
-    driver's mount). Pinned equal to the
+    scheme (fsutil.du_suffix_bytes, like every other size gate), so the
+    join-strategy gate below works for any URI the cluster can read — not
+    just driver-local POSIX paths (an ``os.stat`` probe returns the same
+    number but only exists on the driver's mount) — and a part dir's
+    ``_SUCCESS``/``.crc`` files do not count. Pinned equal to the
     driver-local stat at local paths by tests/test_fsutil.py.
     """
-    from ..fsutil import du_bytes
+    from ..fsutil import du_suffix_bytes
 
-    return du_bytes(spark, os.path.join(sf_dir, "documents.parquet"))
+    return du_suffix_bytes(
+        spark, os.path.join(sf_dir, "documents.parquet"), ".parquet"
+    )
 
 
 def _ngram_capped_byshingle(
@@ -1001,7 +1004,6 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 20,
     driver_threshold: int = MAX_DRIVER_EDGES,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Connected components over an undirected edge list (src, dst).
 
@@ -1014,12 +1016,8 @@ def connected_components(
     with a cheap sum(label) aggregate; localCheckpoint truncates iteration
     lineage. Iterations needed = component diameter — near-dup clusters
     are shallow, so min-label wins the common case; if a graph's diameter
-    exceeds ``max_iter``, ``algorithm="auto"`` falls back to
-    large-star/small-star (:func:`_star_components`, O(log^2 d) rounds)
-    instead of failing. ``algorithm="star"`` forces that route from the
-    start (also bypassing the driver tier — used by the property tests and
-    sensible when the caller KNOWS the graph is deep, e.g. chain-shaped
-    link graphs rather than near-dup cliques).
+    exceeds ``max_iter``, it falls back to large-star/small-star
+    (:func:`_star_components`, O(log^2 d) rounds) instead of failing.
 
     All paths produce identical output (asserted in tests/test_sampling.py
     and tests/test_star_components.py).
@@ -1030,13 +1028,13 @@ def connected_components(
     SparkSession that issues a ``limit`` during the probe inherits the 2^20
     override. Registry/bench harnesses run single-threaded; a
     caller composing this from parallel code should bypass the probe
-    (``driver_threshold=0`` or ``algorithm="star"``), or run it through a
-    session clone — ``spark.newSession()`` gets its own SQLConf, but the
+    (``driver_threshold=0``), or run it through a session clone —
+    ``spark.newSession()`` gets its own SQLConf, but the
     DataFrame must then be re-derived against that session for the
     override to apply to its jobs.
     """
     edges = edges.select("src", "dst")
-    if algorithm != "star" and driver_threshold > 0:
+    if driver_threshold > 0:
         # Driver-tier probe in ONE job: limit(threshold+1) both sizes the
         # graph AND (when small) hands over every edge — replacing the
         # r11 shape's three jobs (eager localCheckpoint + count + collect)
@@ -1067,12 +1065,6 @@ def connected_components(
     # materialize the edge list ONCE — the symmetric union below would
     # otherwise re-evaluate the (expensive) upstream pair pipeline twice
     edges = edges.localCheckpoint(eager=True)
-    if algorithm == "star":
-        return _star_components(
-            edges.union(
-                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-        )
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )

@@ -1,9 +1,10 @@
 """Source connectors.
 
 The reference's only source is the whole-file text scan
-(/root/reference/src/mr/worker.go:71-81); :func:`whole_text_files` reproduces
-it. The parquet fixture loaders normalize physical-type quirks (nanosecond
-timestamps) so downstream operators always see proper TimestampType.
+(/root/reference/src/mr/worker.go:71-81); ``Engine.map_reduce_files`` reads
+it through ``wholeTextFiles`` itself. The parquet fixture loaders normalize
+physical-type quirks (nanosecond timestamps) so downstream operators always
+see proper TimestampType.
 
 :func:`table` is the package's one reader of fixture tables. A parquet read
 without a schema runs a Spark job to infer one (86-91 ms warm for lineitem
@@ -32,18 +33,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 _SCHEMAS: dict[tuple, StructType] = {}
-
-
-def whole_text_files(spark: SparkSession, path_glob: str) -> DataFrame:
-    """(filename, contents) rows — the reference's map-task input contract.
-
-    Uses the wholeTextFiles RDD source: one record per file, as the
-    reference gives each of its M map tasks one file. Spark packs the
-    files into about ``min(defaultParallelism, 2)`` partitions (split size =
-    total bytes / that), so there are not M map tasks.
-    """
-    rdd = spark.sparkContext.wholeTextFiles(path_glob)
-    return spark.createDataFrame(rdd, schema="filename string, contents string")
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

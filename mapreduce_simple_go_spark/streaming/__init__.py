@@ -2,22 +2,23 @@
 
 The reference has no streaming surface; its only stateful semantics are the
 declared KV get/put/append ops (/root/reference/src/models/kv.go:40-54). This
-module provides the streaming forms:
-
-- :func:`hourly_counts` — watermarked tumbling-window aggregation whose
-  result converges to the batch twin ``operators.events.events_hourly``
-  (asserted in tests/test_streaming.py).
-- :func:`kv_append_state` — the reference's put/append fold as a custom
-  stateful operator via ``applyInPandasWithState``: per-key running state
-  maintained across micro-batches, converging to
-  ``operators.kv.kv_final_state``.
+module provides the streaming forms: watermarked tumbling, sliding and
+session windows, a stream-stream interval join, a stream-static join,
+watermark-bounded dedup, and three custom stateful folds (the KV
+put/append fold :func:`kv_append_state`, the event-time-timeout
+sessionizer :func:`session_fold` with its bucketed scale form, and the
+``transformWithStateInPandas`` per-user totals). Each converges to a batch
+twin in ``operators`` (asserted in tests/test_streaming.py).
 
 The registry's streaming entries (operators.events, operators.kv) each pick
 a bounded source (:func:`events_source`, :func:`staged_source`,
 :func:`ordered_drops_source`), build one of these operators over it and
 hand the result to :func:`drain`, the one path that scopes their confs,
 drains an ``availableNow`` query into a sink, runs the final SELECT,
-materializes it and cleans up.
+materializes it and cleans up. The tests stream through the same sources
+and drain; only the ones that need the trailing no-data micro-batch
+(event-time timeouts, watermark-closed append windows) use the sink step
+:func:`_sink_view` that :func:`drain` wraps.
 
 Scale notes: watermarks bound window state; the KV operator's state is one
 string per key (exactly the reference server's in-memory map).
@@ -63,26 +64,6 @@ def _parquet_stream(
     if per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", per_trigger)
     return reader.parquet(path)
-
-
-def stream_events(
-    spark: SparkSession, src_dir: str, glob: str | None = None
-) -> DataFrame:
-    """File-source stream over events parquet files in ``src_dir``.
-
-    Schema is taken from a batch read of the same files; the nanosecond
-    ``ts`` is normalized to TimestampType exactly like sources.load_events.
-    ``glob`` (a ``pathGlobFilter``) restricts the source to matching file
-    names. ``src_dir`` may be any URI the cluster's Hadoop conf resolves.
-    The registry entries stream the fixture through :func:`events_source`,
-    which takes the schema from ``sources.table``'s cache instead.
-    """
-    from ..sources import _events_reader_confs, _normalize_ts
-
-    _events_reader_confs(spark)
-    batch = spark.read if glob is None else spark.read.option("pathGlobFilter", glob)
-    schema = batch.parquet(src_dir).schema
-    return _normalize_ts(_parquet_stream(spark, src_dir, schema, glob=glob))
 
 
 # --- Bounded sources of the registry entries ---------------------------------
@@ -269,84 +250,6 @@ def kv_append_state(ops: DataFrame) -> DataFrame:
     )
 
 
-# v3 state tuple (state, last_ops JSON, version). Schema history: v1 stored
-# last_op_id Long, v2 a per-client JSON table, v3 adds version. State schemas
-# are NOT migration-checked by applyInPandasWithState — restoring a
-# checkpoint written under an older tuple shape will fail or misread state,
-# so a version bump here always requires a fresh checkpoint directory.
-_KV_DEDUP_STATE_SCHEMA = StructType(
-    [
-        StructField("state", StringType()),
-        StructField("last_ops", StringType()),
-        StructField("version", LongType()),
-    ]
-)
-
-
-def _kv_fold_dedup(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """KV fold over an at-least-once log: apply each op_id at most once.
-
-    Dedup state is a PER-CLIENT last-applied-op table (JSON dict in the
-    state row) — exactly the reference server's per-client duplicate table.
-    Suppressing on a single per-key max op_id is only correct when first
-    deliveries arrive in monotone op_id order (one client, one outstanding
-    request — kvraft/client.go:59-64); on a merged multi-client log a fresh
-    lower-op_id op from another client would be silently dropped. The
-    per-client table is correct for arbitrary client interleavings while
-    staying bounded by the number of clients writing the key, which is the
-    same bound the reference accepts. Ops without a client_id column fold
-    under one pseudo-client and inherit the monotone-op_id contract.
-    """
-    import json
-
-    if state.exists:
-        current, last_ops_json, version = state.get
-        last_ops: dict[str, int] = json.loads(last_ops_json)
-    else:
-        current, last_ops, version = "", {}, -1
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if frames:
-        allops = pd.concat(frames, ignore_index=True).sort_values("seq")
-        has_client = "client_id" in allops.columns
-        clients = allops["client_id"] if has_client else [""] * len(allops)
-        for client, op_id, op, value in zip(
-            clients, allops["op_id"], allops["op"], allops["value"]
-        ):
-            client = str(client)
-            if op_id <= last_ops.get(client, -1):
-                continue  # duplicate delivery of an already-applied op
-            last_ops[client] = int(op_id)
-            if op == "put":
-                current = value
-            elif op == "append":
-                current = current + value
-        version = max(version, int(allops["seq"].max()))
-    state.update((current, json.dumps(last_ops), version))
-    yield pd.DataFrame({"key": [key[0]], "state": [current], "version": [version]})
-
-
-def kv_append_state_dedup(ops: DataFrame) -> DataFrame:
-    """Streaming KV fold with duplicate-request suppression.
-
-    ``ops`` needs columns (seq, op_id, key, op, value) and optionally
-    ``client_id``; retried deliveries share an op_id and must take effect
-    once (checkClntAppends, kvraft/test_test.go:348). With a client_id
-    column, duplicate suppression is tracked per client (correct for
-    multi-client merged logs); without one, all ops share a pseudo-client
-    and each key's first deliveries must arrive in monotone op_id order —
-    the reference's one-outstanding-request-per-client assumption.
-    """
-    return ops.groupBy("key").applyInPandasWithState(
-        _kv_fold_dedup,
-        outputStructType=_KV_OUT_SCHEMA,
-        stateStructType=_KV_DEDUP_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def dedup_events_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Streaming exact dedup: first delivery per event_id survives.
 
@@ -447,38 +350,6 @@ def _sink_view(
             delete(spark, sink)
 
 
-def run_available_now(
-    stream_df: DataFrame,
-    query_name: str,
-    output_mode: str,
-    input_bytes: int | None = None,
-    skip_final_nodata_batch: bool = False,
-) -> None:
-    """Drain a bounded stream into a queryable temp view named ``query_name``
-    (the memory or parquet sink, gated on ``input_bytes``: see
-    :func:`_sink_view`). A parquet-sink view is localCheckpointed so its
-    scratch dir can go at once; callers are agnostic to which sink ran.
-
-    ``skip_final_nodata_batch=True`` disables ``noDataMicroBatches`` for
-    the drain's duration. An availableNow drain otherwise appends one
-    FINAL no-data micro-batch after the data batches: a full state-store
-    open/commit roundtrip across every stateful partition, and in complete
-    mode a full rewrite of the result table. Its only observable effects
-    are (a) rewriting complete-mode output that is already final, and (b)
-    emitting rows the final watermark advance closes (append-mode windows
-    still open after the last data batch; event-time TIMEOUT sweeps). So
-    the skip is opt-in: (b) is real semantics for a watermarked
-    append-mode aggregation (the tests pin it), and only a caller whose
-    result never reads a no-data-batch emission may pass it.
-    """
-    confs = {_NODATA_KEY: "false"} if skip_final_nodata_batch else {}
-    with _sink_view(stream_df, query_name, output_mode, input_bytes, confs) as sink:
-        if sink is not None:
-            stream_df.sparkSession.table(query_name).localCheckpoint(
-                eager=True
-            ).createOrReplaceTempView(query_name)
-
-
 def drain(
     stream_df: DataFrame,
     output_mode: str,
@@ -498,16 +369,21 @@ def drain(
     scratch is deleted. The eager localCheckpoint severs the result from
     both, and is the only materialization at every input size.
 
-    The trailing no-data micro-batch is always skipped (see
-    :func:`run_available_now`): every registry entry's SELECT reads only
-    data-batch emissions. Complete and update snapshots are final after
+    The trailing no-data micro-batch is always skipped. An availableNow
+    drain otherwise appends one FINAL no-data micro-batch after the data
+    batches: a full state-store open/commit roundtrip across every
+    stateful partition, whose only observable effects are rewriting
+    complete-mode output that is already final and emitting the rows the
+    final watermark advance closes. Every registry entry's SELECT reads
+    only data-batch emissions. Complete and update snapshots are final after
     the last data batch; the append entries emit from
     dropDuplicatesWithinWatermark, a stream-stream inner join, the tws
     fold (no watermark, no timers) or filter to ``closed_by = 'gap'``
     rows. The stateful tws drain runs the same batches either way (batchIds
     [0, 1] with the skip on and off at sf0.01 and sf0.1). An entry whose
     result NEEDS the final watermark advance (event-time timeout sweeps,
-    watermark-closed append windows) cannot use this path.
+    watermark-closed append windows) cannot use this path; the tests that
+    pin those semantics drain through :func:`_sink_view` directly.
     """
     spark = stream_df.sparkSession
     name = "drain_" + uuid.uuid4().hex[:8]
@@ -938,156 +814,6 @@ def session_fold_bucketed(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-
-
-# Upsert-sink bucket count. Scale note: size so one bucket ~= one target
-# parquet file for the table's key cardinality (at 100 TB: thousands); the
-# fixture tables hold <=50 keys, so 16 keeps several keys per bucket while
-# still exercising the partial-rewrite path. The bucket count is baked into
-# the sink's directory layout: changing it for an EXISTING sink dir is a
-# re-bucketing migration, not a constant edit (merge correctness survives —
-# max-version-wins reads every touched key's rows back — but old rows keyed
-# under the previous pmod stop being co-located with new writes and would be
-# silently missed by the touched-bucket read). run_foreachbatch_upsert
-# therefore stamps the count into the sink dir and refuses a mismatched
-# resume; tests pin both properties.
-UPSERT_BUCKETS = 16
-
-
-def _bucket_of(key_col, n_buckets: int):
-    """Deterministic sink bucket for a key — pmod(xxhash64(key), N)."""
-    return F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int")
-
-
-def run_foreachbatch_upsert(
-    folded: DataFrame, out_dir: str, ckpt_dir: str
-) -> None:
-    """Drain a stateful KV fold into a parquet "table" via foreachBatch
-    upsert — the production arbitrary-sink pattern (merge into Delta/JDBC/
-    key-value stores): each micro-batch's per-key emissions merge into the
-    sink with max-version-wins semantics, so replays and multi-batch drains
-    land exactly-once.
-
-    The sink is hash-partitioned on ``bucket = pmod(xxhash64(key),
-    UPSERT_BUCKETS)`` and each micro-batch rewrites ONLY the buckets its
-    keys touch (dynamic partition overwrite): read back just those
-    partitions (partition-pruned scan), union the batch, keep the
-    max-version row per key, overwrite the touched partitions. Untouched
-    bucket files are never read or rewritten — the per-batch cost term is
-    O(touched buckets), not O(table) (r7's merge re-read and re-wrote the
-    whole table every batch). The one driver-side step collects the batch's
-    DISTINCT bucket ids — bounded by the bucket count, never by rows. This
-    is the fixture-scale stand-in for MERGE INTO; a transactional table
-    format (Delta/Iceberg) gives the same shape with file-level instead of
-    bucket-level rewrite granularity, and the checkpoint makes redelivery
-    idempotent either way.
-
-    Layout safety (r9): the sink dir must be empty, absent, or
-    already in this sink's ``bucket=`` layout with the SAME bucket count.
-    A dir holding flat ``*.parquet`` files (e.g. a pre-r8 unbucketed sink)
-    fails LOUDLY instead of being treated as empty — the old behavior
-    silently dropped the existing rows from the merge and left a mixed
-    layout. The bucket count is stamped into ``_upsert_buckets`` on first
-    write and a resume with a different count (constant changed between runs)
-    also fails loudly: rows bucketed under the previous pmod would be
-    invisible to the touched-bucket read.
-
-    All sink-dir probes and the stamp go through fsutil (Hadoop FS API),
-    so ``out_dir`` may be any URI the deployment's Hadoop conf resolves
-    (driver-local ``os.path``/``open`` probes made the layout guard
-    silently no-op for URI sinks — the merge read was skipped, so dynamic
-    partition overwrite DROPPED prior rows in touched buckets, then the
-    stamp write failed late with an unrelated OSError).
-    """
-    from .. import fsutil
-
-    spark = folded.sparkSession
-    n_buckets = UPSERT_BUCKETS
-    stamp = out_dir.rstrip("/") + "/_upsert_buckets"
-
-    def _sink_entry_names() -> list[str]:
-        if not fsutil.exists(spark, out_dir):
-            return []
-        return [u.rstrip("/").rsplit("/", 1)[-1]
-                for u in fsutil.list_files(spark, out_dir)]
-
-    def _check_layout_and_stamp():
-        entries = _sink_entry_names()
-        flat = [e for e in entries if e.endswith(".parquet")]
-        if flat:
-            raise ValueError(
-                f"upsert sink {out_dir!r} holds non-bucketed parquet files "
-                f"{flat[:3]}...: refusing to merge (rows outside bucket= "
-                "partitions would be silently dropped). Migrate the flat "
-                "layout first (read it, write with run_foreachbatch_upsert "
-                "into a fresh dir) or point the sink elsewhere."
-            )
-        if any(e.startswith("bucket=") for e in entries):
-            if not fsutil.exists(spark, stamp):
-                raise ValueError(
-                    f"upsert sink {out_dir!r} has a bucket= layout but no "
-                    "_upsert_buckets stamp; cannot verify its bucket count "
-                    "matches this run's."
-                )
-            prev = int(fsutil.read_text(spark, stamp).strip())
-            if prev != n_buckets:
-                raise ValueError(
-                    f"upsert sink {out_dir!r} was written with "
-                    f"{prev} buckets but this run uses {n_buckets} "
-                    "(UPSERT_BUCKETS changed): resuming would mis-route "
-                    "keys. Re-bucket the sink or restore the count."
-                )
-
-    def upsert(batch_df, batch_id):
-        batch = batch_df.select("key", "state", "version").withColumn(
-            "bucket", _bucket_of(F.col("key"), n_buckets)
-        )
-        touched = [
-            r.bucket for r in batch.select("bucket").distinct().collect()
-        ]
-        if not touched:
-            return
-        _check_layout_and_stamp()
-        if any(e.startswith("bucket=") for e in _sink_entry_names()):
-            current = spark.read.parquet(out_dir).filter(
-                F.col("bucket").isin(touched)
-            )
-            merged = current.unionByName(batch)
-        else:
-            merged = batch
-        from pyspark.sql import Window as W
-
-        latest = (
-            merged.withColumn(
-                "rn",
-                F.row_number().over(
-                    W.partitionBy("key").orderBy(F.desc("version"))
-                ),
-            )
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        # stage-then-swap: never read and overwrite the same files in one
-        # job. The checkpoint is bounded by the TOUCHED buckets' rows, not
-        # the table.
-        staged = latest.localCheckpoint(eager=True)
-        (
-            staged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(out_dir)
-        )
-        if not fsutil.exists(spark, stamp):
-            fsutil.write_text(spark, stamp, str(n_buckets))
-
-    q = (
-        folded.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", ckpt_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def enriched_counts(events: DataFrame, dim: DataFrame, watermark: str = "2 hours") -> DataFrame:

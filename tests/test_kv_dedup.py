@@ -54,78 +54,3 @@ def test_dedup_keeps_first_delivery(spark):
     # first-win: surviving seq == min seq per op_id
     mins = log.groupBy("op_id").agg(F.min("seq").alias("seq"))
     assert ded.select("op_id", "seq").exceptAll(mins).count() == 0
-
-
-def test_streaming_dedup_multi_client_interleaving(spark, tmp_path):
-    """A merged multi-client log where a fresh LOWER op_id trails a higher
-    one (client B's first op arrives after client A's) must apply every
-    fresh op and drop only true duplicates — per-client last-op tracking,
-    not a single max-op_id watermark."""
-    from mapreduce_simple_go_spark.streaming import (
-        kv_append_state_dedup,
-        run_available_now,
-    )
-
-    rows = [
-        # (seq, op_id, client_id, key, op, value)
-        (1, 100, "A", "k", "append", "a1."),
-        (2, 100, "A", "k", "append", "a1."),   # dup of A:100 -> dropped
-        (3, 5, "B", "k", "append", "b1."),     # fresh, lower op_id: APPLIES
-        (4, 101, "A", "k", "append", "a2."),
-        (5, 5, "B", "k", "append", "b1."),     # dup of B:5 -> dropped
-        (6, 6, "B", "k", "append", "b2."),
-    ]
-    df = spark.createDataFrame(
-        rows, "seq long, op_id long, client_id string, key string, op string, value string"
-    )
-    src = tmp_path / "src"
-    src.mkdir()
-    df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "stage"))
-    import os
-    import shutil
-
-    pfile = next(
-        f for f in os.listdir(tmp_path / "stage") if f.endswith(".parquet")
-    )
-    shutil.copy(tmp_path / "stage" / pfile, src / "drop0.parquet")
-    stream = spark.readStream.schema(df.schema).parquet(str(src))
-    run_available_now(kv_append_state_dedup(stream), "kv_dedup_mc", "update")
-    final = {
-        r.key: r.state for r in spark.sql("SELECT key, state FROM kv_dedup_mc").collect()
-    }
-    assert final == {"k": "a1.b1.a2.b2."}
-
-
-def test_streaming_dedup_matches_batch(spark, tmp_path):
-    """The streaming O(1)-state dedup fold converges to the batch result."""
-    import os
-    import shutil
-
-    from mapreduce_simple_go_spark.streaming import (
-        kv_append_state_dedup,
-        run_available_now,
-    )
-
-    log = (
-        kv_ops_at_least_once(spark, SF_DIR)
-        .filter(F.col("op") != "get")
-        .orderBy("seq")
-    )
-    src = tmp_path / "src"
-    src.mkdir()
-    stage = tmp_path / "stage"
-    log.coalesce(1).write.mode("overwrite").parquet(str(stage))
-    pfile = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-    shutil.copy(stage / pfile, src / "drop0.parquet")
-
-    schema = spark.read.parquet(str(src)).schema
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    run_available_now(kv_append_state_dedup(stream), "kv_dedup_mem", "update")
-    got = sorted_rows(
-        spark.sql(
-            "SELECT key, state FROM (SELECT key, state, row_number() OVER "
-            "(PARTITION BY key ORDER BY version DESC) r FROM kv_dedup_mem) WHERE r = 1"
-        )
-    )
-    want = sorted_rows(kv_final_state_dedup(spark, SF_DIR))
-    assert got == want and len(got) > 0

@@ -5,6 +5,7 @@ fixture table resolver, which caches a file's schema and nothing else.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pyarrow as pa
@@ -15,7 +16,7 @@ from pyspark.sql import functions as F
 from mapreduce_simple_go_spark.engine import Engine
 from mapreduce_simple_go_spark.operators import all_oracles, all_queries
 from mapreduce_simple_go_spark.operators import mapreduce as mr
-from mapreduce_simple_go_spark.sources import table, whole_text_files
+from mapreduce_simple_go_spark.sources import table
 
 from .conftest import SF_DIR, TABLES, jobs_started, rows_digest
 
@@ -30,11 +31,25 @@ def _dump_docs_as_files(spark, tmp_path, n=20):
     return str(d), {f"pg-{r.doc_id:05d}.txt": r.text for r in docs}
 
 
-def test_whole_text_files_contract(spark, tmp_path):
+def test_map_reduce_files_maps_each_whole_file_once(spark, tmp_path):
+    """The reference's map-task input contract through the engine's one
+    whole-file source: every file reaches the map exactly once, as one
+    call with that file's full contents."""
     path, want = _dump_docs_as_files(spark, tmp_path)
-    df = whole_text_files(spark, os.path.join(path, "*.txt"))
-    got = {os.path.basename(r.filename): r.contents for r in df.collect()}
-    assert got == want
+
+    def mapf(filename, contents):
+        import os
+
+        return [(os.path.basename(filename), contents)]
+
+    def reducef(_key, values):
+        import json
+
+        return json.dumps(values)
+
+    out = Engine(spark).map_reduce_files(os.path.join(path, "*.txt"), mapf, reducef)
+    got = {r.key: json.loads(r.value) for r in out.collect()}
+    assert got == {name: [text] for name, text in want.items()}
 
 
 def test_map_reduce_files_end_to_end(spark, tmp_path):

@@ -1,8 +1,8 @@
 """Property tests for large-star/small-star connected components.
 
 The star route (dedup._star_components) is the deep-graph fallback behind
-connected_components(algorithm="auto") and the forced algorithm="star"
-path. Contract: identical output to driver-side union-find on ANY graph —
+connected_components; the tests call it directly on the symmetric edge
+set. Contract: identical output to driver-side union-find on ANY graph —
 including the chain shapes min-label needs ~diameter iterations for.
 
 Reference analog: the reference's sort-then-group reduce contract
@@ -15,8 +15,10 @@ from __future__ import annotations
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from mapreduce_simple_go_spark.operators.dedup import (
+    _star_components,
     _union_find_labels,
     connected_components,
 )
@@ -28,10 +30,8 @@ def _expected(pairs):
 
 def _star_labels(spark, pairs):
     edges = spark.createDataFrame(pairs, "src long, dst long")
-    return {
-        r.node: r.label
-        for r in connected_components(edges, algorithm="star").collect()
-    }
+    sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    return {r.node: r.label for r in _star_components(sym).collect()}
 
 
 def test_star_deep_chain_exact(spark):
@@ -51,8 +51,8 @@ def test_star_reversed_chain_and_high_center_star(spark):
 
 
 def test_star_matches_auto_fallback_on_deep_graph(spark):
-    """algorithm='auto' with max_iter far below the diameter must produce
-    the same labels as the forced star path (it falls back internally)."""
+    """connected_components with max_iter far below the diameter must
+    produce the same labels as the star path (it falls back internally)."""
     pairs = [(i, i + 1) for i in range(25)]
     edges = spark.createDataFrame(pairs, "src long, dst long")
     auto = {

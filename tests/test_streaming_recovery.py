@@ -9,24 +9,22 @@ double-counted rows.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
 from pyspark.sql import functions as F
 
-from mapreduce_simple_go_spark.streaming import hourly_counts, stream_events
+from mapreduce_simple_go_spark.sources import load_events
+from mapreduce_simple_go_spark.streaming import events_source, hourly_counts
 
 from .conftest import SF_DIR
 
 
 @pytest.fixture()
 def split_events(spark, tmp_path):
-    """The events table split into two parquet files in separate drops."""
-    from mapreduce_simple_go_spark.sources import _normalize_ts
-
-    ev = _normalize_ts(spark.read.parquet(os.path.join(SF_DIR, "events.parquet")))
+    """A fixture dir whose events table is a Spark-written
+    ``events.parquet/`` directory, filled by two drops, each one more part
+    file in it. Returns the dir and the function that adds a drop."""
+    ev = load_events(spark, SF_DIR)
     # time-ordered drops (split at an hour boundary): the second drop only
     # carries timestamps after every window of the first, as a real
     # time-ordered source would — append mode finalizes old windows at the
@@ -34,39 +32,36 @@ def split_events(spark, tmp_path):
     # second half as too-late data.
     cut_us = ev.selectExpr("percentile(unix_micros(ts), 0.6) p").first().p
     cut_hour_us = (int(cut_us) // 3_600_000_000) * 3_600_000_000
-    half1 = ev.filter(F.unix_micros(F.col("ts")) < cut_hour_us)
-    half2 = ev.filter(F.unix_micros(F.col("ts")) >= cut_hour_us)
-    src = tmp_path / "src"
-    src.mkdir()
-    stage = tmp_path / "stage"
-    half1.coalesce(1).write.mode("overwrite").parquet(str(stage / "h1"))
-    half2.coalesce(1).write.mode("overwrite").parquet(str(stage / "h2"))
+    halves = {
+        "h1": ev.filter(F.unix_micros(F.col("ts")) < cut_hour_us),
+        "h2": ev.filter(F.unix_micros(F.col("ts")) >= cut_hour_us),
+    }
+    sf_dir = str(tmp_path / "sf")
+    events_dir = f"{sf_dir}/events.parquet"
 
     def drop(name):
-        part = next(
-            f for f in os.listdir(stage / name) if f.endswith(".parquet")
-        )
-        shutil.copy(stage / name / part, src / f"{name}.parquet")
+        halves[name].coalesce(1).write.mode("append").parquet(events_dir)
 
-    return str(src), drop
+    return sf_dir, drop
 
 
 def test_restart_processes_each_file_exactly_once(spark, tmp_path, split_events):
-    src, drop = split_events
+    sf_dir, drop = split_events
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
 
     def run_once():
-        q = (
-            hourly_counts(stream_events(spark, src))
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with events_source(spark, sf_dir) as (ev, _):
+            q = (
+                hourly_counts(ev)
+                .writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
 
     drop("h1")
     run_once()
@@ -80,11 +75,9 @@ def test_restart_processes_each_file_exactly_once(spark, tmp_path, split_events)
     assert got.count() == got.select("hour", "event_type").distinct().count(), (
         "restart duplicated window emissions"
     )
-    from mapreduce_simple_go_spark.sources import _normalize_ts
-
-    ev = _normalize_ts(spark.read.parquet(src))
     want = (
-        ev.groupBy(F.date_trunc("hour", "ts").alias("hour"), "event_type")
+        load_events(spark, sf_dir)
+        .groupBy(F.date_trunc("hour", "ts").alias("hour"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),

@@ -73,13 +73,13 @@ def main(argv: list[str] | None = None) -> int:
     if args.out:
         # persist so the plan is computed once and shared by write + show.
         df = df.persist()
-        writer = df.coalesce(1).write.mode("overwrite")
+        one = df.coalesce(1)
         if ext == ".parquet":
-            writer.parquet(args.out)
+            one.write.mode("overwrite").parquet(args.out)
         elif ext == ".jsonl":
-            writer.json(args.out)
+            one.write.mode("overwrite").json(args.out)
         else:
-            writer.option("header", "true").csv(args.out)
+            eng.save_csv(one, args.out)
         print(f"wrote {args.out}")
     if args.limit:
         df.show(args.limit, truncate=False)

@@ -33,7 +33,7 @@ from .operators.mapreduce import (
     map_reduce_sequential,
 )
 from .session import get_spark
-from .sources import load_events, table
+from .sources import csv_reader, csv_writer, load_events, table
 
 
 class Engine:
@@ -140,14 +140,15 @@ class Engine:
 
     def save_csv(self, df: DataFrame, path: str) -> None:
         """Headered CSV sink — the interchange format for tools outside the
-        lake. Same per-partition files + atomic commit as the other sinks."""
-        df.write.mode("overwrite").option("header", True).csv(path)
+        lake, in ``sources.csv_writer``'s dialect, which :meth:`load_csv`
+        reads back losslessly. Same per-partition files + atomic commit."""
+        csv_writer(df).csv(path)
 
     def load_csv(self, path: str, schema: str | None = None) -> DataFrame:
-        """Headered CSV source. Pass an explicit DDL ``schema`` in anything
-        production-shaped: inference reads the data twice and guesses types
-        per-file; an explicit schema is one pass and stable."""
-        reader = self.spark.read.option("header", True)
+        """Headered CSV source (``sources.csv_reader``). Pass a DDL ``schema``
+        in anything production-shaped: inference reads the data twice and
+        guesses types per-file; an explicit schema is one pass and stable."""
+        reader = csv_reader(self.spark)
         if schema is not None:
             return reader.schema(schema).csv(path)
         return reader.option("inferSchema", True).csv(path)

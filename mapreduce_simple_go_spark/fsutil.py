@@ -20,7 +20,9 @@ Scratch dirs: :func:`mkscratch` defaults to a driver-local ``tempfile``
 dir (right for local mode) and honors ``SPARK_GRAFT_SCRATCH_DIR`` — which
 may itself be a URI — for deployments where executors and driver need a
 SHARED scratch root (complete-mode parquet sinks, multi-batch stream
-staging). Cleanup goes through :func:`delete`, which handles both.
+staging). Callers take one through :func:`scratch`, which deletes it on
+every exit path, so a query leaves nothing behind but its committed output
+(the reference's worker.go:149-152 writes a temp file and renames it).
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ from __future__ import annotations
 import os
 import tempfile
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -133,3 +136,13 @@ def mkscratch(spark: SparkSession, prefix: str) -> str:
     scratch = root.rstrip("/") + "/" + prefix + uuid.uuid4().hex[:12]
     mkdirs(spark, scratch)
     return scratch
+
+
+@contextmanager
+def scratch(spark: SparkSession, prefix: str):
+    """A :func:`mkscratch` dir for the ``with`` body, deleted on every exit."""
+    root = mkscratch(spark, prefix)
+    try:
+        yield root
+    finally:
+        delete(spark, root)

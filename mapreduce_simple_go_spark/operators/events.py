@@ -516,35 +516,24 @@ def events_rollup_multigrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarser grains come nearly free because the expansion happens before
     the exchange and partial aggregation collapses each grain map-side.
     """
-    import uuid
-
-    ev = load_events(spark, sf_dir)
-    # uuid-suffixed view, dropped once the plan is built (same discipline as
-    # stream_sessions_gap_closed) -- no catalog litter, no cross-thread
-    # collisions when two sessions run registry queries concurrently.
-    name = "mg_events_" + uuid.uuid4().hex[:8]
-    ev.select(
+    ev = load_events(spark, sf_dir).select(
         F.date_trunc("hour", "ts").alias("hour_b"),
         F.date_trunc("day", "ts").alias("day_b"),
         "event_type",
         "value",
-    ).createOrReplaceTempView(name)
-    try:
-        return spark.sql(
-            f"""
-            SELECT CASE WHEN GROUPING(hour_b) = 0 THEN 'hour' ELSE 'day' END AS grain,
-                   COALESCE(hour_b, day_b) AS bucket,
-                   event_type,
-                   COUNT(*) AS n_events,
-                   CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-            FROM {name}
-            GROUP BY GROUPING SETS ((hour_b, event_type), (day_b, event_type))
-            """
-        )
-    finally:
-        # spark.sql analyzes eagerly, so the returned plan holds the resolved
-        # relation; dropping the view immediately is safe.
-        spark.catalog.dropTempView(name)
+    )
+    return spark.sql(
+        """
+        SELECT CASE WHEN GROUPING(hour_b) = 0 THEN 'hour' ELSE 'day' END AS grain,
+               COALESCE(hour_b, day_b) AS bucket,
+               event_type,
+               COUNT(*) AS n_events,
+               CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        FROM {ev}
+        GROUP BY GROUPING SETS ((hour_b, event_type), (day_b, event_type))
+        """,
+        ev=ev,
+    )
 
 
 EVENTS_ROLLUP_SQL = """

@@ -74,18 +74,19 @@ def final_state_from_ops(ops: DataFrame) -> DataFrame:
     """Core fold over any (seq, key, op, value) DataFrame."""
     writes = ops.filter(F.col("op") != "get")
     # Two-pass fold: (1) cheap aggregate for each key's last put position,
-    # (2) join back (tiny side -> AQE broadcasts it) and drop every write
-    # the last put overwrote BEFORE collecting, so the per-key array holds
-    # only the live epoch — never the full history. (A single-pass variant
-    # that collected the whole history and filtered in a lambda was O(h^2):
-    # CollapseProject inlines the array_max into the filter lambda.)
+    # (2) join back (tiny side, broadcast by hint: AQE alone builds on
+    # whichever shuffle finishes first) and drop every write the last put
+    # overwrote BEFORE collecting, so the per-key array holds only the live
+    # epoch — never the full history. (A single-pass variant that collected
+    # the whole history and filtered in a lambda was O(h^2): CollapseProject
+    # inlines the array_max into the filter lambda.)
     last_put = writes.groupBy("key").agg(
         F.coalesce(
             F.max(F.when(F.col("op") == "put", F.col("seq"))), F.lit(-1)
         ).alias("last_put")
     )
     return (
-        writes.join(last_put, "key")
+        writes.join(F.broadcast(last_put), "key")
         .filter(F.col("seq") >= F.col("last_put"))
         .groupBy("key")
         .agg(

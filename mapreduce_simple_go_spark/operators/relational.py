@@ -144,8 +144,7 @@ def q3_bucketed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the driver's hash gate (identical to q3_shipping_priority's
     oracle — bucketing must never change results). The result is
     localCheckpointed so the scratch tables can be dropped immediately;
-    uuid-suffixed names keep reruns collision-free (events.py:553
-    discipline).
+    uuid-suffixed names keep reruns and concurrent callers from colliding.
 
     Reference analog: the map side already writes intermediate KV into
     ihash(key) %% NReduce buckets so each reducer reads exactly its bucket
@@ -182,7 +181,8 @@ def q3_bucketed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # tasks back-fill the cores the orders write's tail leaves idle;
         # Spark's scheduler runs concurrent actions FIFO, which is exactly
         # the back-fill behavior wanted. Same at scale: the ingest wall
-        # clock becomes max(two writes), not their sum.
+        # clock becomes max(two writes), not their sum. Each pool thread
+        # inherits the caller's job group, tags and scheduler pool.
         def _ingest_orders():
             (
                 _t(spark, sf_dir, "orders")
@@ -208,8 +208,11 @@ def q3_bucketed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.util import inheritable_thread_target
+
+        inherit = inheritable_thread_target(spark)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(_ingest_orders), pool.submit(_ingest_lineitem)]
+            futs = [pool.submit(inherit(f)) for f in (_ingest_orders, _ingest_lineitem)]
             for f in futs:
                 f.result()
         cust = _t(spark, sf_dir, "customer").filter(
@@ -978,17 +981,16 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass — map-side expansion x3 + one partial-aggregated shuffle instead
     of three scans unioned.
     """
-    orders = _t(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("gs_orders")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
                CAST(GROUPING(o_orderstatus) AS INT) AS g_status,
                CAST(GROUPING(o_orderpriority) AS INT) AS g_priority
-        FROM gs_orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
-        """
+        """,
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 

@@ -26,8 +26,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsutil
 from ..functions import tokens
-from ..sources import table
+from ..sources import csv_reader, csv_writer, table
 
 DUCK_TOKENS = (
     "list_filter(regexp_split_to_array({col}, '[^\\p{{L}}]+'), w -> w <> '')"
@@ -215,10 +216,10 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i, len(piece), " ".join(piece)
 
     spark.udtf.register("doc_chunker", Chunker)
-    _docs(spark, sf_dir).createOrReplaceTempView("documents_v")
     return spark.sql(
         "SELECT d.doc_id, c.chunk_no, c.n_words, c.chunk "
-        "FROM documents_v d, LATERAL doc_chunker(d.text) c"
+        "FROM {docs} d, LATERAL doc_chunker(d.text) c",
+        docs=_docs(spark, sf_dir),
     )
 
 
@@ -360,6 +361,25 @@ QUERIES["chunk_dedup"] = chunk_dedup
 ORACLES["chunk_dedup"] = CHUNK_DEDUP_SQL
 
 
+def _roundtrip(spark: SparkSession, sf_dir: str, prefix: str, write, read, *cols):
+    """The one body of the format round trips (see :func:`jsonl_roundtrip`):
+    ``write(docs, path)`` under a scratch dir, ``read(path, docs.schema)``,
+    then ``cols`` plus ``n_text_chars``, materialized before the dir is
+    deleted so the returned plan never re-scans the deleted path."""
+    d = _docs(spark, sf_dir)
+    with fsutil.scratch(spark, prefix) as root:
+        path = os.path.join(root, "docs")
+        write(d, path)
+        return (
+            read(path, d.schema)
+            .select(*cols, F.length("text").cast("long").alias("n_text_chars"))
+            .localCheckpoint(eager=True)
+        )
+
+
+_DOC_COLS = ("doc_id", "lang", "source", "n_chars")
+
+
 def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSONL sink + source coverage: write documents as JSON lines, re-read.
 
@@ -372,28 +392,12 @@ def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle computes from the parquet original: any drop, duplication or
     field corruption in the sink/source pair breaks the hash.
     """
-    from .. import fsutil
-
-    d = _docs(spark, sf_dir)
-    root = fsutil.mkscratch(spark, "jsonl_rt_")
-    try:
-        path = os.path.join(root, "docs")
-        d.write.mode("overwrite").json(path)
-        back = spark.read.schema(d.schema).json(path)
-        return (
-            back.select(
-                "doc_id",
-                "lang",
-                "source",
-                "n_chars",
-                F.length("text").cast("long").alias("n_text_chars"),
-            )
-            # materialize before the temp dir vanishes: the returned plan
-            # must not re-scan the deleted path when the driver collects
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        fsutil.delete(spark, root)
+    return _roundtrip(
+        spark, sf_dir, "jsonl_rt_",
+        lambda d, path: d.write.mode("overwrite").json(path),
+        lambda path, schema: spark.read.schema(schema).json(path),
+        *_DOC_COLS,
+    )
 
 
 JSONL_ROUNDTRIP_SQL = """
@@ -414,25 +418,12 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the parquet original — the driver's hash gate catches any loss or
     type corruption in the ORC writer/reader pair.
     """
-    from .. import fsutil
-
-    d = _docs(spark, sf_dir)
-    root = fsutil.mkscratch(spark, "orc_rt_")
-    try:
-        path = os.path.join(root, "docs")
-        d.write.mode("overwrite").orc(path)
-        back = spark.read.schema(d.schema).orc(path)
-        return (
-            back.select(
-                "doc_id",
-                "lang",
-                "source",
-                "n_chars",
-                F.length("text").cast("long").alias("n_text_chars"),
-            ).localCheckpoint(eager=True)
-        )
-    finally:
-        fsutil.delete(spark, root)
+    return _roundtrip(
+        spark, sf_dir, "orc_rt_",
+        lambda d, path: d.write.mode("overwrite").orc(path),
+        lambda path, schema: spark.read.schema(schema).orc(path),
+        *_DOC_COLS,
+    )
 
 
 QUERIES["orc_roundtrip"] = orc_roundtrip
@@ -592,42 +583,17 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same contract as :func:`jsonl_roundtrip`, but CSV is the adversarial
     case: document text contains commas, quotes and newlines, so the
     writer's quoting/escaping and the reader's multiLine parsing are what
-    is actually under test — the oracle hash catches any mangling. escape
-    is pinned to the double-quote convention both writers and DuckDB agree
-    on; emptyValue distinguishes '' from NULL so the roundtrip is lossless.
+    is actually under test — the oracle hash catches any mangling. The
+    dialect is the package's one CSV writer and reader
+    (:func:`sources.csv_writer`/:func:`sources.csv_reader`), the same one
+    ``Engine.save_csv``/``load_csv`` and the CLI use.
     """
-    from .. import fsutil
-
-    d = _docs(spark, sf_dir)
-    root = fsutil.mkscratch(spark, "csv_rt_")
-    try:
-        path = os.path.join(root, "docs")
-        (
-            d.write.mode("overwrite")
-            .option("header", "true")
-            .option("escape", '"')
-            .option("emptyValue", '""')
-            .csv(path)
-        )
-        back = (
-            spark.read.schema(d.schema)
-            .option("header", "true")
-            .option("escape", '"')
-            .option("multiLine", "true")
-            .option("emptyValue", '""')
-            .csv(path)
-        )
-        return (
-            back.select(
-                "doc_id",
-                "lang",
-                "source",
-                "n_chars",
-                F.length("text").cast("long").alias("n_text_chars"),
-            ).localCheckpoint(eager=True)
-        )
-    finally:
-        fsutil.delete(spark, root)
+    return _roundtrip(
+        spark, sf_dir, "csv_rt_",
+        lambda d, path: csv_writer(d).csv(path),
+        lambda path, schema: csv_reader(spark).schema(schema).csv(path),
+        *_DOC_COLS,
+    )
 
 
 QUERIES["csv_roundtrip"] = csv_roundtrip
@@ -646,30 +612,23 @@ def schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merged result with a COALESCE backfill; the oracle reproduces it
     from the original table (even doc_ids = generation-1 rows).
     """
-    from .. import fsutil
 
-    d = _docs(spark, sf_dir)
-    root = fsutil.mkscratch(spark, "schev_rt_")
-    try:
-        path = os.path.join(root, "docs")
+    def write(d: DataFrame, path: str) -> None:
         gen1 = d.filter(F.col("doc_id") % 2 == 0).select(
             "doc_id", "text", "lang", "n_chars"
         )
         gen2 = d.filter(F.col("doc_id") % 2 != 0)
         gen1.write.mode("overwrite").parquet(os.path.join(path, "gen=1"))
         gen2.write.mode("overwrite").parquet(os.path.join(path, "gen=2"))
-        back = spark.read.option("mergeSchema", "true").parquet(path)
-        return (
-            back.select(
-                "doc_id",
-                "lang",
-                F.coalesce("source", F.lit("(pre-schema)")).alias("source_evolved"),
-                "n_chars",
-                F.length("text").cast("long").alias("n_text_chars"),
-            ).localCheckpoint(eager=True)
-        )
-    finally:
-        fsutil.delete(spark, root)
+
+    return _roundtrip(
+        spark, sf_dir, "schev_rt_",
+        write,
+        lambda path, _schema: spark.read.option("mergeSchema", "true").parquet(path),
+        "doc_id", "lang",
+        F.coalesce("source", F.lit("(pre-schema)")).alias("source_evolved"),
+        "n_chars",
+    )
 
 
 SCHEMA_EVOLUTION_SQL = """
@@ -701,25 +660,12 @@ def partitioned_prune_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang column also proves partition-column values survive the
     directory-encoding roundtrip.
     """
-    from .. import fsutil
-
-    d = _docs(spark, sf_dir)
-    root = fsutil.mkscratch(spark, "part_rt_")
-    try:
-        path = os.path.join(root, "docs")
-        d.write.mode("overwrite").partitionBy("lang").parquet(path)
-        back = spark.read.parquet(path).filter(F.col("lang") == "en")
-        return (
-            back.select(
-                "doc_id",
-                "lang",
-                "source",
-                F.length("text").cast("long").alias("n_text_chars"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        fsutil.delete(spark, root)
+    return _roundtrip(
+        spark, sf_dir, "part_rt_",
+        lambda d, path: d.write.mode("overwrite").partitionBy("lang").parquet(path),
+        lambda path, _schema: spark.read.parquet(path).filter(F.col("lang") == "en"),
+        "doc_id", "lang", "source",
+    )
 
 
 PARTITIONED_PRUNE_SQL = """

@@ -21,6 +21,8 @@ a fixture's inferred schema, ``spark.sql.legacy.parquet.nanosAsLong``, is
 set by ``session.get_spark`` and again by :func:`load_events` before every
 events read, so within one application the key need not carry it. The
 cache is process-wide, one small entry per application and file version.
+
+:func:`csv_writer` and :func:`csv_reader` are the package's one CSV dialect.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ from __future__ import annotations
 import os
 import stat
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
@@ -101,3 +103,30 @@ def _normalize_ts(ev: DataFrame, col: str = "ts") -> DataFrame:
     if isinstance(t, TimestampNTZType):
         return ev.withColumn(col, F.col(col).cast("timestamp"))
     return ev
+
+
+# The CSV dialect: quotes escaped by doubling (the convention DuckDB and most
+# writers share), blanks around a value kept (the writer trims them by
+# default), NULL written as an empty field and '' as "".
+_CSV_WRITE = dict(header="true", escape='"', emptyValue='""',
+                  ignoreLeadingWhiteSpace="false", ignoreTrailingWhiteSpace="false")
+_CSV_READ = dict(header="true", escape='"', multiLine="true", nullValue="\0")
+
+
+def csv_writer(df: DataFrame) -> DataFrameWriter:
+    """``df``'s overwrite-mode writer in the package's CSV dialect."""
+    return df.write.mode("overwrite").options(**_CSV_WRITE)
+
+
+def csv_reader(spark: SparkSession) -> DataFrameReader:
+    """A reader that gives back what :func:`csv_writer` wrote: commas,
+    quotes, embedded newlines (``multiLine``), '' and NULL.
+
+    Spark's reader puts ``nullValue`` in place of an empty unquoted field
+    and ``emptyValue`` in place of a quoted one, then reads every field
+    equal to ``nullValue`` as NULL. With the default "" for both, '' comes
+    back as NULL (and with ``emptyValue='""'`` as the two characters
+    ``""``); a one-NUL ``nullValue`` keeps them apart. The one loss left:
+    a value that is exactly one NUL character reads back as NULL.
+    """
+    return spark.read.options(**_CSV_READ)

@@ -29,7 +29,7 @@ from __future__ import annotations
 import os
 import sys
 import uuid
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from typing import Iterator
 
 import pandas as pd
@@ -71,7 +71,7 @@ def _parquet_stream(
 # Each is a context manager yielding ``(stream_df, input_bytes)``: the stream
 # and the bytes of its data files (never _SUCCESS/.crc siblings, so the sink
 # and width gates mean the same on every source). Staged sources write under
-# fsutil.mkscratch and delete it on exit; all probes, writes and copies go
+# an fsutil.scratch dir, deleted on exit; all probes, writes and copies go
 # through the Hadoop FS API, so ``sf_dir`` and SPARK_GRAFT_SCRATCH_DIR may be
 # URIs on any scheme the deployment resolves.
 
@@ -112,16 +112,13 @@ def staged_source(spark: SparkSession, df: DataFrame, single_file: bool = True):
     at the 10x fixture). The stream takes the schema of the frame just
     written.
     """
-    from ..fsutil import delete, du_suffix_bytes, mkscratch
+    from ..fsutil import du_suffix_bytes, scratch
 
-    scratch = mkscratch(spark, "stage_")
-    try:
-        stage = scratch.rstrip("/") + "/stage"
+    with scratch(spark, "stage_") as root:
+        stage = root.rstrip("/") + "/stage"
         (df.coalesce(1) if single_file else df).write.mode("overwrite").parquet(stage)
         stream = _parquet_stream(spark, stage, df.schema, glob="*.parquet")
         yield stream, du_suffix_bytes(spark, stage, ".parquet")
-    finally:
-        delete(spark, scratch)
 
 
 @contextmanager
@@ -139,13 +136,11 @@ def ordered_drops_source(
     micro-batch. A drop with no rows writes no directory and is skipped:
     fewer files just means fewer micro-batches.
     """
-    from ..fsutil import copy, delete, du_suffix_bytes, exists, list_files
-    from ..fsutil import mkdirs, mkscratch
+    from ..fsutil import copy, du_suffix_bytes, exists, list_files, mkdirs, scratch
 
-    scratch = mkscratch(spark, "drops_")
-    try:
-        stage = scratch.rstrip("/") + "/stage"
-        src = scratch.rstrip("/") + "/src"
+    with scratch(spark, "drops_") as root:
+        stage = root.rstrip("/") + "/stage"
+        src = root.rstrip("/") + "/src"
         (
             df.withColumn("drop", drop)
             .repartition(n_drops, "drop")
@@ -161,8 +156,6 @@ def ordered_drops_source(
                 copy(spark, first, f"{src}/drop{i}.parquet")
         stream = _parquet_stream(spark, src, df.schema, per_trigger=1)
         yield stream, du_suffix_bytes(spark, src, ".parquet")
-    finally:
-        delete(spark, scratch)
 
 
 def hourly_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -304,20 +297,18 @@ def _sink_view(
     parquet (an executor-side write), and the view reads the files back.
     Both sinks are hash-identical by construction (tests pin it).
 
-    The parquet sink root comes from ``fsutil.mkscratch``: driver-local
+    The parquet sink root comes from ``fsutil.scratch``: driver-local
     ``tempfile`` by default (right for local[*]); on a multi-node cluster
     set ``SPARK_GRAFT_SCRATCH_DIR`` to a shared root (any URI the Hadoop
     conf resolves).
     """
-    from ..fsutil import delete, list_files, mkscratch
+    from ..fsutil import list_files, scratch
 
     spark = stream_df.sparkSession
-    sink = None
-    if output_mode != "update" and (
+    to_parquet = output_mode != "update" and (
         input_bytes is None or input_bytes > _COMPLETE_MEMORY_MAX_BYTES
-    ):
-        sink = mkscratch(spark, f"{name}_sink_")
-    try:
+    )
+    with (scratch(spark, f"{name}_sink_") if to_parquet else nullcontext()) as sink:
         writer = stream_df.writeStream.outputMode(output_mode).trigger(
             availableNow=True
         )
@@ -345,9 +336,6 @@ def _sink_view(
                 out = spark.createDataFrame([], stream_df.schema)
             out.createOrReplaceTempView(name)
         yield sink
-    finally:
-        if sink is not None:
-            delete(spark, sink)
 
 
 def drain(

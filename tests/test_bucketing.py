@@ -133,3 +133,23 @@ def test_q3_bucketed_ingest_drops_leftover_scratch_tables(spark):
     q3_bucketed_ingest(spark, SF_DIR).collect()
     names = {t.name for t in spark.catalog.listTables()}
     assert not {n for n in names if n.startswith(("orders_bkt_", "lineitem_bkt_"))}
+
+
+def test_q3_bucketed_ingest_jobs_carry_the_callers_job_group(spark):
+    """The two ingests run on a thread pool; every job the query starts,
+    theirs included, carries the caller's job group, so cancelJobGroup and
+    the UI's grouping reach all of them."""
+    from mapreduce_simple_go_spark.operators.relational import q3_bucketed_ingest
+
+    sc = spark.sparkContext
+    scheduler = sc._jsc.sc().dagScheduler()
+    sc.setJobGroup("q3_ingest_group", "q3_bucketed_ingest under a job group")
+    try:
+        first = scheduler.numTotalJobs()
+        q3_bucketed_ingest(spark, SF_DIR).collect()
+        started = set(range(first, scheduler.numTotalJobs()))
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(started) >= 3  # two ingests, the materialized result, the collect
+    assert set(sc.statusTracker().getJobIdsForGroup("q3_ingest_group")) == started

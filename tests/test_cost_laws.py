@@ -93,18 +93,12 @@ EXCEPTIONS = {
         "every customer has an order at sf0.001: the anti-join is empty and "
         "AQE drops the final aggregate's shuffle stage (4 jobs, 5 at sf0.1)",
     ),
-    ("kv_final_state_dedup", "a"): (
-        1,
-        "varies run to run, not with the fixture: AQE turns the writes x "
-        "last_put join into a broadcast join built on whichever side's shuffle "
-        "finished first; building on last_put adds the final exchange (5 or "
-        "6 jobs at sf0.1)",
-    ),
     ("word_triangles", "a"): (
         1,
         "varies run to run, not with the fixture: 10 or 11 jobs at sf0.1 over "
         "repeated runs; its degree joins join two concurrently shuffled sides, "
-        "the shape of kv_final_state_dedup's race (cause not confirmed)",
+        "where AQE builds a broadcast on whichever shuffle finished first "
+        "(cause not confirmed)",
     ),
     ("q7_volume_shipping", "b"): (
         None,
@@ -160,7 +154,7 @@ EXCEPTIONS = {
 
 # Law (a) exceptions whose count varies between identical runs; the test
 # cannot tell whether they are still needed.
-VARIES_RUN_TO_RUN = {"kv_final_state_dedup", "word_triangles"}
+VARIES_RUN_TO_RUN = {"word_triangles"}
 
 
 def _allowance(name: str, law: str, default):

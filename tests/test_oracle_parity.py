@@ -26,10 +26,18 @@ QUERIES = all_queries()
 ORACLES = all_oracles()
 
 
+def _views(spark):
+    return sorted(r.viewName for r in spark.sql("SHOW VIEWS").collect())
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(name, spark, duck):
+    """The entry matches its oracle and leaves the caller's catalog as it
+    found it: a temp view a query needs is its own to drop."""
+    views = _views(spark)
     df = QUERIES[name](spark, SF_DIR)
     assert_matches_oracle(df, duck, ORACLES[name])
+    assert _views(spark) == views
 
 
 def test_directory_tables_feed_the_oracle_views(spark, tmp_path):

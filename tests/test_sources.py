@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from mapreduce_simple_go_spark.engine import Engine
 from mapreduce_simple_go_spark.operators import all_oracles, all_queries
 from mapreduce_simple_go_spark.operators import mapreduce as mr
-from mapreduce_simple_go_spark.sources import table
+from mapreduce_simple_go_spark.sources import csv_reader, table
 
 from .conftest import SF_DIR, TABLES, jobs_started, rows_digest
 
@@ -140,6 +140,26 @@ def test_engine_csv_sink_roundtrip(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, base.collect()))
 
 
+def test_engine_csv_is_lossless(spark, tmp_path):
+    """The one CSV dialect gives back every string it wrote: a comma, a
+    quote, an embedded newline, '' and NULL, and the blanks around a value,
+    each keeping its own row."""
+    eng = Engine(spark)
+    rows = [
+        (1, "a,b"),
+        (2, 'say "hi"'),
+        (3, "line 1\nline 2"),
+        (4, ""),
+        (5, None),
+        (6, "  padded  "),
+    ]
+    df = spark.createDataFrame(rows, "id int, v string")
+    out = str(tmp_path / "csv_lossless")
+    eng.save_csv(df, out)
+    back = eng.load_csv(out, "id int, v string")
+    assert sorted(map(tuple, back.collect()), key=repr) == sorted(rows, key=repr)
+
+
 def test_jsonl_kv_sink_roundtrip(spark, tmp_path):
     """The reference's JSON-lines intermediate format (worker.go:82-100) as
     a user sink: write -> read back must be lossless, including spaces and
@@ -246,6 +266,14 @@ def test_cli_list_and_run(spark, tmp_path):
     assert spark.read.parquet(str(out)).count() > 0
     assert spark.sparkContext._jsc is not None  # session survived
 
+    # --out x.csv writes the dialect sources.csv_reader reads back losslessly
+    out = tmp_path / "x.csv"
+    query = "SELECT 1 AS id, 'a,\nb' AS v UNION ALL SELECT 2, '' UNION ALL SELECT 3, NULL"
+    with contextlib.redirect_stdout(io.StringIO()):
+        assert main(["sql", query, "--sf-dir", SF_DIR, "--limit", "1", "--out", str(out)]) == 0
+    back = csv_reader(spark).schema("id int, v string").csv(str(out))
+    assert sorted(map(tuple, back.collect())) == [(1, "a,\nb"), (2, ""), (3, None)]
+
     # unknown query name: exit 2 + the available names on stderr, no traceback
     err = io.StringIO()
     with contextlib.redirect_stderr(err):
@@ -322,3 +350,25 @@ def test_warm_build_starts_no_spark_job(spark, duck, name):
     cols = [c[0] for c in cur.description]
     assert sorted(df.columns) == sorted(cols)
     assert rows_digest(df.columns, df.collect()) == rows_digest(cols, cur.fetchall())
+
+
+# Build-phase jobs of each format round trip: its writes, any schema
+# inference of the read-back (mergeSchema, partition discovery) and the one
+# eager localCheckpoint.
+ROUNDTRIP_BUILD_JOBS = {
+    "jsonl_roundtrip": 2,  # write + checkpoint
+    "orc_roundtrip": 2,
+    "csv_roundtrip": 2,
+    "schema_evolution_roundtrip": 4,  # two generations + merged schema + checkpoint
+    "partitioned_prune_roundtrip": 3,  # write + partition discovery + checkpoint
+}
+
+
+@pytest.mark.parametrize("name", sorted(ROUNDTRIP_BUILD_JOBS))
+def test_roundtrip_build_jobs(spark, name):
+    """The shared round-trip body starts no job beyond its entry's own
+    writes, read-back and single materialization."""
+    query = all_queries()[name]
+    query(spark, SF_DIR).collect()
+    _, cost = jobs_started(spark, lambda: query(spark, SF_DIR))
+    assert cost.jobs == ROUNDTRIP_BUILD_JOBS[name]
